@@ -1263,7 +1263,8 @@ object GraphOps {
     * loop bounded by the INTRA edge subset (≤ the graph, often ≪ after a
     * sensible pre-partition) — no pairwise work, no driver collect.
     *
-    * Returns (id, label) for every vertex of `assignment`. */
+    * Returns (id, label) for every vertex of `assignment`, checkpointed
+    * and materialized; every intermediate is released. */
   def wellConnectedSplit(
       edges: DataFrame, srcCol: String, dstCol: String,
       assignment: DataFrame, idCol: String, labelCol: String,
@@ -1336,11 +1337,17 @@ object GraphOps {
       ccStarEdges(view, "src", "dst", maxIter,
         numPartitions = Some(ccParts), inputTruncated = true)
     }
+    // a checkpoint, not a persist: no later plan can reach the frames
+    // released below (the refineCore output note)
     val out = asg.join(comp, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("component"), col("id")).as("label"))
-      .persist()
+      .localCheckpoint(eager = false)
     out.count()
+    // GraphX hands back a persisted frame, ccStarEdges its last round's
+    // checkpoint
+    if (ccView.isEmpty) comp.unpersist(blocking = false)
+    else releaseLocalCheckpoint(comp)
     ccView.foreach(releaseLocalCheckpoint)
     intra.unpersist(blocking = false)
     out
@@ -1372,25 +1379,33 @@ object GraphOps {
     * gone with the encode; results are identical — GraphSpec pins
     * fused ≡ per-γ composition, and min-id labels don't depend on how
     * the γ levels are batched.
-    * Returns (gamma_pct, id, label). */
+    * Returns (gamma_pct, id, label): one checkpoint, materialized, that
+    * the caller owns. Everything else the ladder built is released. */
   def lpaLeidenRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None,
       numPartitions: Option[Int] = None): DataFrame = {
-    val (refined, _) = lpaLouvainRefineMultiCore(edges, srcCol,
-      dstCol, lpaIters, rounds, gammaPcts, broadcastState, numPartitions)
+    val refined = lpaLouvainRefineMulti(edges, srcCol, dstCol, lpaIters,
+      rounds, gammaPcts, broadcastState, numPartitions)
     // Shared-inputs contract (Concurrent): `refined` is checkpointed and
-    // materialized by refineCore's bounds probe; `edges` was materialized
-    // by the refine setup (its union scans fill any caller checkpoint/
-    // cache). Each split then touches only its own frames.
+    // materialized by refineCore; `edges` was materialized by the refine
+    // setup (its union scans fill any caller checkpoint/cache). Each
+    // split then touches only its own frames.
     val splits = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
       wellConnectedSplit(edges, srcCol, dstCol,
           refined.filter(col("gamma_pct") === g), "id", "label",
           broadcastState = broadcastState)
         .select(lit(g).as("gamma_pct"), col("id"), col("label"))
     }
-    splits.reduce(_ unionByName _)
+    releaseLocalCheckpoint(refined)
+    // the caller gets ONE frame to own: the union, checkpointed (a scan
+    // of the split checkpoints, no exchange), so the per-γ checkpoints
+    // can be released too
+    val out = splits.reduce(_ unionByName _).localCheckpoint(eager = false)
+    out.count()
+    splits.foreach(releaseLocalCheckpoint)
+    out
   }
 
   /** Leiden-style refinement: the gated Louvain local-move pass
@@ -1447,7 +1462,7 @@ object GraphOps {
     // decision wants (the stats bound refuses any dense graph)
     val bc = resolveBroadcastStateExact(broadcastState, edges, deg.count())
     val out = refineCore(und, deg, bc, assignment, idCol, labelCol,
-      rounds, gammaPcts)._1
+      rounds, gammaPcts)
     und.unpersist(blocking = false)
     deg.unpersist(blocking = false)
     if (ownPre) pre.unpersist(blocking = false)
@@ -1466,19 +1481,7 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame =
-    lpaLouvainRefineMultiCore(edges, srcCol, dstCol, lpaIters, rounds,
-      gammaPcts, broadcastState, numPartitions)._1
-
-  /** [[lpaLouvainRefineMulti]] plus the id bounds refineCore's
-    * materializer already read — so [[lpaLeidenRefineMulti]]'s
-    * namespacing guard costs no extra driver gate. Bounds are None when
-    * the graph is empty (nothing to guard). */
-  private def lpaLouvainRefineMultiCore(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
-      broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): (DataFrame, Option[(Long, Long)]) = {
+      numPartitions: Option[Int] = None): DataFrame = {
     require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
       s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
     val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -1516,15 +1519,12 @@ object GraphOps {
 
   /** The per-γ gated local-move rounds over a caller-owned setup (und
     * must be src-partitioned and persisted; deg persisted; m2 > 0).
-    * Returns ((gamma_pct, id, label) persisted and materialized, plus
-    * the (min, max) vertex-id bounds read by the SAME materializing job
-    * — lpaLeidenRefineMulti's namespacing guard used to pay a separate
-    * driver gate for them; r14 verdict item 3). Callers may release the
-    * setup immediately after. */
+    * Returns (gamma_pct, id, label) checkpointed and materialized.
+    * Callers may release the setup immediately after. */
   private def refineCore(
       und: DataFrame, deg: DataFrame, bc: Boolean,
       assignment: DataFrame, idCol: String, labelCol: String,
-      rounds: Int, gammaPcts: Seq[Long]): (DataFrame, Option[(Long, Long)]) = {
+      rounds: Int, gammaPcts: Seq[Long]): DataFrame = {
     require(rounds >= 1, s"louvainRefine needs rounds >= 1, got $rounds")
     require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
       s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
@@ -1720,18 +1720,14 @@ object GraphOps {
         .select(lit(g).as("gamma_pct"), col("id"),
           coalesce(col("c"), col("label")).as("label"))
     }.reduce(_ unionByName _).localCheckpoint(eager = false)
-    // the materializing action doubles as the id-bounds probe: one agg
-    // fills the checkpoint AND returns what the namespacing guard needs
-    val brow = out.agg(count(lit(1)), min(col("id")), max(col("id"))).head()
-    val idBounds =
-      if (brow.isNullAt(1)) None else Some((brow.getLong(1), brow.getLong(2)))
+    out.agg(count(lit(1))).head() // fills the checkpoint
     finals.foreach { case (_, asg, own) =>
       if (own) releaseLocalCheckpoint(asg)
     }
     releaseLocalCheckpoint(asg0)
     dC0.unpersist(blocking = false)
     k0.unpersist(blocking = false)
-    (out, idBounds)
+    out
   }
 
   def modularityOf(

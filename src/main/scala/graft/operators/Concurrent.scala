@@ -86,17 +86,23 @@ object Concurrent {
           }
         })
       try {
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
+        val ec = ExecutionContext.fromExecutor(pool)
         // per-chain completion flags so a stall diagnostic can NAME the
         // wedged chains, not just report "still running"
         val done = new java.util.concurrent.atomic.AtomicIntegerArray(
           items.length)
         // Try-lifted so sequence NEVER fails fast: every chain runs to
-        // completion before the first failure (in item order) propagates
-        val fut = Future.sequence(items.zipWithIndex.map { case (a, i) =>
-          Future { val r = Try(f(a)); done.set(i, 1); r }
-        })
+        // completion before the first failure (in item order) propagates.
+        // Only the chains run on the pool. sequence's combining callbacks
+        // run on whichever thread completes a chain (parasitic): a chain
+        // that finishes after the bound's shutdownNow would otherwise
+        // have its callback sent to the closed pool and rejected.
+        val fut = {
+          implicit val callbacks: ExecutionContext = ExecutionContext.parasitic
+          Future.sequence(items.zipWithIndex.map { case (a, i) =>
+            Future { val r = Try(f(a)); done.set(i, 1); r }(ec)
+          })
+        }
         // Join observability (round-14 ADVICE): by default the join is
         // unbounded — an arbitrary cap would kill real work — but a
         // wedged chain used to hang here silently forever. Logging every
@@ -117,11 +123,13 @@ object Concurrent {
             case _: java.util.concurrent.TimeoutException =>
               waitedSec += waitLogPeriod.toSeconds
               if (bound > 0 && waitedSec >= bound) {
+                // named before the interrupt, which may let them finish
+                val pending = pendingDesc
                 pool.shutdownNow() // interrupt what can be interrupted
                 throw new java.util.concurrent.TimeoutException(
                   s"graft.operators.Concurrent: ${items.length}-chain " +
                     s"mapInParallel exceeded maxWaitSec=$bound with " +
-                    s"unfinished chains: $pendingDesc")
+                    s"unfinished chains: $pending")
               }
               System.err.println(
                 s"graft.operators.Concurrent: ${items.length}-chain " +

@@ -1,14 +1,17 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Concurrent
 
 /** The concurrency helper's contract: order-preserving results,
-  * fail-fast propagation, single-item short-circuit (no pool), and
-  * genuine overlap (the property the Spark callers buy). */
+  * fail-fast propagation, single-item short-circuit (no pool), the join
+  * bound, and genuine overlap (the property the Spark callers buy). */
 class ConcurrentSpec extends AnyFunSuite {
 
   test("results keep item order") {
@@ -66,18 +69,62 @@ class ConcurrentSpec extends AnyFunSuite {
     }
   }
 
-  test("chains overlap: n sleeps of t take ~t, not n*t") {
+  test("a chain that ends after the bound fired is not sent to the closed pool") {
+    // The bound's shutdownNow interrupts the wedged chain, which then
+    // returns. Its completion must not dispatch anything to the pool:
+    // a rejected dispatch is reported on stderr, not thrown. The fast
+    // chain finishes only after the join is set up, so that report is
+    // certain (a join callback on an already-finished chain would fail
+    // silently instead).
+    System.setProperty("graft.concurrent.waitLogSec", "1")
+    System.setProperty("graft.concurrent.maxWaitSec", "1")
+    val exited = new CountDownLatch(1)
+    val captured = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    try {
+      intercept[java.util.concurrent.TimeoutException] {
+        Concurrent.mapInParallel(Seq("fast-chain", "wedged-chain")) { s =>
+          if (s == "wedged-chain") {
+            try Thread.sleep(3600000L)
+            catch { case _: InterruptedException => () }
+            exited.countDown()
+          } else Thread.sleep(300L)
+          s.length
+        }
+      }
+      assert(exited.await(30, TimeUnit.SECONDS), "wedged chain never exited")
+      // the chain's completion runs on its own thread right after the
+      // countDown; the pool's threads end once it has
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def poolAlive = Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.getName.startsWith("graft-concurrent-") && t.isAlive)
+      while (poolAlive && System.nanoTime() < deadline) Thread.sleep(10L)
+      assert(!poolAlive, "pool threads still alive")
+    } finally {
+      System.setErr(err)
+      System.clearProperty("graft.concurrent.waitLogSec")
+      System.clearProperty("graft.concurrent.maxWaitSec")
+    }
+    assert(!captured.toString.contains("RejectedExecutionException"),
+      s"a late completion was sent to the closed pool:\n$captured")
+  }
+
+  test("chains overlap: all four are in flight at once") {
     val inFlight = new AtomicInteger(0)
     val maxSeen = new AtomicInteger(0)
-    val t0 = System.nanoTime()
-    Concurrent.mapInParallel(1 to 4) { _ =>
+    // every chain waits until all four have started: on a serializing
+    // pool the first chain's await would time out
+    val started = new CountDownLatch(4)
+    val met = Concurrent.mapInParallel(1 to 4) { _ =>
       val cur = inFlight.incrementAndGet()
       maxSeen.updateAndGet(m => math.max(m, cur))
-      Thread.sleep(200L)
+      started.countDown()
+      val ok = started.await(60, TimeUnit.SECONDS)
       inFlight.decrementAndGet()
+      ok
     }
-    val wallMs = (System.nanoTime() - t0) / 1000000L
     assert(maxSeen.get() >= 2, s"no overlap observed (max in-flight ${maxSeen.get()})")
-    assert(wallMs < 700L, s"4x200ms chains took ${wallMs}ms — serialized")
+    assert(met.forall(identity), s"not all 4 chains were in flight at once: $met")
   }
 }

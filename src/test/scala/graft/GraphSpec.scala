@@ -1,6 +1,14 @@
 package graft
 
 import graft.graph.GraphOps
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -493,6 +501,65 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("lpaLeidenRefineMulti owns one checkpoint, releases the rest, and re-reads after the release") {
+    def clique(ids: Seq[Long]) =
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    val e = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(11L, 12L, 13L, 14L)) ++
+      Seq((4L, 11L), (20L, 21L))).toDF("src", "dst").localCheckpoint()
+    val gammas = Seq(200L, 50L, 10L)
+    val expected = gammas.flatMap { g =>
+      GraphOps.wellConnectedSplit(e, "src", "dst",
+          GraphOps.lpaLouvainRefineMulti(e, "src", "dst", lpaIters = 2,
+            rounds = 2, gammaPcts = Seq(g)), "id", "label")
+        .as[(Long, Long)].collect().map { case (id, l) => (g, id, l) }
+    }.toSet
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
+      lpaIters = 2, rounds = 2, gammaPcts = gammas)
+    // the output's plan is one checkpoint, and that checkpoint is the
+    // only RDD the ladder leaves registered
+    val leaves = out.queryExecution.analyzed.collectLeaves()
+    val own = leaves.collect { case l: LogicalRDD => l.rdd.id }
+    assert(leaves.size == 1 && own.size == 1, s"not one checkpoint: $leaves")
+    assert(sc.getPersistentRDDs.keySet -- before == own.toSet)
+    // re-read after the release: a fresh plan over the output under
+    // both planners (a released checkpoint once surfaced with AQE off)
+    Thread.sleep(200L) // time for the asynchronous block removal
+    def reread() = out.join(e.select(col("src").as("id")).distinct(), Seq("id"), "left")
+      .select("gamma_pct", "id", "label").as[(Long, Long, Long)].collect().toSet
+    assert(reread() == expected)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try assert(reread() == expected)
+    finally spark.conf.unset("spark.sql.adaptive.enabled")
+    GraphOps.releaseLocalCheckpoint(out)
+  }
+
+  test("wellConnectedSplit: both CC engines agree and leave only the output") {
+    // a path inside one community (split keeps it whole), a community
+    // of two disconnected pairs (split in two), and a stranded vertex
+    val e = Seq((1L, 2L), (2L, 3L), (10L, 11L), (12L, 13L), (3L, 10L))
+      .toDF("src", "dst").localCheckpoint()
+    val asg = (Seq(1L, 2L, 3L).map(_ -> 1L) ++ Seq(10L, 11L, 12L, 13L).map(_ -> 10L) ++
+      Seq(30L -> 1L)).toDF("id", "label")
+    val sc = spark.sparkContext
+    def run(graphxMaxEdges: Long) = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = GraphOps.wellConnectedSplit(e, "src", "dst", asg, "id", "label",
+        graphxMaxEdges = graphxMaxEdges)
+      assert((sc.getPersistentRDDs.keySet -- before).size == 1,
+        s"graphxMaxEdges=$graphxMaxEdges left more than its output registered")
+      val m = out.as[(Long, Long)].collect().toMap
+      GraphOps.releaseLocalCheckpoint(out)
+      m
+    }
+    val graphx = run(graphxMaxEdges = 50000L)
+    val star = run(graphxMaxEdges = 0L) // the ccStarEdges loop
+    assert(graphx == star)
+    assert(graphx == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+      12L -> 12L, 13L -> 12L, 30L -> 30L))
+  }
+
   test("louvainRefineMulti: concurrent ladder equals sequential per-gamma runs") {
     // The multi-γ ladder materializes its γ loops CONCURRENTLY (round 14,
     // Concurrent.mapInParallel); a single-γ call short-circuits to the
@@ -631,9 +698,44 @@ class GraphSpec extends SparkSpec {
     assert(!scans.linesIterator.exists(l =>
         !l.contains("part.parquet") && !l.contains("lineitem.parquet")),
       s"unexpected file scan in capstone plan:\n$scans")
+    // one community partitioning: base is hash-partitioned on
+    // (gamma_pct, label) once, every aggregate and window above it
+    // reuses that partitioning, and the upsert is a projection (no
+    // anti-join of meta with itself)
+    val nodes = planNodes(out.queryExecution.executedPlan)
+    val antis = nodes.collect { case j: BaseJoinExec if j.joinType == LeftAnti => j }
+    assert(antis.isEmpty, s"upsert still anti-joins:\n${antis.mkString("\n")}")
+    def onCommunity(x: ShuffleExchangeExec) = x.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.exists(_.references.exists(a => a.name == "gamma_pct" || a.name == "label"))
+      case _ => false
+    }
+    val exchanges = nodes.collect { case x: ShuffleExchangeExec if onCommunity(x) => x }
+    val byCol = exchanges.filter(_.shuffleOrigin == REPARTITION_BY_COL)
+    assert(byCol.size == 1 && byCol.head.outputPartitioning.asInstanceOf[HashPartitioning]
+        .expressions.map(_.asInstanceOf[Attribute].name) == Seq("gamma_pct", "label"),
+      s"want one (gamma_pct, label) repartition:\n${exchanges.mkString("\n")}")
+    assert(!exchanges.exists(_.shuffleOrigin == ENSURE_REQUIREMENTS),
+      s"an operator re-shuffles on the community key:\n${exchanges.mkString("\n")}")
     out.unpersist()
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
+  }
+
+  /** Every node of an executed plan: AQE's current plan, the plans inside
+    * its query stages, and each cached relation's plan (once, however
+    * many scans read it). */
+  private def planNodes(root: SparkPlan): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def go(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => go(a.executedPlan)
+      case q: QueryStageExec => q +: go(q.plan)
+      case m: InMemoryTableScanExec =>
+        m +: (if (seen.add(m.relation.cacheBuilder)) go(m.relation.cachedPlan) else Nil)
+      case other => other +: other.children.flatMap(go)
+    }
+    go(root)
   }
 }
