@@ -25,29 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Which connected-components implementation [[fuzzyDedup]] runs over
-    * the verified near-dup graph. The paths are bit-equal (DedupSpec
-    * pins it); the knob trades the Auto probe's cost against picking
-    * the wrong engine for the regime. */
-  sealed trait CcPath
-  object CcPath {
-    /** Count the verified pairs (one eager aggregate over the persisted
-      * verify frame, ~1 s at sf0.1) and pick: GraphX Pregel at or below
-      * `graphxMaxEdges`, Catalyst pointer-jumping above. The safe
-      * default when the dup rate is unknown. */
-    case object Auto extends CcPath
-    /** Skip the probe, force GraphX Pregel — the clean-corpus escape
-      * hatch (round-12 verdict): when the caller KNOWS near-dups are
-      * rare the dup graph is small, the probe buys nothing, and its
-      * count is the difference between ~4.9 s and ~5.6 s at sf0.1. */
-    case object GraphX extends CcPath
-    /** Skip the probe, force Catalyst pointer-jumping
-      * ([[graft.graph.GraphOps.ccStarEdges]]) — the
-      * heavily-duplicated-corpus regime (the sf10 measurement: 2.1×
-      * over Pregel on a 27M-edge dup graph). */
-    case object Catalyst extends CcPath
-  }
-
   /** Lowercased word tokens — the shingling base. Same regex runs on
     * DuckDB's RE2; the engine side rides the codegen'd ASCII fast scan
     * with Spark's own lower+regex as the non-ASCII fallback
@@ -415,37 +392,23 @@ object Dedup {
     * regime where each dup group is a near-clique and the pair graph
     * itself is big (round-12 measurement at sf10: the 27M-edge replicated
     * dup graph took GraphX Pregel minutes of RDD churn per run; the
-    * Catalyst path cut q91's min-of-2 189 s → 88 s). Both paths label
-    * every vertex with its component's MIN id (AlgoRandomSpec asserts
-    * set-equality), so the switch can never change results.
-    *
-    * `ccPath` is the clean-corpus escape hatch (round-12 verdict item
-    * 6): Auto pays a ~1 s pair-count probe at sf0.1 to pick the right
-    * engine; a caller who KNOWS the regime forces [[CcPath.GraphX]]
-    * (rare dups — small pair graph) or [[CcPath.Catalyst]] (heavy
-    * duplication) and skips probe and persist both. All three paths
-    * are bit-equal (DedupSpec pins it). */
+    * Catalyst path cut q91's min-of-2 189 s → 88 s). The pick is
+    * [[graft.graph.GraphOps.ccAuto]]'s; both engines label every vertex
+    * with its component's MIN id (AlgoRandomSpec asserts set-equality),
+    * so the switch can never change results. */
   def fuzzyDedup(
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       jaccNum: Int = 1, jaccDen: Int = 2,
-      graphxMaxEdges: Long = 2000000L,
-      ccPath: CcPath = CcPath.Auto): DataFrame = {
+      graphxMaxEdges: Long = 2000000L): DataFrame = {
     import graft.graph.GraphOps
-    // A3 (r16 ADVICE): the cand subplan is embedded THREE times in the
-    // verify stage (candIds inside both shingle-set sides plus the
-    // verify join itself) — correctness never depended on it, but
-    // avoiding a triple MinHash band pass rested entirely on
-    // ReuseExchange/AQE stage reuse canonicalizing the copies
-    // identically. In the Auto path (which materializes `verified`
-    // eagerly anyway) the band pass is persisted for the verify stage
-    // and released right after the probe count — one guaranteed band
-    // pass, no reliance on exchange reuse. Forced paths return a lazy
-    // frame and keep the reuse-based single-action shape.
-    val candBase = lshCandidates(
+    // the band pass is persisted: the cand subplan is embedded three
+    // times in the verify stage (candIds inside both shingle-set sides
+    // plus the verify join itself), and the cache guarantees one band
+    // pass without relying on exchange reuse
+    val cand = lshCandidates(
       minhashBands(docs, idCol, textCol, shingleN, numHashes, bands), idCol)
-    val cand =
-      if (ccPath == CcPath.Auto) candBase.persist() else candBase
+      .persist()
     // tokenize once (r16, same rewrite as minhashSignature): `toks` in
     // its own projection, size guard inside the shingle expression
     // instead of a pushdown-substituted Filter. Sub-n docs now carry an
@@ -470,60 +433,13 @@ object Dedup {
           .otherwise(array().cast("array<string>")).as("sh"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     val uni = size(col("sh_a")) + size(col("sh_b")) - inter
-    val verifiedBase = cand
+    val verified = cand
       .join(sets.select(col("sid").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sets.select(col("sid").as("id_b"), col("sh").as("sh_b")), "id_b")
       .filter(inter * jaccDen >= uni * jaccNum)
-      .select(col("id_a"), col("id_b"))
-    // Auto persists: the size probe AND the chosen CC path both read the
-    // frame, and the verify join (LSH candidates x shingle arrays) is the
-    // expensive one to recompute. (A lazier probe — bounding pairs from
-    // band-bucket sizes with bandsDf cached instead — measured WORSE at
-    // sf0.1: q91 9.9 s vs 5.6 s eager vs 4.9 s unswitched; the eager
-    // count's ~1 s is the cheapest correct probe.) A FORCED path reads
-    // the frame exactly once (fromEdges builds the RDD graph in one
-    // pass; ccStarEdges localCheckpoints its own input) — no probe, no
-    // persist, which is precisely the ~0.7 s the escape hatch recovers.
-    val verified =
-      if (ccPath == CcPath.Auto) verifiedBase.persist() else verifiedBase
-    // Auto's probe count also sizes the CC engine's parallelism (r17,
-    // sizedLoopParts — the persisted pair frame compiled without AQE, at
-    // the session partition floor); forced paths skip probe and sizing
-    // both, exactly as before.
-    var ccParts: Option[Int] = None
-    val useGraphX = ccPath match {
-      case CcPath.GraphX => true
-      case CcPath.Catalyst => false
-      case CcPath.Auto =>
-        val n = verified.count() // materializes through the cand cache
-        cand.unpersist(blocking = false)
-        ccParts = Some(GraphOps.sizedLoopParts(spark, BigInt(n) * 2))
-        n <= graphxMaxEdges
-    }
-    // Catalyst branch through a lineage-TRUNCATED view when Auto
-    // persisted the frame (r16, the semDedup sf1 lesson): ccStarEdges
-    // skips its ownPre checkpoint for caller-cached inputs, so the
-    // pointer-jumping rounds would otherwise re-render the whole
-    // LSH+verify lineage per round. The lazy checkpoint reads once from
-    // the probe-filled cache. Forced paths are unpersisted and keep
-    // ccStarEdges' own truncation.
-    val cc = if (useGraphX)
-      GraphOps.connectedComponentsDF(
-        spark, GraphOps.fromEdges(spark,
-          ccParts.fold(verified)(p => verified.coalesce(p)), "id_a", "id_b"))
-    else if (ccPath == CcPath.Auto) {
-      // inputTruncated (r16 ADVICE): declared so ccStarEdges doesn't
-      // checkpoint the same frame a second time; the labels are
-      // materialized when it returns, so the view releases immediately
-      val view = verified.localCheckpoint(eager = false)
-      val labels = GraphOps.ccStarEdges(view, "id_a", "id_b",
-        numPartitions = ccParts, inputTruncated = true)
-      GraphOps.releaseLocalCheckpoint(view)
-      labels
-    } else
-      GraphOps.ccStarEdges(verified, "id_a", "id_b")
-    // both CC paths materialize their label frame before returning
-    if (ccPath == CcPath.Auto) verified.unpersist(blocking = false)
+    // the CC output stays referenced by the returned lazy frame
+    val cc = GraphOps.ccAuto(verified, "id_a", "id_b", graphxMaxEdges)
+    cand.unpersist(blocking = false)
     docs.select(col(idCol))
       .join(cc.select(col("id").as(idCol), col("component")), Seq(idCol), "left")
       .select(col(idCol),
@@ -688,10 +604,9 @@ object Dedup {
   def leakageSafeSplit(
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      jaccNum: Int = 1, jaccDen: Int = 2,
-      ccPath: CcPath = CcPath.Auto): DataFrame =
+      jaccNum: Int = 1, jaccDen: Int = 2): DataFrame =
     fuzzyDedup(spark, docs, idCol, textCol, shingleN, numHashes, bands,
-        jaccNum, jaccDen, ccPath = ccPath)
+        jaccNum, jaccDen)
       .select(col(idCol), col("cluster"),
         hashSplit3(col("cluster")).as("split"))
 

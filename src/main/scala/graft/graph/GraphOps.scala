@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, EdgeTriplet, Graph, Pregel, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph/community layer (SURVEY §2.10) on GraphX.
@@ -33,34 +33,39 @@ object GraphOps {
   /** Materialize a small-ish result DataFrame and release the graph's
     * cached RDDs: GraphX caches vertices/edges per superstep, and leaving
     * them resident squeezes execution memory for every subsequent query in
-    * the session (observed 3-7× slowdowns). The result is persisted (still
-    * distributed — no driver collect) before the graph is unpersisted. */
+    * the session (observed 3-7× slowdowns). The result comes persisted
+    * or lazily checkpointed (still distributed — no driver collect); one
+    * job materializes it before the graphs are unpersisted. */
   private def materializeAndRelease(
-      out: DataFrame, graphs: Graph[_, _]*): DataFrame = {
-    val persisted = out.persist()
-    persisted.count()
+      kept: DataFrame, graphs: Graph[_, _]*): DataFrame = {
+    kept.count()
     graphs.foreach { (g: Graph[_, _]) =>
       g.unpersistVertices(blocking = false)
       val e = g.edges
       e.unpersist(blocking = false)
     }
-    persisted
+    kept
   }
 
   /** Vertex degrees (G1/A11 substrate) as a DataFrame(id, degree). */
   def degreesDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame = {
     import spark.implicits._
     materializeAndRelease(
-      g.degrees.map { case (id, d) => (id, d) }.toDF("id", "degree"), g)
+      g.degrees.map { case (id, d) => (id, d) }.toDF("id", "degree").persist(), g)
   }
 
   /** Connected components → DataFrame(id, component) where component is
     * GraphX's min-vertex-id label. Deterministic (min propagation). */
-  def connectedComponentsDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame = {
+  def connectedComponentsDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame =
+    graphxComponents(spark, g, _.persist())
+
+  /** GraphX CC kept by `keep` (persist or lazy localCheckpoint). */
+  private def graphxComponents(spark: SparkSession, g: Graph[Long, Int],
+      keep: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
     val cc = g.connectedComponents()
     materializeAndRelease(
-      cc.vertices.map { case (id, c) => (id, c) }.toDF("id", "component"), cc, g)
+      keep(cc.vertices.map { case (id, c) => (id, c) }.toDF("id", "component")), cc, g)
   }
 
   /** Deterministic synchronous label propagation (the G2 community
@@ -86,7 +91,8 @@ object GraphOps {
     import spark.implicits._
     val res = labelPropagation(g, maxIter)
     materializeAndRelease(
-      res.vertices.map { case (id, label) => (id, label) }.toDF("id", "label"), res, g)
+      res.vertices.map { case (id, label) => (id, label) }.toDF("id", "label").persist(),
+      res, g)
   }
 
   /** The same deterministic synchronous LPA expressed as a Catalyst loop —
@@ -336,21 +342,13 @@ object GraphOps {
     * O(diameter) supersteps — the right trade for the short-diameter
     * graphs pipelines build; GraphX's Pregel CC stays alongside as the
     * RDD-idiomatic form). Convergence-checked at block boundaries (see
-    * SuperstepBlock), `maxIter` bounds pathological chains. */
+    * SuperstepBlock), `maxIter` bounds pathological chains. Returns
+    * (id, component) as a materialized local checkpoint. */
   def ccEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 20,
       broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None,
-      inputTruncated: Boolean = false): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame = {
     val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // inputTruncated (r17, the r16 ADVICE medium item): callers that hand
-    // a lineage-truncated view (a localCheckpoint) declare it, because
-    // callerCached() cannot see it — checkpoint views are never
-    // cacheManager-cached, so ownPre stayed true and the edge frame was
-    // stored in local-checkpoint blocks TWICE per call (and the caller's
-    // copy was only freed by ContextCleaner GC). The caller keeps
-    // ownership: it must release its checkpoint after the labels
-    // materialize (releaseLocalCheckpoint).
-    val ownPre = !inputTruncated && !callerCached(edges)
+    val ownPre = !callerCached(edges)
     // localCheckpoint, NOT persist: the superstep loop references this
     // frame twice per superstep and every block action re-renders the
     // full logical plan — persist caches the DATA but keeps the deep
@@ -359,6 +357,19 @@ object GraphOps {
     // Truncation roots every superstep plan at a LogicalRDD leaf; lazy,
     // so the first block action is still the materializer.
     val pre = if (ownPre) pre0.localCheckpoint(eager = false) else pre0
+    val labels = ccMinSupersteps(pre,
+      numPartitions.getOrElse(sizedLoopPartsFromStats(edges)), maxIter,
+      broadcastState, edges)
+    if (ownPre) releaseLocalCheckpoint(pre) // labels are materialized
+    labels
+  }
+
+  /** The [[ccEdges]] supersteps over a lineage-truncated `(src, dst)`
+    * frame the caller owns; `edges` is the frame whose statistics bound
+    * the vertex count for the state-join strategy. Returns the last
+    * block's checkpoint. */
+  private def ccMinSupersteps(pre: DataFrame, parts: Int, maxIter: Int,
+      broadcastState: Option[Boolean], edges: DataFrame): DataFrame = {
     val und0 = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
     // Self-loops make the superstep a pure aggregation over the static
     // edge table — new label = min over (self ∪ neighbors) — so the
@@ -372,10 +383,7 @@ object GraphOps {
     val undBase = und0
       .union(und0.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
-    val und = undBase
-      .repartition(numPartitions.getOrElse(sizedLoopPartsFromStats(edges)),
-        col("src"))
-      .persist()
+    val und = undBase.repartition(parts, col("src")).persist()
     // exact-count fallback (evaluated only when the stats bound refuses);
     // the probe PERSISTS the vertex frame it counts and the label seed
     // reuses it, so the dense regime pays the vertex distinct once, not
@@ -403,9 +411,11 @@ object GraphOps {
           .groupBy(col("src").as("id"))
           .agg(min(col("label")).as("label"))
       }
-      val snap = labels.persist()
+      // a checkpoint: the next block's plan roots at its leaf, and the
+      // returned labels never reach the caller's released `pre`
+      val snap = labels.localCheckpoint(eager = false)
       // ONE action materializes the snapshot AND reads the convergence
-      // sum (the first action on a persisted frame populates the cache
+      // sum (the first action on a lazy checkpoint fills its blocks
       // while computing the agg) — previously a count job THEN a sum job,
       // i.e. two driver round-trips per block (round-6 verdict item 5).
       val s = snap.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
@@ -415,14 +425,13 @@ object GraphOps {
       // superstep itself a single-reference linear plan.
       converged = s == null || (prevSum != null && s.compareTo(prevSum) == 0)
       prevSum = s
-      cached.foreach(_.unpersist(blocking = false))
+      cached.foreach(releaseLocalCheckpoint)
       cached = Some(snap)
       labels = snap
       iter += steps
     }
     if (vertsProbed) verts.unpersist(blocking = false)
     und.unpersist(blocking = false)
-    if (ownPre) releaseLocalCheckpoint(pre) // labels snap is materialized
     labels.withColumnRenamed("label", "component")
   }
 
@@ -450,17 +459,83 @@ object GraphOps {
     * ~2× ccEdges' per-superstep work, won back exponentially on
     * diameter. Returns (id, component). */
   def ccStarEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 30, numPartitions: Option[Int] = None,
-      inputTruncated: Boolean = false): DataFrame = {
+      maxIter: Int = 30, numPartitions: Option[Int] = None): DataFrame = {
     val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // inputTruncated: see ccEdges — skips the redundant second
-    // localCheckpoint for callers that hand an already-truncated view
-    // (they release it after the labels materialize)
-    val ownPre = !inputTruncated && !callerCached(edges)
+    val ownPre = !callerCached(edges)
     val pre = if (ownPre) pre0.localCheckpoint(eager = false) else pre0
+    val labels = ccStarRounds(pre,
+      numPartitions.getOrElse(sizedLoopPartsFromStats(edges)), maxIter)
+    if (ownPre) releaseLocalCheckpoint(pre)
+    labels
+  }
+
+  /** Connected components by graph size: the one place the GraphX /
+    * Catalyst engine is picked from the data. The `(src, dst)` frame is persisted
+    * and counted once; that count sizes the partitions
+    * ([[sizedLoopParts]]) and picks the engine. At or below
+    * `graphxMaxEdges` GraphX Pregel runs over the coalesced cache: on
+    * small graphs its in-process convergence beats the Catalyst loop's
+    * per-round driver gates and near-empty shuffles. Above it the
+    * [[ccStarEdges]] rounds run over one lazy `localCheckpoint` view of
+    * the cache, so no round re-renders the caller's lineage and its
+    * O(log n) rounds hold on any topology. Both engines label a vertex
+    * with its component's min id (AlgoRandomSpec), so the pick changes
+    * wall time only.
+    *
+    * Each caller keeps its own threshold because its graphs differ in
+    * where the crossover sits: the Leiden split's intra graphs and
+    * semDedup's near-clique τ-graphs lose under GraphX well below 2M
+    * edges (sf1: 68 s vs 38 s on q150's splits, 16–20 s vs 9–10 s on a
+    * 207k-edge τ-graph; GraphX still wins at 1.2k edges), so both use
+    * 50k; fuzzyDedup's sparse near-dup graphs keep 2M (sf10: a 27M-edge
+    * dup graph went 189 s → 88 s on the Catalyst side).
+    *
+    * `pointerJumping = false` runs [[ccEdges]]' min-propagation
+    * supersteps instead of the pointer-jumping rounds (`maxIter` then
+    * counts supersteps): semDedup's τ-graphs are near-cliques that
+    * converge in the first superstep block, and forced onto the
+    * Catalyst side at sf0.1 (tools_dev.SemCcAb, 4 cores) semDedup took
+    * 14.0–15.4 s with the rounds vs 3.8–4.6 s with the supersteps.
+    *
+    * Returns (id, component), materialized, as a local checkpoint
+    * whichever engine ran; the caller releases it with
+    * [[releaseLocalCheckpoint]] once its own output is materialized.
+    * Its size estimate is bounded by two vertices per edge, so a join
+    * over it plans like one over the persisted frame GraphX CC used to
+    * return. The edge cache and the view are released before returning. */
+  private[graft] def ccAuto(edges: DataFrame, srcCol: String, dstCol: String,
+      graphxMaxEdges: Long, maxIter: Int = 30,
+      pointerJumping: Boolean = true): DataFrame = {
+    val spark = edges.sparkSession
+    val cached = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .persist()
+    val rows = cached.count()
+    val parts = sizedLoopParts(spark, BigInt(rows) * 2)
+    val comp =
+      if (rows <= graphxMaxEdges)
+        graphxComponents(spark,
+          fromEdges(spark, cached.coalesce(parts), "src", "dst"),
+          _.localCheckpoint(eager = false))
+      else {
+        val view = cached.localCheckpoint(eager = false)
+        val labels =
+          if (pointerJumping) ccStarRounds(view, parts, maxIter)
+          else ccMinSupersteps(view, parts, maxIter, None, view)
+        releaseLocalCheckpoint(view)
+        labels
+      }
+    cached.unpersist(blocking = false)
+    // at most two vertices per edge: lets the caller's join over the
+    // labels plan a broadcast without waiting for AQE's shuffle stages
+    GraftSqlBridge.withRowBound(comp, BigInt(rows) * 2)
+  }
+
+  /** The [[ccStarEdges]] rounds over a lineage-truncated `(src, dst)`
+    * frame the caller owns. Returns the last round's checkpoint. */
+  private def ccStarRounds(pre: DataFrame, parts: Int,
+      maxIter: Int): DataFrame = {
     val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(numPartitions.getOrElse(sizedLoopPartsFromStats(edges)),
-        col("src"))
+      .repartition(parts, col("src"))
       .persist()
     // NOT checkpointed (round 15, r14 verdict item 3 — one driver gate
     // fewer): round 1 references this twice, recomputing the distinct
@@ -505,7 +580,6 @@ object GraphOps {
       iter += 1
     }
     und.unpersist(blocking = false)
-    if (ownPre) releaseLocalCheckpoint(pre)
     labels.withColumnRenamed("l", "component")
   }
 
@@ -547,10 +621,7 @@ object GraphOps {
     // checkpointed frame). ccEdges(mapped, ...) remains the swap-in when
     // a batch is itself corpus-sized.
     val spark = labels.sparkSession
-    val mRows = mapped.count()
-    val mParts = math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      (mRows / 100000L + 1).toInt)
+    val mParts = sizedLoopParts(spark, BigInt(mapped.count()))
     val merged = connectedComponentsDF(spark,
         fromEdges(spark, mapped.coalesce(mParts), "src", "dst"))
       .select(col("id").as("component"), col("component").as("newc"))
@@ -602,13 +673,11 @@ object GraphOps {
     // L1: LPA over the contracted graph with self-loops (self-votes).
     // The contracted edge set is ALWAYS ≪ the original (distinct
     // community pairs); counting it is ~free (ce is checkpointed) and
-    // sizing the superstep partitions to the data — ~100k edges per
-    // partition, min 1 — drops the near-empty-task scheduling overhead
-    // that otherwise dominates this stage (~25% at sf0.1). A contracted
-    // graph that is still huge keeps the session default.
-    val ceRows = ce.count()
-    val defaultParts = spark.sessionState.conf.numShufflePartitions
-    val l1Parts = math.min(defaultParts, (ceRows / 100000L + 1).toInt)
+    // sizing the superstep partitions to the data ([[sizedLoopParts]])
+    // drops the near-empty-task scheduling overhead that otherwise
+    // dominates this stage (~25% at sf0.1). A contracted graph that is
+    // still huge keeps the session default.
+    val l1Parts = sizedLoopParts(spark, BigInt(ce.count()))
     val withSelf = ce.union(
       ce.select(col("src").as("v")).union(ce.select(col("dst").as("v")))
         .distinct().select(col("v").as("src"), col("v").as("dst")))
@@ -1237,7 +1306,7 @@ object GraphOps {
     *
     * Implemented as constrained connected components: keep only
     * intra-community edges (both endpoints share a label), run
-    * [[ccStarEdges]] over them, and give every resulting
+    * [[ccAuto]] over them, and give every resulting
     * sub-component its min member id as its new community label;
     * vertices with no intra-community edge become singletons labeled by
     * their own id. Components never span communities (intra edges can't
@@ -1246,22 +1315,23 @@ object GraphOps {
     * sub-communities — so the output is a deterministic refinement of
     * the input partition.
     *
-    * CC runs via [[ccStarEdges]] (pointer jumping, O(log n) rounds on
-    * ANY topology), not [[ccEdges]]: min-propagation needs O(diameter)
-    * supersteps, and a chain-shaped intra-community subgraph with
-    * diameter > the superstep budget would return UNCONVERGED labels —
-    * i.e. emit a still-internally-disconnected community with no error,
-    * violating the exact guarantee this function exists to provide.
-    * `maxIter` here bounds pointer-jumping ROUNDS (each round halves
-    * label-chain lengths, so the default 20 covers components of ~2^20
-    * hops — every real graph); `broadcastState` is kept for signature
-    * compatibility but the pointer-jumping loop is join-based and does
-    * not consult it.
+    * CC runs via [[ccAuto]]: GraphX Pregel (to convergence) at or below
+    * `graphxMaxEdges` intra edges, [[ccStarEdges]] (pointer jumping,
+    * O(log n) rounds on ANY topology) above — never [[ccEdges]]:
+    * min-propagation needs O(diameter) supersteps, and a chain-shaped
+    * intra-community subgraph with diameter > the superstep budget would
+    * return UNCONVERGED labels — i.e. emit a still-internally-
+    * disconnected community with no error, violating the exact
+    * guarantee this function exists to provide. `maxIter` bounds
+    * pointer-jumping ROUNDS (each round halves label-chain lengths, so
+    * the default 20 covers components of ~2^20 hops — every real
+    * graph); `broadcastState` is kept for signature compatibility but
+    * neither engine consults it.
     *
     * Scale shape: two vertex-sized equi-joins to mark intra edges
-    * (AQE broadcasts the assignment when it fits) + the pointer-jumping
-    * loop bounded by the INTRA edge subset (≤ the graph, often ≪ after a
-    * sensible pre-partition) — no pairwise work, no driver collect.
+    * (AQE broadcasts the assignment when it fits) + the CC loop bounded
+    * by the INTRA edge subset (≤ the graph, often ≪ after a sensible
+    * pre-partition) — no pairwise work, no driver collect.
     *
     * Returns (id, label) for every vertex of `assignment`, checkpointed
     * and materialized; every intermediate is released. */
@@ -1270,86 +1340,22 @@ object GraphOps {
       assignment: DataFrame, idCol: String, labelCol: String,
       maxIter: Int = 20,
       broadcastState: Option[Boolean] = None,
-      // 50k, not fuzzyDedup's 2M (r16 sf1 measurement): GraphX Pregel
-      // loses ~2x to the truncated Catalyst loop well below 2M edges —
-      // q150's fused 3-γ split graph at sf1 read 68 s under GraphX vs
-      // 38 s under the old unconditional ccStarEdges; semDedup's
-      // 207k-edge τ-graph measured the same inversion (16-20 s vs
-      // 9.2-9.9 s). GraphX's win regime is the genuinely SMALL graph
-      // (q147's sf0.1 intra: ~2.3 s saved) — 50k is the midpoint of the
-      // measured [1.2k wins, 207k loses] bracket.
       graphxMaxEdges: Long = 50000L): DataFrame = {
     val asg = assignment.select(col(idCol).as("id"), col(labelCol).as("c"))
-    // The CC superstep loop must never re-render the deep caller lineage
-    // (a refine pass, or a previous split's output) per superstep — a
-    // tiny re-split once took minutes in plan-string time alone (the
-    // SuperstepBlock lesson). But no checkpoint of its own here (round
-    // 15, r14 verdict item 3):
-    // ccStarEdges checkpoints its OWN edge frame when the caller's is
-    // uncached (ownPre) — checkpointing intra here too paid a second,
-    // redundant lineage-truncation gate for the same frame. The deep
-    // caller lineage (a refine pass's persisted ladder output) is
-    // truncated by that pre checkpoint exactly as it was by this one.
     val intra = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .join(asg.select(col("id").as("src"), col("c").as("cs")), "src")
       .join(asg.select(col("id").as("dst"), col("c").as("cd")), "dst")
       .filter(col("cs") === col("cd"))
-      .select(col("src"), col("dst"))
-      .persist()
-    // CC engine by intra-graph size (r16): the same measured Auto policy
-    // as fuzzyDedup/semDedup — below graphxMaxEdges the in-process GraphX
-    // Pregel beats the Catalyst star loop's per-superstep fixed overhead
-    // (driver gates + 32-partition shuffles of near-empty data dominate
-    // at bench scale); above it, ccStarEdges' O(log n) pointer-jumping
-    // rounds win (the round-12 sf10 measurement: minutes of RDD churn vs
-    // 88 s). Both label every vertex with its component's MIN id
-    // (AlgoRandomSpec pins set-equality), so the split is results-
-    // identical whichever engine runs. The probe count doubles as the
-    // intra materializer — ccStarEdges would have paid an equivalent
-    // lineage-truncation pass (ownPre) on the same frame anyway.
-    val spark = edges.sparkSession
-    // Catalyst branch through a lineage-TRUNCATED view (r16 sf1 fix):
-    // persisting `intra` above made callerCached true, which DISABLED
-    // the ownPre checkpoint this function's own comment relies on — at
-    // sf1+ (intra > graphxMaxEdges) every pointer-jumping round would
-    // re-render the refine ladder's full lineage (the SuperstepBlock
-    // pathology). The lazy checkpoint reads once from the probe-filled
-    // cache; GraphX (the small regime) keeps the bare cached frame.
-    // Both engines get DATA-SIZED parallelism from the probe count the
-    // split already pays (r17, sizedLoopParts): intra is a persisted
-    // join output whose plan compiled without AQE — at the session
-    // partition floor — and near-empty superstep tasks were the
-    // dominant split cost at bench scale. coalesce is narrow (no
-    // shuffle); partition count never changes CC labels.
-    val intraRows = intra.count()
-    val ccParts = sizedLoopParts(spark, BigInt(intraRows) * 2)
-    // the truncated view is declared (inputTruncated) so ccStarEdges
-    // doesn't checkpoint the same frame a second time (r16 ADVICE);
-    // this function releases it once the labels are materialized
-    var ccView: Option[DataFrame] = None
-    val comp = if (intraRows <= graphxMaxEdges)
-      connectedComponentsDF(spark,
-        fromEdges(spark, intra.coalesce(ccParts), "src", "dst"))
-    else {
-      val view = intra.localCheckpoint(eager = false)
-      ccView = Some(view)
-      ccStarEdges(view, "src", "dst", maxIter,
-        numPartitions = Some(ccParts), inputTruncated = true)
-    }
-    // a checkpoint, not a persist: no later plan can reach the frames
-    // released below (the refineCore output note)
+    val comp = ccAuto(intra, "src", "dst", graphxMaxEdges, maxIter)
+    // a checkpoint, not a persist: no later plan can reach the component
+    // checkpoint released below (the refineCore output note)
     val out = asg.join(comp, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("component"), col("id")).as("label"))
       .localCheckpoint(eager = false)
     out.count()
-    // GraphX hands back a persisted frame, ccStarEdges its last round's
-    // checkpoint
-    if (ccView.isEmpty) comp.unpersist(blocking = false)
-    else releaseLocalCheckpoint(comp)
-    ccView.foreach(releaseLocalCheckpoint)
-    intra.unpersist(blocking = false)
+    releaseLocalCheckpoint(comp)
     out
   }
 
@@ -1986,7 +1992,7 @@ object GraphOps {
         coalesce(col("in_core"), lit(false)).as("in_core"),
         when(coalesce(col("in_core"), lit(false)), coalesce(col("d"), lit(0L)))
           .as("core_deg"))
-    val persisted = materializeAndRelease(out)
+    val persisted = materializeAndRelease(out.persist())
     releaseLocalCheckpoint(und)
     persisted
   }

@@ -317,10 +317,9 @@ object GraphQueries {
         .select(col("a.o").as("src"), col("b.o").as("dst"))
         .persist()
       // materialize once and size the CC supersteps to the edge count
-      // (~100k/partition) — the path graph's components are tiny, so
-      // near-empty default-partition tasks would dominate the loop
-      val parts = math.min(s.sessionState.conf.numShufflePartitions,
-        (e.count() / 100000L + 1).toInt)
+      // (GraphOps.sizedLoopParts) — the path graph's components are
+      // tiny, so near-empty default-partition tasks would dominate
+      val parts = GraphOps.sizedLoopParts(s, BigInt(e.count()))
       val old = e.filter(col("src") % 5 =!= 0)
       val batch = e.filter(col("src") % 5 === 0)
       // GraphX Pregel for the base labeling: the path graph's components

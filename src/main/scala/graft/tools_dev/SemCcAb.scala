@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import graft.vector.Similarity
 
 /** Dev-only: A/B the semDedup CC engine pick at SPARK_GRAFT_SF_DIR by
-  * forcing each side of the graphxMaxEdges threshold (0 ⇒ Catalyst
-  * ccEdges always; huge ⇒ GraphX Pregel whenever the probe count fits).
+  * forcing each side of the graphxMaxEdges threshold (0 ⇒ the Catalyst
+  * ccStarEdges rounds always; huge ⇒ GraphX Pregel whenever the probe
+  * count fits).
   * The r16 sf1 regression hunt: q143's τ-graph at sf1 (~207k edges of
   * 10-cliques) sits UNDER the 2M threshold borrowed from fuzzyDedup, so
   * Auto picks GraphX — this tool measures whether that pick is right. */

@@ -431,17 +431,14 @@ object Similarity {
     * at production scale k tracks corpus size (the paper uses ~10⁵
     * clusters for ~10⁸ docs) so cluster sizes, and the pair cost,
     * stay bounded; CC runs on the τ-graph only (≪ corpus). Returns
-    * (idCol, cluster, keep_id, is_dup) for every embedded doc.
+    * (idCol, cluster, keep_id, is_dup) for every embedded doc,
+    * checkpointed and materialized; every intermediate is released.
     *
-    * `graphxMaxEdges` is LOWER here than fuzzyDedup's 2M: semDedup's
-    * τ-graphs are dense near-clique blobs, and the r16 sf1 measurement
-    * (SemCcAb, same process, 2 rounds each) put GraphX Pregel at
-    * 16.4–20.3 s vs the truncated Catalyst loop's 9.2–9.9 s on a
-    * 207k-edge clique graph, while GraphX still wins 5.8 s vs 12.1 s
-    * on the 1.2k-edge sf0.1 graph — the crossover sits inside
-    * [1.2k, 207k]; 50k is the bracket midpoint. Both engines are
-    * results-identical (min-id labels, AlgoRandomSpec), so the
-    * threshold affects wall time only. */
+    * CC over the τ-graph is [[graft.graph.GraphOps.ccAuto]]'s engine
+    * pick, with min-propagation supersteps on its Catalyst side;
+    * `graphxMaxEdges` is LOWER here than fuzzyDedup's 2M because
+    * semDedup's τ-graphs are dense near-clique blobs (ccAuto's doc has
+    * the measurements). The threshold affects wall time only. */
   def semDedup(
       emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, tau: Double,
@@ -462,55 +459,18 @@ object Similarity {
       .filter(col("ia") < col("ib"))
       .filter(cosine(col("va"), col("vb"), col("na"), col("nb")) >= tau)
       .select(col("ia").as("src"), col("ib").as("dst"))
-      .persist()
-    // CC engine by pair-graph size — fuzzyDedup's measured Auto policy
-    // applied here too (r16: the unconditional Catalyst pointer-jumping
-    // loop was q143's bound — 6.8 s of superstep fixed overhead for a
-    // 1,168-edge τ-graph at sf0.1, vs in-process GraphX Pregel which
-    // wins on small graphs; past graphxMaxEdges the Catalyst path's
-    // O(log n) rounds win — the round-12 sf10 measurement). Both paths
-    // label every vertex with its component's MIN id (AlgoRandomSpec
-    // pins set-equality), so the switch can never change results. The
-    // probe count doubles as the pair materializer (the τ-join is the
-    // expensive frame both the probe and CC read).
-    val spark = emb.sparkSession
-    // Catalyst branch gets a lineage-TRUNCATED view (r16 sf1 regression
-    // fix): ccEdges skips its own localCheckpoint when the caller cached
-    // the input (ownPre), so handing it the persisted `pairs` bare put
-    // the FULL kmeans+pair-join lineage back into every superstep plan —
-    // the exact 85 s plan-rendering pathology ccEdges' own comment
-    // documents (measured again this round: forced-Catalyst semDedup at
-    // sf1 399 s vs 30 s). The lazy checkpoint materializes once FROM the
-    // probe-filled cache; the loop then roots at a LogicalRDD leaf.
-    // data-sized CC parallelism from the probe count (r17,
-    // sizedLoopParts): `pairs` is a persisted join output compiled
-    // without AQE — at the session partition floor; coalesce is narrow
-    // and partition count never changes the min-id labels
-    val nPairs = pairs.count()
-    val ccParts = graft.graph.GraphOps.sizedLoopParts(spark, BigInt(nPairs) * 2)
-    // inputTruncated (r16 ADVICE): the view is declared truncated so
-    // ccEdges doesn't checkpoint the same frame a second time; released
-    // below once the output is materialized
-    var ccView: Option[org.apache.spark.sql.DataFrame] = None
-    val comp = if (nPairs <= graphxMaxEdges)
-      graft.graph.GraphOps.connectedComponentsDF(
-        spark, graft.graph.GraphOps.fromEdges(
-          spark, pairs.coalesce(ccParts), "src", "dst"))
-    else {
-      val view = pairs.localCheckpoint(eager = false)
-      ccView = Some(view)
-      graft.graph.GraphOps.ccEdges(view, "src", "dst",
-        numPartitions = Some(ccParts), inputTruncated = true)
-    }
+    val comp = graft.graph.GraphOps.ccAuto(pairs, "src", "dst", graphxMaxEdges,
+      maxIter = 20, pointerJumping = false)
+    // a checkpoint, not a persist: no later plan can reach the component
+    // checkpoint released below
     val out = v.select(col(idCol), col("cluster"))
       .join(comp.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol), col("cluster"),
         coalesce(col("component"), col(idCol)).as("keep_id"))
       .withColumn("is_dup", col("keep_id") =!= col(idCol))
-      .persist()
+      .localCheckpoint(eager = false)
     out.count()
-    ccView.foreach(graft.graph.GraphOps.releaseLocalCheckpoint)
-    pairs.unpersist(blocking = false)
+    graft.graph.GraphOps.releaseLocalCheckpoint(comp)
     v.unpersist(blocking = false)
     out
   }
@@ -1381,23 +1341,12 @@ object Similarity {
         .orderBy(col("score").desc, col("id").asc).limit(1)
         .select(lit(r).as("rank"), col("id"), col("qsim"))
       selected = prev.unionByName(next).localCheckpoint()
-      releaseCp(prev)
+      graft.graph.GraphOps.releaseLocalCheckpoint(prev)
     }
     val out = selected.persist()
     out.count()
-    releaseCp(selected)
-    releaseCp(cands)
+    graft.graph.GraphOps.releaseLocalCheckpoint(selected)
+    graft.graph.GraphOps.releaseLocalCheckpoint(cands)
     out
   }
-
-  /** Release the RDD blocks behind a locally-checkpointed DataFrame
-    * (Dataset.unpersist is a no-op for these — the checkpoint persists
-    * the RDD directly, bypassing the CacheManager). Data must already be
-    * consumed: truncated lineage cannot recompute after unpersist. */
-  private def releaseCp(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

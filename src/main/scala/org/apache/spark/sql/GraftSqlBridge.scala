@@ -1,14 +1,39 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Bridge into the `private[sql]` Column↔Expression converters — the
-  * standard hook point for libraries that define custom Catalyst
-  * expressions on Spark 4 (where `Column` wraps a ColumnNode, not an
-  * Expression). Kept to exactly these two calls.
+/** Bridge into `private[sql]` Spark internals: the Column↔Expression
+  * converters — the standard hook point for libraries that define custom
+  * Catalyst expressions on Spark 4 (where `Column` wraps a ColumnNode, not
+  * an Expression) — and the statistics of a checkpoint leaf. Kept to
+  * exactly these three calls.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `df` — a checkpoint leaf, bare or under one projection — with the
+    * leaf's size bounded by `maxRows` rows. A lazy `localCheckpoint`
+    * reports the size of the plan it was made from, and a plan over a
+    * bare RDD (GraphX output) reports the unknown 8 EiB default, so a
+    * join over it cannot be planned as a broadcast until AQE has run its
+    * shuffle stages. Same rows, same RDD; only the estimate changes. */
+  def withRowBound(df: DataFrame, maxRows: BigInt): DataFrame = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    // copied by hand, not by transform: the bounded leaf compares equal
+    // to the original (statistics sit outside case-class equality), so
+    // a transform would keep the original
+    def bound(l: LogicalRDD) = l.copy()(session,
+      Some(Statistics(EstimationUtils.getSizePerRow(l.output) * maxRows)), None)
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => classic.Dataset.ofRows(session, bound(l))
+      case p @ Project(_, l: LogicalRDD) =>
+        classic.Dataset.ofRows(session, p.copy(child = bound(l)))
+      case _ => df
+    }
+  }
 }

@@ -654,22 +654,33 @@ class AlgoRandomSpec extends SparkSpec {
       val prop = GraphOps.ccEdges(df, "src", "dst", maxIter = 40)
         .as[(Long, Long)].collect().toMap
       assert(star == prop, s"ccStar mismatch for seed $seed")
-      // inputTruncated (r17): a caller-owned localCheckpoint view with
-      // the double-checkpoint skipped must label identically — and the
-      // caller-side release afterwards must not break the returned frame
-      val viewS = df.localCheckpoint(eager = false)
-      val starT = GraphOps.ccStarEdges(viewS, "src", "dst",
-        inputTruncated = true)
-      val starTm = starT.as[(Long, Long)].collect().toMap
-      GraphOps.releaseLocalCheckpoint(viewS)
-      assert(starTm == star, s"ccStar inputTruncated mismatch for seed $seed")
-      assert(starT.as[(Long, Long)].collect().toMap == star,
-        s"ccStar labels unreadable after view release for seed $seed")
-      val viewP = df.localCheckpoint(eager = false)
-      val propT = GraphOps.ccEdges(viewP, "src", "dst", maxIter = 40,
-        inputTruncated = true).as[(Long, Long)].collect().toMap
-      GraphOps.releaseLocalCheckpoint(viewP)
-      assert(propT == prop, s"ccEdges inputTruncated mismatch for seed $seed")
+    }
+  }
+
+  test("ccAuto equals ccEdges on both engines and leaves only its output") {
+    // the same random graphs as above, under the Catalyst rounds
+    // (graphxMaxEdges = 0) and under GraphX (the callers' 50k default)
+    val sc = spark.sparkContext
+    for (seed <- Seq(7, 41, 97); graphxMaxEdges <- Seq(0L, 50000L)) {
+      val rnd = new Random(seed)
+      val n = 35
+      val edges = Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }
+      val df = edges.toDF("src", "dst")
+      val prop = GraphOps.ccEdges(df, "src", "dst", maxIter = 40)
+        .as[(Long, Long)].collect().toMap
+      val before = sc.getPersistentRDDs.keySet
+      val out = GraphOps.ccAuto(df, "src", "dst", graphxMaxEdges)
+      val own = out.queryExecution.analyzed.collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      assert(own.size == 1 && sc.getPersistentRDDs.keySet -- before == own,
+        s"seed $seed, graphxMaxEdges=$graphxMaxEdges left more than its output registered")
+      // read after the call: the edge cache and the view are released
+      Thread.sleep(200L) // time for the asynchronous block removal
+      assert(out.as[(Long, Long)].collect().toMap == prop,
+        s"ccAuto mismatch for seed $seed, graphxMaxEdges=$graphxMaxEdges")
+      GraphOps.releaseLocalCheckpoint(out)
     }
   }
 

@@ -305,25 +305,6 @@ class DedupSpec extends SparkSpec {
     assert(graphx.nonEmpty)
   }
 
-  test("fuzzyDedup: forced ccPath (GraphX, Catalyst) is bit-equal to Auto") {
-    // the clean-corpus escape hatch (round-12 verdict item 6): forcing
-    // either engine skips the pair-count probe but may never change the
-    // labeling — all three paths must agree row-for-row
-    val a = base
-    val b = base.replace("small dimension", "compact dimension")
-    val c = b.replace("columnar parquet", "vectorized parquet")
-    val corpus = Seq(
-      (10L, a), (11L, b), (12L, c), (20L, unrelated), (21L, unrelated),
-      (30L, "short text only")).toDF("doc_id", "text")
-    def run(p: Dedup.CcPath) =
-      Dedup.fuzzyDedup(spark, corpus, "doc_id", "text", bands = 8, ccPath = p)
-        .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    val auto = run(Dedup.CcPath.Auto)
-    assert(run(Dedup.CcPath.GraphX) == auto)
-    assert(run(Dedup.CcPath.Catalyst) == auto)
-    assert(auto.nonEmpty)
-  }
-
   test("BandIndex facade: build/checkBatch/append/open replays the kernel " +
       "paths; open recovers the stored parameters") {
     import graft.dedup.{BandIndex, BandIndexConfig}

@@ -308,6 +308,23 @@ class SimilaritySpec extends SparkSpec {
     assert(none == 0L)
   }
 
+  test("semDedup: both CC engines agree and leave only the output") {
+    val sc = spark.sparkContext
+    def run(graphxMaxEdges: Long) = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Similarity.semDedup(vecs, "vec_id", "embedding",
+        k = 2, iters = 2, tau = 0.95, graphxMaxEdges = graphxMaxEdges)
+      assert((sc.getPersistentRDDs.keySet -- before).size == 1,
+        s"graphxMaxEdges=$graphxMaxEdges left more than its output registered")
+      val rows = out.as[(Long, Long, Long, Boolean)].collect().toSet
+      graft.graph.GraphOps.releaseLocalCheckpoint(out)
+      rows
+    }
+    val graphx = run(graphxMaxEdges = 50000L)
+    assert(run(graphxMaxEdges = 0L) == graphx) // the ccStarEdges rounds
+    assert(graphx.count(_._4) == 2)
+  }
+
   test("semDedupAuto: corpus-scaled k sizing rule, delegation equals explicit k") {
     // the sizing rule: ceil division, floor 1, maxK clamp
     assert(Similarity.semDedupAutoK(5, 256) == 1)
