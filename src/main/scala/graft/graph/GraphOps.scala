@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, EdgeTriplet, Graph, Pregel, VertexId}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph/community layer (SURVEY §2.10) on GraphX.
@@ -178,13 +178,6 @@ object GraphOps {
       resolveBroadcastState(None, edges) ||
         vertexCount * stateCopies <= BroadcastVertexLimit)
 
-  /** True when the caller handed us an already-persisted frame: derive
-    * from their cache instead of re-persisting the directed edge list
-    * (the union below scans its input TWICE — uncached, an expensive
-    * upstream derivation would compute twice inside the setup job). */
-  private def callerCached(df: DataFrame): Boolean =
-    df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-
   /** Estimated edge rows from optimizer statistics — job-free. Parquet
     * scan-derived frames propagate ~4 stats-bytes/row (measured in
     * tools_dev.StatsProbe and re-confirmed by PartsProbe: the bipartite
@@ -230,34 +223,62 @@ object GraphOps {
   private def sizedLoopPartsFromStats(edges: DataFrame): Int =
     sizedLoopParts(edges.sparkSession, statsEdgeRows(edges) * 2)
 
+  /** The loop-input rule: true when `edges` is materialized — cached, or
+    * a checkpoint (a `LogicalRDD`, bare or under one projection). A
+    * `localCheckpoint`, eager or lazy, reports `StorageLevel.NONE`, yet
+    * its plan roots at the checkpointed RDD: a loop that scans it reads
+    * those blocks and never re-derives the caller's lineage, so it
+    * counts as materialized too. A materialized input is used in place;
+    * any other one is persisted ([[undirectedCache]]) or truncated
+    * ([[truncatedCc]]) once, because the undirected expansion scans its
+    * input twice. */
+  private[graft] def loopInputMaterialized(edges: DataFrame): Boolean =
+    edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
+      GraftSqlBridge.isCheckpoint(edges)
+
+  /** The undirected edge cache of every Catalyst loop here, and the one
+    * call that releases it. `edges` is projected to `(src, dst)` (plus a
+    * long `w` from `weightCol`); under [[loopInputMaterialized]] the
+    * projection is read in place or persisted once. The flipped copy is
+    * unioned in — with one self-loop per vertex when `selfLoops` — and
+    * the result is repartitioned on the loop's aggregation `key` (`src`
+    * or `dst`) and persisted. With the vertex-sized state broadcast into
+    * each step's join ([[stateSide]]), that partitioning flows through
+    * the join, so after this one setup shuffle no step re-shuffles the
+    * edges; at vertex counts too large to broadcast, only the state
+    * moves per step. Partitions: `numPartitions` from callers that know
+    * the edge set is small (a community-contracted graph), else
+    * [[sizedLoopPartsFromStats]]. The release drops the cache and the
+    * persisted projection, never the caller's frame. */
+  private def undirectedCache(
+      edges: DataFrame, srcCol: String, dstCol: String, key: String,
+      numPartitions: Option[Int] = None, weightCol: Option[String] = None,
+      selfLoops: Boolean = false): (DataFrame, () => Unit) = {
+    val w = weightCol.toSeq
+    val proj = edges.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++
+      w.map(col(_).cast("long").as("w")): _*)
+    val owned = !loopInputMaterialized(edges)
+    val pre = if (owned) proj.persist() else proj
+    val both = pre.union(pre.select(Seq(col("dst").as("src"), col("src").as("dst")) ++
+      w.map(_ => col("w")): _*))
+    val rows =
+      if (selfLoops) both.union(both.select(col("src")).distinct()
+        .select(col("src"), col("src").as("dst")))
+      else both
+    val und = rows
+      .repartition(numPartitions.getOrElse(sizedLoopPartsFromStats(edges)), col(key))
+      .persist()
+    (und, () => {
+      und.unpersist(blocking = false)
+      if (owned) pre.unpersist(blocking = false)
+    })
+  }
+
   def lpaEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int,
       broadcastState: Option[Boolean] = None, numPartitions: Option[Int] = None): DataFrame = {
-    // The undirected expansion is cached PRE-PARTITIONED ON src — the
-    // superstep aggregation key. Each superstep joins on dst against the
-    // vertex-sized label state as a BROADCAST (hinted), so the cached
-    // src-partitioning flows through the join and BOTH superstep aggs
-    // ((src,label) counts, then the per-src argmax — HashPartitioning(src)
-    // satisfies both clusterings) plan NO exchange: after one setup
-    // shuffle every superstep is exchange-free over the edges. At vertex
-    // counts too large to broadcast, drop the hint and repartition the
-    // labels on dst instead — only the vertex-sized state moves per
-    // superstep; the edge side never re-shuffles. (Callers that persisted
-    // `edges` still avoid re-deriving it: the setup shuffle scans their
-    // cache once.)
-    val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ownPre = !callerCached(edges)
-    val pre = if (ownPre) pre0.persist() else pre0
-    // numPartitions: callers that KNOW the edge set is small (e.g. a
-    // community-contracted graph — always ≪ the original by construction)
-    // pass an explicit low count. Default (r17): sized from the edge
-    // frame's statistics — see sizedLoopParts; big graphs keep the
-    // session shuffle partitions, small ones stop paying the session
-    // floor per superstep.
-    val base = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-    val und = base
-      .repartition(numPartitions.getOrElse(sizedLoopPartsFromStats(edges)),
-        col("src"))
-      .persist()
+    // src-partitioned: the superstep joins on dst and BOTH aggs
+    // ((src,label) counts, then the per-src argmax) cluster on src
+    val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
     // exact-count fallback: only evaluated when the stats bound refuses
     // (dense-graph regime) — one distinct-count over the edge cache buys
     // maxIter exchange-free supersteps. The probed vertex frame is
@@ -270,8 +291,7 @@ object GraphOps {
     val labels = lpaSupersteps(und, maxIter, bc,
       seed = if (vertsProbed) Some(verts) else None)
     if (vertsProbed) verts.unpersist(blocking = false)
-    und.unpersist(blocking = false)
-    if (ownPre) pre.unpersist(blocking = false)
+    release()
     labels
   }
 
@@ -347,43 +367,45 @@ object GraphOps {
   def ccEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 20,
       broadcastState: Option[Boolean] = None,
       numPartitions: Option[Int] = None): DataFrame = {
-    val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ownPre = !callerCached(edges)
-    // localCheckpoint, NOT persist: the superstep loop references this
-    // frame twice per superstep and every block action re-renders the
-    // full logical plan — persist caches the DATA but keeps the deep
-    // caller lineage in the plan, and a kmeans-chain input made CC on a
-    // 1,168-edge τ-graph take 85 s in plan-rendering time alone (q143).
-    // Truncation roots every superstep plan at a LogicalRDD leaf; lazy,
-    // so the first block action is still the materializer.
-    val pre = if (ownPre) pre0.localCheckpoint(eager = false) else pre0
-    val labels = ccMinSupersteps(pre,
-      numPartitions.getOrElse(sizedLoopPartsFromStats(edges)), maxIter,
-      broadcastState, edges)
-    if (ownPre) releaseLocalCheckpoint(pre) // labels are materialized
-    labels
+    val parts = numPartitions.getOrElse(sizedLoopPartsFromStats(edges))
+    truncatedCc(edges, srcCol, dstCol)(
+      ccMinSupersteps(_, _, _, parts, maxIter, broadcastState, edges))
   }
 
-  /** The [[ccEdges]] supersteps over a lineage-truncated `(src, dst)`
-    * frame the caller owns; `edges` is the frame whose statistics bound
-    * the vertex count for the state-join strategy. Returns the last
-    * block's checkpoint. */
-  private def ccMinSupersteps(pre: DataFrame, parts: Int, maxIter: Int,
-      broadcastState: Option[Boolean], edges: DataFrame): DataFrame = {
-    val und0 = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
+  /** Runs a CC loop over `edges` with its lineage truncated: the
+    * caller's frame and columns when [[loopInputMaterialized]], else a
+    * lazy checkpoint of the `(src, dst)` projection, released once the
+    * loop's materialized labels are back. A checkpoint, not a persist:
+    * the loop re-renders its whole plan at every block action, and a
+    * persist keeps the caller's lineage in that plan (a kmeans-chain
+    * input once made CC on a 1,168-edge τ-graph take 85 s in plan
+    * rendering alone, q143). Lazy, so the loop's first action is still
+    * the materializer. */
+  private def truncatedCc(edges: DataFrame, srcCol: String, dstCol: String)(
+      loop: (DataFrame, String, String) => DataFrame): DataFrame =
+    if (loopInputMaterialized(edges)) loop(edges, srcCol, dstCol)
+    else {
+      val pre = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .localCheckpoint(eager = false)
+      val labels = loop(pre, "src", "dst")
+      releaseLocalCheckpoint(pre)
+      labels
+    }
+
+  /** The [[ccEdges]] supersteps over a materialized edge frame; `edges`
+    * is the frame whose statistics bound the vertex count for the
+    * state-join strategy. Returns the last block's checkpoint. */
+  private def ccMinSupersteps(in: DataFrame, srcCol: String, dstCol: String,
+      parts: Int, maxIter: Int, broadcastState: Option[Boolean],
+      edges: DataFrame): DataFrame = {
     // Self-loops make the superstep a pure aggregation over the static
     // edge table — new label = min over (self ∪ neighbors) — so the
     // previous state is referenced exactly ONCE per superstep and a
     // lazily-chained block stays a LINEAR plan (the SuperstepBlock
     // invariant; the earlier labels ⋈ nbrMin form referenced the state
     // twice and doubled the subtree per chained step).
-    // src-partitioned (the superstep aggregation key) + broadcast labels
-    // per superstep — exchange-free over the edges after one setup
-    // shuffle (the lpaEdges discipline)
-    val undBase = und0
-      .union(und0.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst")))
-    val und = undBase.repartition(parts, col("src")).persist()
+    val (und, release) = undirectedCache(in, srcCol, dstCol, "src",
+      Some(parts), selfLoops = true)
     // exact-count fallback (evaluated only when the stats bound refuses);
     // the probe PERSISTS the vertex frame it counts and the label seed
     // reuses it, so the dense regime pays the vertex distinct once, not
@@ -412,7 +434,7 @@ object GraphOps {
           .agg(min(col("label")).as("label"))
       }
       // a checkpoint: the next block's plan roots at its leaf, and the
-      // returned labels never reach the caller's released `pre`
+      // returned labels never reach the input checkpoint released after
       val snap = labels.localCheckpoint(eager = false)
       // ONE action materializes the snapshot AND reads the convergence
       // sum (the first action on a lazy checkpoint fills its blocks
@@ -431,7 +453,7 @@ object GraphOps {
       iter += steps
     }
     if (vertsProbed) verts.unpersist(blocking = false)
-    und.unpersist(blocking = false)
+    release()
     labels.withColumnRenamed("label", "component")
   }
 
@@ -460,13 +482,8 @@ object GraphOps {
     * diameter. Returns (id, component). */
   def ccStarEdges(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30, numPartitions: Option[Int] = None): DataFrame = {
-    val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ownPre = !callerCached(edges)
-    val pre = if (ownPre) pre0.localCheckpoint(eager = false) else pre0
-    val labels = ccStarRounds(pre,
-      numPartitions.getOrElse(sizedLoopPartsFromStats(edges)), maxIter)
-    if (ownPre) releaseLocalCheckpoint(pre)
-    labels
+    val parts = numPartitions.getOrElse(sizedLoopPartsFromStats(edges))
+    truncatedCc(edges, srcCol, dstCol)(ccStarRounds(_, _, _, parts, maxIter))
   }
 
   /** Connected components by graph size: the one place the GraphX /
@@ -519,8 +536,8 @@ object GraphOps {
       else {
         val view = cached.localCheckpoint(eager = false)
         val labels =
-          if (pointerJumping) ccStarRounds(view, parts, maxIter)
-          else ccMinSupersteps(view, parts, maxIter, None, view)
+          if (pointerJumping) ccStarRounds(view, "src", "dst", parts, maxIter)
+          else ccMinSupersteps(view, "src", "dst", parts, maxIter, None, view)
         releaseLocalCheckpoint(view)
         labels
       }
@@ -530,19 +547,17 @@ object GraphOps {
     GraftSqlBridge.withRowBound(comp, BigInt(rows) * 2)
   }
 
-  /** The [[ccStarEdges]] rounds over a lineage-truncated `(src, dst)`
-    * frame the caller owns. Returns the last round's checkpoint. */
-  private def ccStarRounds(pre: DataFrame, parts: Int,
-      maxIter: Int): DataFrame = {
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(parts, col("src"))
-      .persist()
+  /** The [[ccStarEdges]] rounds over a materialized edge frame. Returns
+    * the last round's checkpoint. */
+  private def ccStarRounds(in: DataFrame, srcCol: String, dstCol: String,
+      parts: Int, maxIter: Int): DataFrame = {
+    val (und, release) = undirectedCache(in, srcCol, dstCol, "src", Some(parts))
     // NOT checkpointed (round 15, r14 verdict item 3 — one driver gate
     // fewer): round 1 references this twice, recomputing the distinct
     // from und's cache — one extra in-job scan, no extra gate; round 2
     // onward reads the round-1 checkpoint. The `init eq labels` guard
-    // below keeps releaseLocalCheckpoint away from it — its leaf is the
-    // caller's pre checkpoint, whose blocks the loop still needs.
+    // below keeps releaseLocalCheckpoint away from it — its leaves are
+    // the input frame's, whose blocks the loop still needs.
     val init = und.select(col("src").as("id")).distinct()
       .withColumn("l", col("id"))
     var labels = init
@@ -579,7 +594,7 @@ object GraphOps {
       labels = doubled
       iter += 1
     }
-    und.unpersist(blocking = false)
+    release()
     labels.withColumnRenamed("l", "component")
   }
 
@@ -727,74 +742,13 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampingPct: Long = 85L,
       scale: Long = 1000000000000L,
-      broadcastState: Option[Boolean] = None): DataFrame = {
-    // The undirected expansion is cached PRE-PARTITIONED ON dst — the
-    // per-iteration aggregation key. Each iteration joins the edge list
-    // on src against the vertex-sized state as a BROADCAST (hinted), so
-    // the cached dst-partitioning flows through the join and the
-    // groupBy(dst) plans NO exchange: after one setup shuffle, every
-    // iteration is exchange-free over the edges (the GraphX
-    // EdgePartition idea expressed in Catalyst). At vertex counts too
-    // large to broadcast, drop the hint and repartition the state on the
-    // join key instead — the edge side still never re-shuffles; only the
-    // vertex-sized state moves per iteration.
-    val pre = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(sizedLoopPartsFromStats(edges), col("dst"))
-      .persist()
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .persist()
-    val n = deg.count() // one scalar agg job; also materializes deg + und
-    // n IS the vertex count — the exact-fallback resolution is free here.
-    // stateCopies: PR blocks chain 2·SuperstepBlock lazy steps per job,
-    // each pinning its own state broadcast — budget all 8, not 4
-    val bc = resolveBroadcastStateExact(broadcastState, edges, n,
-      stateCopies = 2 * SuperstepBlock)
-    if (n == 0) { // empty edge set: no vertices, no rank mass to divide
-      und.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      return deg.select(col("id"), lit(0L).as("pr"))
+      broadcastState: Option[Boolean] = None): DataFrame =
+    rankLoop(edges, srcCol, dstCol, None, count(lit(1)).as("deg"), iters,
+        dampingPct, broadcastState) { (deg, n) =>
+      val unit = scale / n
+      RankTerms(deg, lit(unit), shareOverDeg, sum(col("share")),
+        lit(((100L - dampingPct) * unit) / 100L))
     }
-    val unit = scale / n
-    val base = ((100L - dampingPct) * unit) / 100L
-    // State carries (id, deg, pr): deg is STATIC (cached once above), so
-    // each iteration references the previous state exactly once — the
-    // chain is a linear plan and a whole block runs as one job (see
-    // SuperstepBlock). share = pr div deg needs no join; the only
-    // per-iteration shuffles are the edge list grouped on dst and the
-    // small state⋈incoming equi-join, identical shuffle structure to
-    // real distributed PageRank.
-    var st = deg.select(col("id"), col("deg"), lit(unit).as("pr"))
-    var cached: Option[DataFrame] = None
-    var done = 0
-    while (done < iters) {
-      val steps = math.min(2 * SuperstepBlock, iters - done)
-      for (_ <- 1 to steps) {
-        val incoming = und
-          .join(stateSide(
-            st.select(col("id").as("src"), expr("pr div deg").as("share")),
-            bc), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(sum(col("share")).as("s"))
-        // left join keeps isolated-in-degree vertices (none in an
-        // undirected expansion, but the guard costs nothing)
-        st = deg
-          .join(incoming, Seq("id"), "left")
-          .select(col("id"), col("deg"),
-            (lit(base) + expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("pr"))
-      }
-      val snap = st.persist()
-      snap.count()
-      cached.foreach(_.unpersist(blocking = false))
-      cached = Some(snap)
-      st = snap
-      done += steps
-    }
-    val out = st.select(col("id"), col("pr"))
-    und.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
-  }
 
   /** PERSONALIZED PageRank in the same fixed-point integer arithmetic as
     * [[pageRankFixedPoint]]: all teleport mass returns to ONE anchor
@@ -812,70 +766,21 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String, anchor: DataFrame,
       iters: Int, dampingPct: Long = 85L,
       scale: Long = 1000000000000L,
-      broadcastState: Option[Boolean] = None): DataFrame = {
-    // dst-partitioned undirected cache + broadcast state joins — the
-    // exchange-free iteration discipline; see pageRankFixedPoint
-    val pre = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(sizedLoopPartsFromStats(edges), col("dst"))
-      .persist()
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .persist()
-    val n = deg.count()
-    // 2·SuperstepBlock lazy steps per block job (see pageRankFixedPoint)
-    val bc = resolveBroadcastStateExact(broadcastState, edges, n,
-      stateCopies = 2 * SuperstepBlock)
-    if (n == 0) {
-      und.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      return deg.select(col("id"), lit(0L).as("pr"))
+      broadcastState: Option[Boolean] = None): DataFrame =
+    rankLoop(edges, srcCol, dstCol, None, count(lit(1)).as("deg"), iters,
+        dampingPct, broadcastState) { (deg, _) =>
+      // min(id), not limit(1): an unordered limit over a multi-row anchor
+      // frame is nondeterministic (round-5 advice) — the walk must be a
+      // pure function of the input.
+      val a = broadcast(anchor
+        .agg(min(col(anchor.columns.head)).as("id"))
+        .filter(col("id").isNotNull)
+        .withColumn("isa", lit(1L)))
+      val degA = deg.join(a, Seq("id"), "left")
+        .select(col("id"), col("deg"), coalesce(col("isa"), lit(0L)).as("isa"))
+      RankTerms(degA, col("isa") * scale, shareOverDeg, sum(col("share")),
+        col("isa") * (((100L - dampingPct) * scale) / 100L))
     }
-    val base = ((100L - dampingPct) * scale) / 100L
-    // min(id), not limit(1): an unordered limit over a multi-row anchor
-    // frame is nondeterministic (round-5 advice) — the walk must be a
-    // pure function of the input.
-    val a = broadcast(anchor
-      .agg(min(col(anchor.columns.head)).as("id"))
-      .filter(col("id").isNotNull)
-      .withColumn("isa", lit(1L)))
-    // STATIC (id, deg, isa) frame cached once — each iteration rebuilds
-    // the state from it and references the previous state exactly once
-    // (via `incoming`), keeping the superstep chain a linear plan (the
-    // pageRankFixedPoint discipline)
-    val degA = deg.join(a, Seq("id"), "left")
-      .select(col("id"), col("deg"), coalesce(col("isa"), lit(0L)).as("isa"))
-      .persist()
-    var st = degA.withColumn("pr", col("isa") * scale)
-    var cached: Option[DataFrame] = None
-    var done = 0
-    while (done < iters) {
-      val steps = math.min(2 * SuperstepBlock, iters - done)
-      for (_ <- 1 to steps) {
-        val incoming = und
-          .join(stateSide(
-            st.select(col("id").as("src"), expr("pr div deg").as("share")),
-            bc), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(sum(col("share")).as("s"))
-        st = degA
-          .join(incoming, Seq("id"), "left")
-          .select(col("id"), col("deg"), col("isa"),
-            (col("isa") * base +
-              expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("pr"))
-      }
-      val snap = st.persist()
-      snap.count()
-      cached.foreach(_.unpersist(blocking = false))
-      cached = Some(snap)
-      st = snap
-      done += steps
-    }
-    val out = st.select(col("id"), col("pr"))
-    und.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    degA.unpersist(blocking = false)
-    out
-  }
 
   /** WEIGHTED PageRank in the same fixed-point integer arithmetic as
     * [[pageRankFixedPoint]]: each undirected edge carries a positive
@@ -899,55 +804,85 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iters: Int, dampingPct: Long = 85L,
       scale: Long = 1000000000000L,
-      broadcastState: Option[Boolean] = None): DataFrame = {
-    val pre = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("long").as("w"))
-    val und = pre
-      .union(pre.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .repartition(sizedLoopPartsFromStats(edges), col("dst"))
-      .persist()
-    val deg = und.groupBy(col("src").as("id")).agg(sum(col("w")).as("wdeg"))
-      .persist()
-    val n = deg.count()
-    // 2·SuperstepBlock lazy steps per block job (see pageRankFixedPoint)
+      broadcastState: Option[Boolean] = None): DataFrame =
+    rankLoop(edges, srcCol, dstCol, Some(weightCol), sum(col("w")).as("wdeg"),
+        iters, dampingPct, broadcastState) { (deg, n) =>
+      val unit = scale / n
+      // the share (pr·w) div wdeg needs the edge's w, so it is computed
+      // after the edge⋈state join instead of on the state side
+      RankTerms(deg, lit(unit), _.select(col("id").as("src"), col("pr"), col("wdeg")),
+        sum(expr("(pr * w) div wdeg")), lit(((100L - dampingPct) * unit) / 100L))
+    }
+
+  /** The unweighted per-edge share: computed once per vertex, state-side. */
+  private val shareOverDeg: DataFrame => DataFrame =
+    _.select(col("id").as("src"), expr("pr div deg").as("share"))
+
+  /** What one fixed-point PageRank variant adds to [[rankLoop]]: the
+    * static per-vertex frame each step rebuilds the state from, the
+    * starting rank, the state columns the edges read (keyed on `src`),
+    * the per-edge share summed at `dst`, and the teleport term. */
+  private final case class RankTerms(static: DataFrame, start: Column,
+      edgeSide: DataFrame => DataFrame, share: Column, teleport: Column)
+
+  /** The loop of the three fixed-point PageRank variants. It owns the
+    * dst-partitioned [[undirectedCache]] (each step joins the state on
+    * src and aggregates on dst, so no step re-shuffles the edges), the
+    * degree frame (`degree` per `src`) and its count n, the state-join
+    * decision, the empty-graph return and the block loop; `terms` builds
+    * the variant's part from the degree frame and n. The state is (id,
+    * static columns, pr) and the static frame is cached once, so each
+    * step references the previous state exactly once: the chain is a
+    * linear plan and a block of 2·SuperstepBlock steps runs as one job.
+    * Every step is pr' = teleport + (damping% · Σ shares) div 100.
+    * Returns (id, pr), persisted; everything else is released. */
+  private def rankLoop(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], degree: Column, iters: Int,
+      dampingPct: Long, broadcastState: Option[Boolean])(
+      terms: (DataFrame, Long) => RankTerms): DataFrame = {
+    val (und, release) = undirectedCache(edges, srcCol, dstCol, "dst",
+      weightCol = weightCol)
+    val deg = und.groupBy(col("src").as("id")).agg(degree).persist()
+    val n = deg.count() // one scalar agg job; also materializes deg + und
+    // n IS the vertex count — the exact-fallback resolution is free here.
+    // stateCopies: a block chains 2·SuperstepBlock lazy steps per job,
+    // each pinning its own state broadcast — budget all 8, not 4
     val bc = resolveBroadcastStateExact(broadcastState, edges, n,
       stateCopies = 2 * SuperstepBlock)
-    if (n == 0) {
-      und.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      return deg.select(col("id"), lit(0L).as("pr"))
-    }
-    val unit = scale / n
-    val base = ((100L - dampingPct) * unit) / 100L
-    // state = (id, wdeg, pr); wdeg static. The per-edge proportional
-    // share (pr·w) div wdeg is computed AFTER the edge⋈state join (it
-    // needs w), unlike the unweighted variant where the share is
-    // state-side — same shuffle structure either way.
-    var st = deg.select(col("id"), col("wdeg"), lit(unit).as("pr"))
-    var cached: Option[DataFrame] = None
-    var done = 0
-    while (done < iters) {
-      val steps = math.min(2 * SuperstepBlock, iters - done)
-      for (_ <- 1 to steps) {
-        val incoming = und
-          .join(stateSide(st.select(col("id").as("src"), col("pr"), col("wdeg")),
-            bc), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(sum(expr("(pr * w) div wdeg")).as("s"))
-        st = deg
-          .join(incoming, Seq("id"), "left")
-          .select(col("id"), col("wdeg"),
-            (lit(base) + expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("pr"))
+    // empty edge set: no vertices, no rank mass to divide
+    val out = if (n == 0) deg.select(col("id"), lit(0L).as("pr")) else {
+      val t = terms(deg, n)
+      val static = if (t.static eq deg) deg else t.static.persist()
+      val kept = static.columns.toSeq.map(col)
+      var st = static.withColumn("pr", t.start)
+      var cached: Option[DataFrame] = None
+      var done = 0
+      while (done < iters) {
+        val steps = math.min(2 * SuperstepBlock, iters - done)
+        for (_ <- 1 to steps) {
+          val incoming = und
+            .join(stateSide(t.edgeSide(st), bc), "src")
+            .groupBy(col("dst").as("id"))
+            .agg(t.share.as("s"))
+          // left join keeps isolated-in-degree vertices (none in an
+          // undirected expansion, but the guard costs nothing)
+          st = static
+            .join(incoming, Seq("id"), "left")
+            .select(kept :+ (t.teleport +
+              expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("pr"): _*)
+        }
+        val snap = st.persist()
+        snap.count()
+        cached.foreach(_.unpersist(blocking = false))
+        cached = Some(snap)
+        st = snap
+        done += steps
       }
-      val snap = st.persist()
-      snap.count()
-      cached.foreach(_.unpersist(blocking = false))
-      cached = Some(snap)
-      st = snap
-      done += steps
+      if (static ne deg) static.unpersist(blocking = false)
+      st.select(col("id"), col("pr"))
     }
-    val out = st.select(col("id"), col("pr"))
-    und.unpersist(blocking = false)
+    release()
     deg.unpersist(blocking = false)
     out
   }
@@ -961,48 +896,45 @@ object GraphOps {
   def bfsLevels(
       edges: DataFrame, srcCol: String, dstCol: String,
       anchor: DataFrame, maxHops: Int,
-      broadcastState: Option[Boolean] = None): DataFrame = {
-    // The undirected expansion is cached PRE-PARTITIONED ON dst — the
-    // per-hop dedup key. Each hop joins on src against the (small)
-    // frontier as a BROADCAST and anti-joins the visited union the same
-    // way, so the hop's distinct reuses the cached partitioning and
-    // plans NO exchange: after one setup shuffle, every hop is
-    // exchange-free over the edges (see lpaEdges for the at-scale
-    // variant without the broadcast hint). (Negative result, measured
-    // round 5: chaining all hops in ONE lazy plan is ~2× SLOWER than the
-    // per-hop barriers below — the later seen-sets re-reference earlier
-    // layer subtrees and ReuseExchange does not collapse the duplicated
-    // cache-scan+join work. Frontier BFS keeps each hop's work linear
-    // precisely because the layers are materialized.)
-    val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ownPre = !callerCached(edges)
-    val pre = if (ownPre) pre0.persist() else pre0
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(sizedLoopPartsFromStats(edges), col("dst"))
-      .persist()
+      broadcastState: Option[Boolean] = None): DataFrame =
+    frontierBfs(edges, srcCol, dstCol,
+        anchor.select(col(anchor.columns.head).as("id")).distinct(),
+        maxHops, broadcastState)(
+      _.select(col("dst").as("id")).distinct())
+
+  /** The frontier loop of [[bfsLevels]] and [[multiSourceBfs]]. `seeds`
+    * is level 0: (id, carried columns…). Each hop joins the frontier (id
+    * as src, carried columns) into the dst-partitioned
+    * [[undirectedCache]], `reach` folds the joined rows to one per
+    * reached dst (as id), and an anti-join drops the visited set. The
+    * frontier and the visited set are broadcast, so the hop's aggregate
+    * reuses the cached partitioning and plans no exchange over the
+    * edges. Only the per-hop layer is persisted; the visited set is the
+    * lazy union of the cached layers, so each hop is one job; an empty
+    * layer ends the search. (Negative result, measured round 5: chaining
+    * all hops in ONE lazy plan is ~2× SLOWER than the per-hop barriers —
+    * the later seen-sets re-reference earlier layer subtrees and
+    * ReuseExchange does not collapse the duplicated cache-scan+join
+    * work.) Returns the union of the layers, persisted; everything else
+    * is released. */
+  private def frontierBfs(
+      edges: DataFrame, srcCol: String, dstCol: String, seeds: DataFrame,
+      maxHops: Int, broadcastState: Option[Boolean])(
+      reach: DataFrame => DataFrame): DataFrame = {
+    val (und, release) = undirectedCache(edges, srcCol, dstCol, "dst")
     // frontier ∪ visited state is bounded by the vertex count — the
     // exact fallback only runs when the stats bound refuses (dense graph)
     val bc = resolveBroadcastStateExact(broadcastState, edges,
       und.select(col("src")).distinct().count())
-    // Only the per-hop FRONTIER is persisted (the working set); the
-    // visited set is the lazy union of the cached layers, so each hop is
-    // one job (frontier join → dedup → anti-join vs cached layers) and
-    // nothing is re-cached as the visited set grows. Empty frontier →
-    // early exit.
-    var frontier = anchor.select(col(anchor.columns.head).as("id"))
-      .distinct()
-      .withColumn("level", lit(0))
-      .persist()
+    val side = col("id").as("src") +: seeds.columns.toSeq.tail.map(col)
+    var frontier = seeds.withColumn("level", lit(0)).persist()
     frontier.count()
     var layers = List(frontier)
     var h = 1
     var exhausted = false
     while (h <= maxHops && !exhausted) {
       val seen = layers.map(_.select("id")).reduce(_ unionByName _)
-      val next = und
-        .join(stateSide(frontier.select(col("id").as("src")), bc),
-          "src")
-        .select(col("dst").as("id")).distinct()
+      val next = reach(und.join(stateSide(frontier.select(side: _*), bc), "src"))
         .join(stateSide(seen, bc), Seq("id"), "left_anti")
         .withColumn("level", lit(h))
         .persist()
@@ -1015,8 +947,7 @@ object GraphOps {
     // single-layer search: reduce returns the anchor frontier itself —
     // unpersisting it would uncache the value being returned
     layers.filterNot(_ eq out).foreach(_.unpersist(blocking = false))
-    und.unpersist(blocking = false)
-    if (ownPre) pre.unpersist(blocking = false)
+    release()
     out
   }
 
@@ -1325,8 +1256,7 @@ object GraphOps {
     * guarantee this function exists to provide. `maxIter` bounds
     * pointer-jumping ROUNDS (each round halves label-chain lengths, so
     * the default 20 covers components of ~2^20 hops — every real
-    * graph); `broadcastState` is kept for signature compatibility but
-    * neither engine consults it.
+    * graph).
     *
     * Scale shape: two vertex-sized equi-joins to mark intra edges
     * (AQE broadcasts the assignment when it fits) + the CC loop bounded
@@ -1339,7 +1269,6 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       assignment: DataFrame, idCol: String, labelCol: String,
       maxIter: Int = 20,
-      broadcastState: Option[Boolean] = None,
       graphxMaxEdges: Long = 50000L): DataFrame = {
     val asg = assignment.select(col(idCol).as("id"), col(labelCol).as("c"))
     val intra = edges
@@ -1400,8 +1329,7 @@ object GraphOps {
     // split then touches only its own frames.
     val splits = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
       wellConnectedSplit(edges, srcCol, dstCol,
-          refined.filter(col("gamma_pct") === g), "id", "label",
-          broadcastState = broadcastState)
+          refined.filter(col("gamma_pct") === g), "id", "label")
         .select(lit(g).as("gamma_pct"), col("id"), col("label"))
     }
     releaseLocalCheckpoint(refined)
@@ -1428,8 +1356,7 @@ object GraphOps {
       gammaPct: Long = 100L): DataFrame = {
     val refined = louvainRefine(edges, srcCol, dstCol, assignment, idCol,
       labelCol, rounds, broadcastState, gammaPct)
-    wellConnectedSplit(edges, srcCol, dstCol, refined, "id", "label",
-      broadcastState = broadcastState)
+    wellConnectedSplit(edges, srcCol, dstCol, refined, "id", "label")
   }
 
   /** Multi-resolution form of [[louvainRefine]]: run the gated
@@ -1450,13 +1377,7 @@ object GraphOps {
       numPartitions: Option[Int] = None): DataFrame = {
     require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
       s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
-    val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ownPre = !callerCached(edges)
-    val pre = if (ownPre) pre0.persist() else pre0
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(numPartitions.getOrElse(sizedLoopPartsFromStats(edges)),
-        col("src"))
-      .persist()
+    val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("kv"))
       .persist()
     // no und.count() here (r14 verdict item 3): refineCore's initial
@@ -1469,9 +1390,8 @@ object GraphOps {
     val bc = resolveBroadcastStateExact(broadcastState, edges, deg.count())
     val out = refineCore(und, deg, bc, assignment, idCol, labelCol,
       rounds, gammaPcts)
-    und.unpersist(blocking = false)
+    release()
     deg.unpersist(blocking = false)
-    if (ownPre) pre.unpersist(blocking = false)
     out
   }
 
@@ -1490,13 +1410,7 @@ object GraphOps {
       numPartitions: Option[Int] = None): DataFrame = {
     require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
       s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
-    val pre0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val ownPre = !callerCached(edges)
-    val pre = if (ownPre) pre0.persist() else pre0
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(numPartitions.getOrElse(sizedLoopPartsFromStats(edges)),
-        col("src"))
-      .persist()
+    val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("kv"))
       .persist()
     // exact-count fallback, as in louvainRefineMulti: the LPA supersteps
@@ -1517,9 +1431,8 @@ object GraphOps {
     val refined = refineCore(und, deg, bc, lpa, "id", "label",
       rounds, gammaPcts)
     lpa.unpersist(blocking = false)
-    und.unpersist(blocking = false)
+    release()
     deg.unpersist(blocking = false)
-    if (ownPre) pre.unpersist(blocking = false)
     refined
   }
 
@@ -1713,12 +1626,13 @@ object GraphOps {
     // a persisted `out` leaves the γ-branch union plan alive behind the
     // cache entry, and a consumer re-plan that bypasses the cache (the
     // well-connectedness split under AQE-off executed exactly that raw
-    // plan — AqeOffRepro: the failing stage's RDD graph held the three
-    // γ checkpoint RDDs directly, with out's 8/8-cached buffers absent)
-    // walks straight into the per-γ checkpoints released below —
+    // plan: the failing stage's RDD graph held the three γ checkpoint
+    // RDDs directly, with out's cached buffers absent) walks straight
+    // into the per-γ checkpoints released below —
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Truncating to a LogicalRDD
     // makes the release provably safe: no downstream plan can reference
     // the γ frames at all. Same single materializing action either way.
+    // GraphSpec re-reads the ladder output with AQE on and off.
     val out = finals.map { case (g, asg, _) =>
       assignment
         .select(col(idCol).as("id"), col(labelCol).as("label"))
@@ -1795,44 +1709,12 @@ object GraphOps {
   def multiSourceBfs(
       edges: DataFrame, srcCol: String, dstCol: String,
       anchors: DataFrame, maxHops: Int,
-      broadcastState: Option[Boolean] = None): DataFrame = {
-    // dst-partitioned undirected cache + broadcast frontier/seen — the
-    // exchange-free hop discipline (see bfsLevels)
-    val pre = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val und = pre.union(pre.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(sizedLoopPartsFromStats(edges), col("dst"))
-      .persist()
-    val bc = resolveBroadcastStateExact(broadcastState, edges,
-      und.select(col("src")).distinct().count())
-    var frontier = anchors
-      .select(col(anchors.columns.head).as("id"))
-      .distinct()
-      .select(col("id"), col("id").as("landmark"))
-      .withColumn("level", lit(0))
-      .persist()
-    frontier.count()
-    var layers = List(frontier)
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      val seen = layers.map(_.select("id")).reduce(_ unionByName _)
-      val next = und
-        .join(stateSide(frontier.select(col("id").as("src"), col("landmark")),
-          bc), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("landmark")).as("landmark"))
-        .join(stateSide(seen, bc), Seq("id"), "left_anti")
-        .withColumn("level", lit(h))
-        .persist()
-      if (next.count() == 0) { next.unpersist(blocking = false); exhausted = true }
-      else { layers = layers :+ next; frontier = next }
-      h += 1
-    }
-    val out = layers.reduce(_ unionByName _).persist()
-    out.count()
-    layers.filterNot(_ eq out).foreach(_.unpersist(blocking = false))
-    und.unpersist(blocking = false)
-    out
-  }
+      broadcastState: Option[Boolean] = None): DataFrame =
+    frontierBfs(edges, srcCol, dstCol,
+        anchors.select(col(anchors.columns.head).as("id")).distinct()
+          .select(col("id"), col("id").as("landmark")),
+        maxHops, broadcastState)(
+      _.groupBy(col("dst").as("id")).agg(min(col("landmark")).as("landmark")))
 
   /** G5 multi-hop as edge-DataFrame self-joins — anchor → 1-hop mids →
     * 2-hop neighbors with path counts. Stays hash-joinable (two shuffles

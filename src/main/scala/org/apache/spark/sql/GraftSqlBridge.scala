@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
@@ -9,12 +9,26 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Bridge into `private[sql]` Spark internals: the Column↔Expression
   * converters — the standard hook point for libraries that define custom
   * Catalyst expressions on Spark 4 (where `Column` wraps a ColumnNode, not
-  * an Expression) — and the statistics of a checkpoint leaf. Kept to
-  * exactly these three calls.
+  * an Expression) — and the checkpoint leaf of a plan. Kept to exactly
+  * these four calls.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `df`'s checkpoint leaf and a rebuild of its plan over another leaf,
+    * when the analyzed plan is a `LogicalRDD`, bare or under one
+    * projection — the shape `localCheckpoint` (eager or lazy) returns. */
+  private def checkpointLeaf(
+      df: DataFrame): Option[(LogicalRDD, LogicalRDD => LogicalPlan)] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some((l, identity))
+      case p @ Project(_, l: LogicalRDD) => Some((l, leaf => p.copy(child = leaf)))
+      case _ => None
+    }
+
+  /** True when `df` is a checkpoint, bare or under one projection. */
+  def isCheckpoint(df: DataFrame): Boolean = checkpointLeaf(df).isDefined
 
   /** `df` — a checkpoint leaf, bare or under one projection — with the
     * leaf's size bounded by `maxRows` rows. A lazy `localCheckpoint`
@@ -29,11 +43,9 @@ object GraftSqlBridge {
     // a transform would keep the original
     def bound(l: LogicalRDD) = l.copy()(session,
       Some(Statistics(EstimationUtils.getSizePerRow(l.output) * maxRows)), None)
-    df.queryExecution.analyzed match {
-      case l: LogicalRDD => classic.Dataset.ofRows(session, bound(l))
-      case p @ Project(_, l: LogicalRDD) =>
-        classic.Dataset.ofRows(session, p.copy(child = bound(l)))
-      case _ => df
+    checkpointLeaf(df) match {
+      case Some((l, rebuild)) => classic.Dataset.ofRows(session, rebuild(bound(l)))
+      case None => df
     }
   }
 }

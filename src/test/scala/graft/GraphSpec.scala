@@ -560,6 +560,55 @@ class GraphSpec extends SparkSpec {
       12L -> 12L, 13L -> 12L, 30L -> 30L))
   }
 
+  test("loop-input rule: cached frames and checkpoints are materialized, scans and joins are not") {
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val dir = java.nio.file.Files.createTempDirectory("graft_loop_input").toString
+    e.write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val persisted = scan.filter(col("src") > 1L).persist()
+    val eager = e.localCheckpoint()
+    val lazyCp = e.localCheckpoint(eager = false)
+    val underSelect = eager.select(col("dst").as("a"), col("src").as("b"))
+    for ((name, df) <- Seq("persisted" -> persisted, "eager checkpoint" -> eager,
+        "lazy checkpoint" -> lazyCp, "checkpoint under a select" -> underSelect))
+      assert(GraphOps.loopInputMaterialized(df), s"$name should count as materialized")
+    assert(!GraphOps.loopInputMaterialized(scan), "a parquet scan is not materialized")
+    assert(!GraphOps.loopInputMaterialized(scan.join(e, "src")), "a join is not materialized")
+    persisted.unpersist()
+    Seq(eager, lazyCp).foreach(GraphOps.releaseLocalCheckpoint)
+  }
+
+  test("the PageRank and BFS loops leave only their output registered, on uncached and checkpointed input") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val raw = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 5L), (10L, 11L, 1L))
+      .toDF("src", "dst", "w")
+    val anchor = Seq(1L).toDF("id")
+    val sc = spark.sparkContext
+    val loops = Seq[(String, DataFrame => DataFrame)](
+      "pageRankFixedPoint" -> (GraphOps.pageRankFixedPoint(_, "src", "dst", iters = 3)),
+      "personalizedPageRankFixedPoint" ->
+        (GraphOps.personalizedPageRankFixedPoint(_, "src", "dst", anchor, iters = 3)),
+      "weightedPageRankFixedPoint" ->
+        (GraphOps.weightedPageRankFixedPoint(_, "src", "dst", "w", iters = 3)),
+      "bfsLevels" -> (GraphOps.bfsLevels(_, "src", "dst", anchor, maxHops = 2)),
+      "multiSourceBfs" -> (GraphOps.multiSourceBfs(_, "src", "dst", anchor, maxHops = 2)))
+    val cp = raw.localCheckpoint()
+    for ((input, e) <- Seq("uncached" -> raw, "checkpointed" -> cp);
+         (name, run) <- loops) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run(e)
+      val own = out.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+      }.toSet
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(own.size == 1 && left == own, s"$name on the $input input: left $left, output $own")
+      assert(out.count() > 0L)
+      own.foreach(sc.getPersistentRDDs(_).unpersist())
+    }
+    GraphOps.releaseLocalCheckpoint(cp)
+  }
+
   test("louvainRefineMulti: concurrent ladder equals sequential per-gamma runs") {
     // The multi-γ ladder materializes its γ loops CONCURRENTLY (round 14,
     // Concurrent.mapInParallel); a single-γ call short-circuits to the
