@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.obs.span
+
 /** Deduplication operator library — the training-data-pipeline extensions
   * from the brief (exact, MinHash+LSH, SimHash, n-gram Jaccard), designed
   * for 100 TB corpora:
@@ -400,7 +402,7 @@ object Dedup {
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       jaccNum: Int = 1, jaccDen: Int = 2,
-      graphxMaxEdges: Long = 2000000L): DataFrame = {
+      graphxMaxEdges: Long = 2000000L): DataFrame = span("dedup.fuzzyDedup") {
     import graft.graph.GraphOps
     // the band pass is persisted: the cand subplan is embedded three
     // times in the verify stage (candIds inside both shingle-set sides
@@ -483,7 +485,7 @@ object Dedup {
   def writeBandIndex(
       table: String, corpus: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      buckets: Int = 8): Unit = {
+      buckets: Int = 8): Unit = span("dedup.writeBandIndex") {
     val spark = corpus.sparkSession
     graft.sinks.ManagedTables.dropTableAndLocation(spark, table)
     minhashBands(corpus, idCol, textCol, shingleN, numHashes, bands)
@@ -506,7 +508,7 @@ object Dedup {
   def appendBandIndex(
       table: String, batch: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      buckets: Int = 8): Unit = {
+      buckets: Int = 8): Unit = span("dedup.appendBandIndex") {
     minhashBands(batch, idCol, textCol, shingleN, numHashes, bands)
       .select(col(idCol).as("old_id"), col("band"), col("band_key"))
       .write.mode("append")

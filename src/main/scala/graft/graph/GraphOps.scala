@@ -4,6 +4,8 @@ import org.apache.spark.graphx.{Edge, EdgeTriplet, Graph, Pregel, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.obs.span
+
 /** Graph/community layer (SURVEY §2.10) on GraphX.
   *
   * Mirrors the reference's graph plane: bipartite graph build
@@ -131,7 +133,7 @@ object GraphOps {
     * broadcast. Expressed against optimizer statistics so resolving it
     * is job-free: edge rows from the plan's rowCount when the optimizer
     * has one, else sizeInBytes at the ~4 stats-bytes/row parquet scans
-    * propagate (measured in tools_dev.StatsProbe); vertices ≤ 2·edges. */
+    * propagate (OPTIMIZATION_r17.md, Change 1); vertices ≤ 2·edges. */
   private val BroadcastVertexLimit: Long = 50L * 1000 * 1000
   private val BroadcastEdgeBytesLimit: BigInt = BigInt(100L << 20)
 
@@ -179,10 +181,10 @@ object GraphOps {
         vertexCount * stateCopies <= BroadcastVertexLimit)
 
   /** Estimated edge rows from optimizer statistics — job-free. Parquet
-    * scan-derived frames propagate ~4 stats-bytes/row (measured in
-    * tools_dev.StatsProbe and re-confirmed by PartsProbe: the bipartite
-    * graph reads 2.24 MB of stats for 591 k true rows), so the estimate
-    * is the right order for every scan/aggregate-derived graph. JOIN
+    * scan-derived frames propagate ~4 stats-bytes/row (OPTIMIZATION_r17.md,
+    * Change 1: the bipartite graph reads 2.24 MB of stats for 591 k true
+    * rows), so the estimate is the right order for every
+    * scan/aggregate-derived graph. JOIN
     * products overestimate wildly (SizeInBytesOnly multiplies the
     * children: the 121 k-row co-purchase graph reads 3 TB) — which
     * [[sizedLoopParts]] degrades to the session default, never below
@@ -197,8 +199,9 @@ object GraphOps {
     * `shuffle.partitions = cpus` makes every near-empty superstep task
     * set pay the SESSION parallelism, not the data — the cached loop
     * frames compile without AQE, so runtime coalescing never reaches
-    * them; PartsProbe measured the ladder 2× faster at 8 partitions on
-    * the same 32 cores). Partitions = ceil(undRows / target) clamped to
+    * them; OPTIMIZATION_r17.md, Change 1 measured the ladder 2× faster
+    * at 8 partitions on the same 32 cores). Partitions =
+    * ceil(undRows / target) clamped to
     * [1, session shuffle partitions]: big graphs keep today's plans
     * exactly (the cap), small graphs stop paying the floor. The target
     * (default 100 k rows/partition — the constant communityLevels and
@@ -302,7 +305,8 @@ object GraphOps {
     * must localCheckpoint it, or the shared subtree re-prints/
     * re-optimizes exponentially. */
   private def lpaSupersteps(und: DataFrame, maxIter: Int, bc: Boolean,
-      seed: Option[DataFrame] = None, materializeLast: Boolean = true): DataFrame = {
+      seed: Option[DataFrame] = None, materializeLast: Boolean = true): DataFrame =
+      span("graph.lpaSupersteps") {
     // seed: a caller-persisted (id) vertex frame (the exact-count probe's)
     // — reused so the initial distinct isn't recomputed; must be released
     // by the caller AFTER this returns (the first block snapshot persists)
@@ -397,7 +401,7 @@ object GraphOps {
     * state-join strategy. Returns the last block's checkpoint. */
   private def ccMinSupersteps(in: DataFrame, srcCol: String, dstCol: String,
       parts: Int, maxIter: Int, broadcastState: Option[Boolean],
-      edges: DataFrame): DataFrame = {
+      edges: DataFrame): DataFrame = span("graph.ccMinSupersteps") {
     // Self-loops make the superstep a pure aggregation over the static
     // edge table — new label = min over (self ∪ neighbors) — so the
     // previous state is referenced exactly ONCE per superstep and a
@@ -511,8 +515,9 @@ object GraphOps {
     * supersteps instead of the pointer-jumping rounds (`maxIter` then
     * counts supersteps): semDedup's τ-graphs are near-cliques that
     * converge in the first superstep block, and forced onto the
-    * Catalyst side at sf0.1 (tools_dev.SemCcAb, 4 cores) semDedup took
-    * 14.0–15.4 s with the rounds vs 3.8–4.6 s with the supersteps.
+    * Catalyst side at sf0.1 (4 cores; CHANGES.md, "One connected-components
+    * entry point") semDedup took 14.0–15.4 s with the rounds vs 3.8–4.6 s
+    * with the supersteps.
     *
     * Returns (id, component), materialized, as a local checkpoint
     * whichever engine ran; the caller releases it with
@@ -522,11 +527,13 @@ object GraphOps {
     * return. The edge cache and the view are released before returning. */
   private[graft] def ccAuto(edges: DataFrame, srcCol: String, dstCol: String,
       graphxMaxEdges: Long, maxIter: Int = 30,
-      pointerJumping: Boolean = true): DataFrame = {
+      pointerJumping: Boolean = true): DataFrame = span("graph.ccAuto") {
     val spark = edges.sparkSession
     val cached = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .persist()
-    val rows = cached.count()
+    // the caller's lazy input plan (the Leiden split's intra edges,
+    // fuzzyDedup's LSH band + verify pass) runs here
+    val rows = span("graph.ccAuto.input")(cached.count())
     val parts = sizedLoopParts(spark, BigInt(rows) * 2)
     val comp =
       if (rows <= graphxMaxEdges)
@@ -550,7 +557,7 @@ object GraphOps {
   /** The [[ccStarEdges]] rounds over a materialized edge frame. Returns
     * the last round's checkpoint. */
   private def ccStarRounds(in: DataFrame, srcCol: String, dstCol: String,
-      parts: Int, maxIter: Int): DataFrame = {
+      parts: Int, maxIter: Int): DataFrame = span("graph.ccStarRounds") {
     val (und, release) = undirectedCache(in, srcCol, dstCol, "src", Some(parts))
     // NOT checkpointed (round 15, r14 verdict item 3 — one driver gate
     // fewer): round 1 references this twice, recomputing the distinct
@@ -840,7 +847,7 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String], degree: Column, iters: Int,
       dampingPct: Long, broadcastState: Option[Boolean])(
-      terms: (DataFrame, Long) => RankTerms): DataFrame = {
+      terms: (DataFrame, Long) => RankTerms): DataFrame = span("graph.rankLoop") {
     val (und, release) = undirectedCache(edges, srcCol, dstCol, "dst",
       weightCol = weightCol)
     val deg = und.groupBy(col("src").as("id")).agg(degree).persist()
@@ -920,7 +927,7 @@ object GraphOps {
   private def frontierBfs(
       edges: DataFrame, srcCol: String, dstCol: String, seeds: DataFrame,
       maxHops: Int, broadcastState: Option[Boolean])(
-      reach: DataFrame => DataFrame): DataFrame = {
+      reach: DataFrame => DataFrame): DataFrame = span("graph.frontierBfs") {
     val (und, release) = undirectedCache(edges, srcCol, dstCol, "dst")
     // frontier ∪ visited state is bounded by the vertex count — the
     // exact fallback only runs when the stats bound refuses (dense graph)
@@ -1269,7 +1276,7 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       assignment: DataFrame, idCol: String, labelCol: String,
       maxIter: Int = 20,
-      graphxMaxEdges: Long = 50000L): DataFrame = {
+      graphxMaxEdges: Long = 50000L): DataFrame = span("graph.wellConnectedSplit") {
     val asg = assignment.select(col(idCol).as("id"), col(labelCol).as("c"))
     val intra = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -1320,7 +1327,7 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame = span("graph.lpaLeidenRefineMulti") {
     val refined = lpaLouvainRefineMulti(edges, srcCol, dstCol, lpaIters,
       rounds, gammaPcts, broadcastState, numPartitions)
     // Shared-inputs contract (Concurrent): `refined` is checkpointed and
@@ -1443,7 +1450,7 @@ object GraphOps {
   private def refineCore(
       und: DataFrame, deg: DataFrame, bc: Boolean,
       assignment: DataFrame, idCol: String, labelCol: String,
-      rounds: Int, gammaPcts: Seq[Long]): DataFrame = {
+      rounds: Int, gammaPcts: Seq[Long]): DataFrame = span("graph.refineCore") {
     require(rounds >= 1, s"louvainRefine needs rounds >= 1, got $rounds")
     require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
       s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
@@ -1577,7 +1584,7 @@ object GraphOps {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val gqm2 = lit(new java.math.BigDecimal(
         (BigInt(gq) * BigInt(m2)).bigInteger)).cast(dec)
-      while (r < rounds && improved) {
+      while (r < rounds && improved) span("graph.refineCore.round") {
         // own community is always a candidate (kvc = 0 when v has no
         // intra-community neighbor); max() folds the duplicate away
         val cand = k.unionByName(asg.select(col("id"), col("c"),

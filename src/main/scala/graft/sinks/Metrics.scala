@@ -1,37 +1,19 @@
 package graft.sinks
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
-import scala.jdk.CollectionConverters._
+import graft.obs.Recorder
 
-/** K8 materialization metadata (io_managers.py:115-120 via
-  * /root/reference emits row_count/size per asset): a
-  * QueryExecutionListener capturing per-action row counts and wall time
-  * automatically — no per-call bookkeeping at the call sites. */
-final case class ActionMetric(funcName: String, outputRows: Long, wallNs: Long)
-
-final class MetricsListener extends QueryExecutionListener {
-  private val log = new ConcurrentLinkedQueue[ActionMetric]()
-
-  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-    val rows = qe.executedPlan.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-    log.add(ActionMetric(funcName, rows, durationNs))
-  }
-  override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-    log.add(ActionMetric(s"$funcName!failed", -1L, -1L))
-
-  def snapshot: Seq[ActionMetric] = log.asScala.toSeq
-  def clear(): Unit = log.clear()
-}
-
+/** K8 materialization metadata (the reference's io_managers.py:115-120
+  * emits row_count/size per asset): per-action row counts and wall time,
+  * captured automatically — no per-call bookkeeping at the call sites.
+  * The record is [[graft.obs.Recorder]]'s action log, the same listener
+  * the profiler rolls spans up with. */
 object Metrics {
-  /** Attach a fresh listener to the session; returns it for inspection. */
-  def attach(spark: SparkSession): MetricsListener = {
-    val l = new MetricsListener
+  /** Attach a fresh action recorder to the session (as a
+    * `QueryExecutionListener` only); returns it for inspection. */
+  def attach(spark: SparkSession): Recorder = {
+    val l = new Recorder
     spark.listenerManager.register(l)
     l
   }

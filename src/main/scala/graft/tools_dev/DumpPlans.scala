@@ -55,26 +55,7 @@ object DumpPlans {
     sb.append("for top-k, paired partial/final `HashAggregate`s (map-side\n")
     sb.append("combine), and `(n)` whole-stage-codegen stage ids.\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan0 = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      // plans can embed literal control chars (e.g. datasetDiff's
-      //  fingerprint separator) — escape them or the whole file
-      // reads as binary to grep
-      val planEsc = plan0.flatMap {
-        case c if c != '\n' && c != '\t' && c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      // cap per-plan output: the unrolled PQ/residual chains render tens
-      // of thousands of lines — the reviewable signal (scan pushdown,
-      // join strategies, codegen spans) lives in the operator tree at
-      // the top, not the repeated subquery bodies
-      val maxLines = 1500
-      val planLines = planEsc.split('\n')
-      val plan =
-        if (planLines.length <= maxLines) planEsc
-        else planLines.take(maxLines).mkString("\n") +
-          s"\n… [truncated: ${planLines.length} lines total]\n"
+      val plan = graft.Profile.planText(SparkEntry.queries(name)(spark, sfDir))
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     // Preserve the per-round notes sections ("## Round-N notes…")

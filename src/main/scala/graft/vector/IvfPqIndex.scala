@@ -3,6 +3,8 @@ package graft.vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.obs.span
+
 /** Fit-time configuration for [[IvfPqIndex]] — the four structural
   * decisions of a faiss-style `IVF<nCells>,PQ<m>x<bits>` factory
   * string, plus the two quality levers this engine measured:
@@ -204,7 +206,7 @@ object IvfPqIndex {
   /** Fit an index over `emb` — faiss `train()` + the initial `add()`.
     * Cells and (for residual) the residual frame are persisted; call
     * [[IvfPqIndex.release]] when done serving from this session. */
-  def fit(emb: DataFrame, cfg: IvfPqConfig): IvfPqIndex = {
+  def fit(emb: DataFrame, cfg: IvfPqConfig): IvfPqIndex = span("vector.IvfPqIndex.fit") {
     import cfg._
     // validate the scaladoc'd coverage invariant up front: pqFit slices
     // exactly m x subDims dims, so a mis-sized config would silently

@@ -6,6 +6,8 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.obs.span
+
 /** Vector/ML operator library (SURVEY §2.11 V2 kNN retrieval + the ANN
   * scale path from the brief).
   *
@@ -442,7 +444,7 @@ object Similarity {
   def semDedup(
       emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, tau: Double,
-      graphxMaxEdges: Long = 50000L): DataFrame = {
+      graphxMaxEdges: Long = 50000L): DataFrame = span("vector.semDedup") {
     // persist the clustered-vector frame: it feeds BOTH sides of the
     // pair join AND the final projection — without the cache every
     // consumer re-executes the full Lloyd chain (measured 31 s → ~8 s
@@ -602,7 +604,7 @@ object Similarity {
   def pqFit(
       emb: DataFrame, idCol: String, vecCol: String,
       m: Int, subDims: Int, k: Int, iters: Int,
-      distinctSeeds: Boolean = false): PqModel = {
+      distinctSeeds: Boolean = false): PqModel = span("vector.pqFit") {
     if (emb.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
       emb.count() // one pass fills the cache the m chains then share
     val fitted = graft.operators.Concurrent.mapInParallel(0 until m) { s =>
@@ -890,7 +892,7 @@ object Similarity {
     * grow. */
   def writePqIndex(model: PqModel, cells: DataFrame, idCol: String,
       table: String, buckets: Int = 8,
-      coarse: Option[(DataFrame, String)] = None): Unit = {
+      coarse: Option[(DataFrame, String)] = None): Unit = span("vector.writePqIndex") {
     val spark = cells.sparkSession
     import spark.implicits._
     // validate EVERYTHING checkable driver-side BEFORE the destructive
@@ -1019,7 +1021,7 @@ object Similarity {
     * Re-encoding a changed vector requires a rebuild ([[writePqIndex]])
     * or an explicit delete-then-append maintenance pass. */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, newEmb: DataFrame, vecCol: String): Unit = {
+      table: String, newEmb: DataFrame, vecCol: String): Unit = span("vector.appendPqIndex") {
     Seq("meta", "cent", "codes", "cells")
       .foreach(sfx => spark.catalog.refreshTable(s"${table}_$sfx"))
     // headOption: an empty meta table (an interrupted build's residue)

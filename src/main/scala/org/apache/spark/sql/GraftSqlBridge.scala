@@ -9,10 +9,20 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Bridge into `private[sql]` Spark internals: the Column↔Expression
   * converters — the standard hook point for libraries that define custom
   * Catalyst expressions on Spark 4 (where `Column` wraps a ColumnNode, not
-  * an Expression) — and the checkpoint leaf of a plan. Kept to exactly
-  * these four calls.
+  * an Expression) — the checkpoint leaf of a plan, and the two reads a
+  * profiler needs (listener-bus drain, cache-entry count). Kept to
+  * exactly these six calls.
   */
 object GraftSqlBridge {
+  /** Wait until every posted listener event has been delivered, so the
+    * job and task records of the work just run are complete. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** Number of DataFrames registered in the session's cache manager. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
+
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 

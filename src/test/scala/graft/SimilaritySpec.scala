@@ -624,7 +624,7 @@ class SimilaritySpec extends SparkSpec {
     // asserts the POSITIVE cases. Every input is hash-derived and every
     // algorithm deterministic, so these recalls are exact regression
     // pins, not statistical gates; measured values in the info lines
-    // (probe: graft.tools_dev.BlobProbe, numbers in PLANS.md round-11).
+    // (numbers in PLANS.md, "Clustered-blob fixture", round 11).
     // The sf0.1 structure-free tests above keep asserting no-collapse,
     // so both regimes are now pinned.
     val emb = graft.tools_dev.BlobFixture.embeddings(spark, n = 4000,
