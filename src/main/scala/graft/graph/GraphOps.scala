@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, EdgeTriplet, Graph, Pregel, VertexId}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.obs.span
@@ -519,6 +519,10 @@ object GraphOps {
     * entry point") semDedup took 14.0–15.4 s with the rounds vs 3.8–4.6 s
     * with the supersteps.
     *
+    * `knownRows`, when given, must be `edges`' exact row count (the
+    * Leiden ladder reads it off its refine gate). The input is then
+    * neither persisted nor counted: the engine's first job runs its plan.
+    *
     * Returns (id, component), materialized, as a local checkpoint
     * whichever engine ran; the caller releases it with
     * [[releaseLocalCheckpoint]] once its own output is materialized.
@@ -526,29 +530,29 @@ object GraphOps {
     * over it plans like one over the persisted frame GraphX CC used to
     * return. The edge cache and the view are released before returning. */
   private[graft] def ccAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      graphxMaxEdges: Long, maxIter: Int = 30,
-      pointerJumping: Boolean = true): DataFrame = span("graph.ccAuto") {
+      graphxMaxEdges: Long, maxIter: Int = 30, pointerJumping: Boolean = true,
+      knownRows: Option[Long] = None): DataFrame = span("graph.ccAuto") {
     val spark = edges.sparkSession
-    val cached = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist()
-    // the caller's lazy input plan (the Leiden split's intra edges,
-    // fuzzyDedup's LSH band + verify pass) runs here
-    val rows = span("graph.ccAuto.input")(cached.count())
+    val proj = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val input = if (knownRows.isEmpty) proj.persist() else proj
+    // the caller's lazy input plan (fuzzyDedup's LSH band + verify pass)
+    // runs here unless its count is known
+    val rows = knownRows.getOrElse(span("graph.ccAuto.input")(input.count()))
     val parts = sizedLoopParts(spark, BigInt(rows) * 2)
     val comp =
       if (rows <= graphxMaxEdges)
         graphxComponents(spark,
-          fromEdges(spark, cached.coalesce(parts), "src", "dst"),
+          fromEdges(spark, input.coalesce(parts), "src", "dst"),
           _.localCheckpoint(eager = false))
       else {
-        val view = cached.localCheckpoint(eager = false)
+        val view = input.localCheckpoint(eager = false)
         val labels =
           if (pointerJumping) ccStarRounds(view, "src", "dst", parts, maxIter)
           else ccMinSupersteps(view, "src", "dst", parts, maxIter, None, view)
         releaseLocalCheckpoint(view)
         labels
       }
-    cached.unpersist(blocking = false)
+    if (knownRows.isEmpty) input.unpersist(blocking = false)
     // at most two vertices per edge: lets the caller's join over the
     // labels plan a broadcast without waiting for AQE's shuffle stages
     GraftSqlBridge.withRowBound(comp, BigInt(rows) * 2)
@@ -1278,75 +1282,89 @@ object GraphOps {
       maxIter: Int = 20,
       graphxMaxEdges: Long = 50000L): DataFrame = span("graph.wellConnectedSplit") {
     val asg = assignment.select(col(idCol).as("id"), col(labelCol).as("c"))
-    val intra = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .join(asg.select(col("id").as("src"), col("c").as("cs")), "src")
-      .join(asg.select(col("id").as("dst"), col("c").as("cd")), "dst")
-      .filter(col("cs") === col("cd"))
-    val comp = ccAuto(intra, "src", "dst", graphxMaxEdges, maxIter)
+    val (labels, comp) = splitCore(edges, srcCol, dstCol, asg, asg.select("id"),
+      bc = false)(ccAuto(_, "src", "dst", graphxMaxEdges, maxIter))
     // a checkpoint, not a persist: no later plan can reach the component
     // checkpoint released below (the refineCore output note)
-    val out = asg.join(comp, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("label"))
-      .localCheckpoint(eager = false)
-    out.count()
+    val out = labels.localCheckpoint(eager = false)
+    val n = out.count()
     releaseLocalCheckpoint(comp)
-    out
+    GraftSqlBridge.withRowBound(out, n)
+  }
+
+  /** The split shared by [[wellConnectedSplit]] and the ladder's chains:
+    * `cc` labels the rows of `edges` whose endpoints share a community of
+    * `asg` (id, c), and every id of `verts` takes its component, or
+    * itself when it is in no intra-community edge. Returns those lazy
+    * (id, label) rows and the component checkpoint, which the caller
+    * releases once the rows are materialized. */
+  private def splitCore(edges: DataFrame, srcCol: String, dstCol: String,
+      asg: DataFrame, verts: DataFrame, bc: Boolean)(
+      cc: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    def side(id: String, c: String) =
+      stateSide(asg.select(col("id").as(id), col("c").as(c)), bc)
+    val comp = cc(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .join(side("src", "cs"), "src").join(side("dst", "cd"), "dst")
+      .filter(col("cs") === col("cd")))
+    (verts.join(comp, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("label")), comp)
   }
 
   /** Multi-resolution Leiden ladder: [[lpaLouvainRefineMulti]]'s γ
     * ladder with the well-connectedness split applied PER RESOLUTION —
     * the reference's full community stack (leidenalg at resolutions
-    * [2.0, 0.5, 0.1] with split-refinement, neo4j_helpers.py:237-268
-    * via /root/reference). The per-γ splits are INDEPENDENT until the
-    * final union, so they run as |γ| CONCURRENT [[wellConnectedSplit]]
-    * calls (Concurrent.mapInParallel — the refine loops' own r14
-    * discipline): each split's driver gates (the intra probe, the CC
-    * superstep actions, the output materializer) overlap the other
-    * chains' stage execution instead of serializing end to end.
-    *
-    * History (r17, replacing the r15 fused namespaced pass): the old
-    * shape γ-namespaced vertex ids (id·n + γindex), replicated the edge
-    * set |γ|× through a crossJoin, and ran ONE constrained-CC loop over
-    * the disjoint union — right when splits ran SEQUENTIALLY (one
-    * fixed-overhead-bound loop beats |γ| sequential ones), wrong once
-    * they overlap: the fused loop's supersteps shuffle |γ|× the bytes
-    * AND its driver gates still run in series, while |γ| concurrent
-    * loops pay 1× the bytes each with gates overlapped (measured: the
-    * ladder A/B below). At corpus scale the per-γ shape was already the
-    * documented recommendation (the fused pass's |γ|× shuffle volume is
-    * the scarce resource there), so bench and 100 TB now run the same
-    * code. The namespacing precondition (ids in [0, MaxValue/|γ|]) is
-    * gone with the encode; results are identical — GraphSpec pins
-    * fused ≡ per-γ composition, and min-id labels don't depend on how
-    * the γ levels are batched.
-    * Returns (gamma_pct, id, label): one checkpoint, materialized, that
-    * the caller owns. Everything else the ladder built is released. */
+    * [2.0, 0.5, 0.1] with split-refinement, neo4j_helpers.py:237-268).
+    * Each γ runs as one concurrent chain
+    * (Concurrent.mapInParallel) from its refine rounds through its split,
+    * with no barrier between the γ until the final union: the split's
+    * intra edges join the chain's own accepted assignment, and their row
+    * count rides the refine gate (W of that assignment counts each
+    * intra-community row of `edges` once per direction), so ccAuto
+    * neither persists nor counts its input. Results equal the two-call
+    * composition ([[lpaLouvainRefineMulti]], then [[wellConnectedSplit]]
+    * per γ; AlgoRandomSpec).
+    * Returns (gamma_pct, id, label): one checkpoint, materialized and
+    * bounded by its row count, that the caller owns. Everything else the
+    * ladder built is released. */
   def lpaLeidenRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame = span("graph.lpaLeidenRefineMulti") {
-    val refined = lpaLouvainRefineMulti(edges, srcCol, dstCol, lpaIters,
-      rounds, gammaPcts, broadcastState, numPartitions)
-    // Shared-inputs contract (Concurrent): `refined` is checkpointed and
-    // materialized by refineCore; `edges` was materialized by the refine
-    // setup (its union scans fill any caller checkpoint/cache). Each
-    // split then touches only its own frames.
-    val splits = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
-      wellConnectedSplit(edges, srcCol, dstCol,
-          refined.filter(col("gamma_pct") === g), "id", "label")
-        .select(lit(g).as("gamma_pct"), col("id"), col("label"))
+      numPartitions: Option[Int] = None): DataFrame =
+    leidenLadder(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
+        broadcastState, numPartitions) { (intra, rows) =>
+      ccAuto(intra, "src", "dst", graphxMaxEdges = 50000L, maxIter = 20,
+        knownRows = Some(rows))
     }
-    releaseLocalCheckpoint(refined)
-    // the caller gets ONE frame to own: the union, checkpointed (a scan
-    // of the split checkpoints, no exchange), so the per-γ checkpoints
-    // can be released too
-    val out = splits.reduce(_ unionByName _).localCheckpoint(eager = false)
-    out.count()
-    splits.foreach(releaseLocalCheckpoint)
-    out
+
+  /** [[lpaLeidenRefineMulti]] with its connected-components call given:
+    * each chain hands `cc` its intra-community edges and their row count. */
+  private[graft] def leidenLadder(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
+      broadcastState: Option[Boolean], numPartitions: Option[Int])(
+      cc: (DataFrame, Long) => DataFrame): DataFrame =
+      span("graph.lpaLeidenRefineMulti") {
+    lpaRefine(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
+        broadcastState, numPartitions) { start =>
+      // Shared-inputs contract (Concurrent): the start state is
+      // materialized by its probe; `edges` by the setup's union scans
+      val chains = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
+        val (asg, w) = span("graph.refineCore")(start.accept(g))
+        span("graph.wellConnectedSplit") {
+          val (labels, comp) = splitCore(edges, srcCol, dstCol, asg,
+            start.verts, start.bc)(cc(_, w / 2))
+          start.release(asg) // the components are materialized
+          (labels.select(lit(g).as("gamma_pct"), col("id"), col("label")), comp)
+        }
+      }
+      val out = chains.map(_._1).reduce(_ unionByName _)
+        .localCheckpoint(eager = false)
+      val n = out.count()
+      chains.foreach(c => releaseLocalCheckpoint(c._2))
+      start.release()
+      GraftSqlBridge.withRowBound(out, n)
+    }
   }
 
   /** Leiden-style refinement: the gated Louvain local-move pass
@@ -1381,26 +1399,12 @@ object GraphOps {
       assignment: DataFrame, idCol: String, labelCol: String,
       rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame = {
-    require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
-      s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
-    val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("kv"))
-      .persist()
-    // no und.count() here (r14 verdict item 3): refineCore's initial
-    // probe is und's materializer AND reads m2 from the same job; the
-    // empty graph degenerates inside refineCore to the identity relabel
-    // this function used to special-case on m2 == 0.
-    // exact-count fallback: deg is the vertex frame and refineCore reads
-    // it either way — its count is the true state size the broadcast
-    // decision wants (the stats bound refuses any dense graph)
-    val bc = resolveBroadcastStateExact(broadcastState, edges, deg.count())
-    val out = refineCore(und, deg, bc, assignment, idCol, labelCol,
-      rounds, gammaPcts)
-    release()
-    deg.unpersist(blocking = false)
-    out
-  }
+      numPartitions: Option[Int] = None): DataFrame =
+    refineSetup(edges, srcCol, dstCol, gammaPcts, broadcastState,
+        numPartitions) { (und, deg, bc) =>
+      refineCore(new RefineStart(und, deg, bc, assignment, idCol, labelCol,
+        rounds), gammaPcts)
+    }
 
   /** LPA + γ-ladder refinement over ONE shared setup: the undirected
     * src-partitioned cache, degree frame, and m2 serve BOTH the LPA
@@ -1408,60 +1412,97 @@ object GraphOps {
     * then louvainRefineMulti separately re-shuffles the expansion and
     * re-aggregates degrees — ~2-3 s of pure rework at sf1). The
     * recurrence is identical to the two-call form: the LPA snapshot is
-    * checkpointed (the refine branches on it several times per γ), then
-    * refined exactly as louvainRefineMulti would. */
+    * refined exactly as louvainRefineMulti would refine it. */
   def lpaLouvainRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame = {
+      numPartitions: Option[Int] = None): DataFrame =
+    lpaRefine(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
+      broadcastState, numPartitions)(refineCore(_, gammaPcts))
+
+  /** The setup every refine entry point shares: the src-partitioned
+    * undirected cache, the degree frame and the state-join decision,
+    * handed to `body` and released after it. No und.count() here (r14
+    * verdict item 3): the refine start's probe is und's materializer AND
+    * reads m2 from the same job; the empty graph degenerates inside the
+    * rounds to the identity relabel. */
+  private def refineSetup[T](
+      edges: DataFrame, srcCol: String, dstCol: String, gammaPcts: Seq[Long],
+      broadcastState: Option[Boolean], numPartitions: Option[Int])(
+      body: (DataFrame, DataFrame, Boolean) => T): T = {
     require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
       s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
     val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("kv"))
       .persist()
-    // exact-count fallback, as in louvainRefineMulti: the LPA supersteps
-    // AND every refine pass ride the same decision. No und.count() — see
-    // louvainRefineMulti; the empty graph flows through LPA (empty
-    // labels) into refineCore's internal degenerate path.
+    // exact-count fallback: deg is the vertex frame and the refine reads
+    // it either way — its count is the true state size the broadcast
+    // decision wants (the stats bound refuses any dense graph)
     val bc = resolveBroadcastStateExact(broadcastState, edges, deg.count())
-    // materializeLast=false: the single LPA block's boundary count is
-    // paid by refineCore's first probe through the lazy checkpoint
-    // (r14 verdict item 3 — one fewer driver gate per ladder run)
-    val lpa = lpaSupersteps(und, lpaIters, bc, materializeLast = false)
-    // handed to refineCore directly — no checkpoint layer (round 15, r14
-    // verdict item 3): refineCore references the assignment exactly
-    // twice (the asg0 build, itself checkpointed, and the final output
-    // join) and lpa is persisted, so the extra layer bought nothing but
-    // one more driver gate. unpersist AFTER refineCore: its output is
-    // persisted+materialized by then.
-    val refined = refineCore(und, deg, bc, lpa, "id", "label",
-      rounds, gammaPcts)
-    lpa.unpersist(blocking = false)
+    val out = body(und, deg, bc)
     release()
     deg.unpersist(blocking = false)
-    refined
+    out
   }
 
-  /** The per-γ gated local-move rounds over a caller-owned setup (und
-    * must be src-partitioned and persisted; deg persisted; m2 > 0).
-    * Returns (gamma_pct, id, label) checkpointed and materialized.
-    * Callers may release the setup immediately after. */
-  private def refineCore(
-      und: DataFrame, deg: DataFrame, bc: Boolean,
-      assignment: DataFrame, idCol: String, labelCol: String,
-      rounds: Int, gammaPcts: Seq[Long]): DataFrame = span("graph.refineCore") {
-    require(rounds >= 1, s"louvainRefine needs rounds >= 1, got $rounds")
-    require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
-      s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
-    // γ = gammaPct/100 as the reduced rational p/q — all scoring stays
-    // exact-integer; γ = 1 reduces to p = q = 1, bit-identical to the
-    // γ-less gain.
-    def reduced(g: Long): (Long, Long) = {
-      val gcd = java.math.BigInteger.valueOf(g)
-        .gcd(java.math.BigInteger.valueOf(100L)).longValueExact()
-      (g / gcd, 100L / gcd)
+  /** [[refineSetup]] plus the LPA supersteps, whose labels seed the
+    * refine start handed to `body`. materializeLast = false: the single
+    * LPA block's boundary count is paid by the start's probe through its
+    * lazy checkpoint (r14 verdict item 3), and the persisted labels go to
+    * the start directly, released after `body`. */
+  private def lpaRefine[T](
+      edges: DataFrame, srcCol: String, dstCol: String,
+      lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
+      broadcastState: Option[Boolean], numPartitions: Option[Int])(
+      body: RefineStart => T): T =
+    refineSetup(edges, srcCol, dstCol, gammaPcts, broadcastState,
+        numPartitions) { (und, deg, bc) =>
+      val lpa = lpaSupersteps(und, lpaIters, bc, materializeLast = false)
+      val out = body(new RefineStart(und, deg, bc, lpa, "id", "label", rounds))
+      lpa.unpersist(blocking = false)
+      out
     }
+
+  /** The per-γ gated rounds of every [[RefineStart]] in `gammaPcts`, run
+    * concurrently, relabeled over the start's assignment and unioned.
+    * Returns (gamma_pct, id, label) checkpointed, materialized and
+    * bounded by its row count; releases the start. */
+  private def refineCore(start: RefineStart, gammaPcts: Seq[Long]): DataFrame =
+      span("graph.refineCore") {
+    // The γ loops run CONCURRENTLY (round 14): each is driver-gated — a
+    // checkpoint registration + a scalar probe per round — so in sequence
+    // they serialize end to end while sharing only the materialized
+    // start. NEGATIVE RESULT (round 15): a FUSED design, all γ in one
+    // tagged frame with one probe per lockstep round, cut q147's gates
+    // 27 → 18 but ran 1.4–1.7× SLOWER at local[32]: one AQE execution
+    // re-plans its ~3× stages in series on the driver. Don't re-try it
+    // without a fix for AQE's single-threaded re-optimization loop.
+    val finals = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
+      g -> start.accept(g)._1
+    }
+    // localCheckpoint, NOT persist (round 16, the AQE-off A/B): a
+    // consumer re-plan that bypasses a persisted union's cache walks into
+    // the per-γ checkpoints released below
+    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); a LogicalRDD root reaches no γ
+    // frame. GraphSpec re-reads the ladder output with AQE on and off.
+    val out = finals.map { case (g, asg) => start.relabel(g, asg) }
+      .reduce(_ unionByName _).localCheckpoint(eager = false)
+    val n = out.count() // fills the checkpoint
+    finals.foreach(f => start.release(f._2))
+    start.release()
+    GraftSqlBridge.withRowBound(out, n)
+  }
+
+  /** The γ-independent start of the gated local-move rounds over a
+    * caller-owned setup (`und` src-partitioned and persisted, `deg`
+    * persisted): the edge-incident assignment asg0, its frames and the
+    * initial probe, which materializes all three — the shared inputs the
+    * concurrent per-γ [[accept]] calls need (Concurrent's contract). */
+  private final class RefineStart(und: DataFrame, deg: DataFrame, val bc: Boolean,
+      assignment: DataFrame, idCol: String, labelCol: String, rounds: Int) {
+    require(rounds >= 1, s"louvainRefine needs rounds >= 1, got $rounds")
+    private val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // The state is referenced ~7× per round (gate ×2, D_c, k, candidate
     // union, score join ×2): localCheckpoint, not persist, or the nested
     // per-round plan STRINGS grow geometrically (the HITS 8 GB-driver
@@ -1470,10 +1511,13 @@ object GraphOps {
     // LAZY checkpoints here: the wd2/qNum probe job that follows each
     // frame anyway is its materializer, so lineage truncation costs no
     // extra job (eager would add one full pass per round per γ)
-    val asg0 = assignment
+    private val asg0 = assignment
       .select(col(idCol).as("id"), col(labelCol).as("c"))
       .join(deg.select("id"), "id") // edge-incident vertices only
       .localCheckpoint(eager = false)
+    /** The assignment's vertices, as (id). */
+    val verts: DataFrame = assignment.select(col(idCol).as("id"))
+
     // Per-assignment frames (k_{v→c} and D_c) serve DOUBLE duty: they
     // drive the move scores of the round AND yield that assignment's own
     // Q_num without touching the edge list again (W = Σ_v k_{v→c_v},
@@ -1484,7 +1528,7 @@ object GraphOps {
     // accepted path then reuses. (The first cut re-counted W via an
     // edges⋈asg⋈asg pass per gate — 2 edge passes/round, measured ~6.2 s
     // for q126 at sf0.1.)
-    def frames(a: DataFrame): (DataFrame, DataFrame) = {
+    private def frames(a: DataFrame): (DataFrame, DataFrame) = {
       val dC = a.join(deg, "id").groupBy("c").agg(sum(col("kv")).as("dc"))
         .persist()
       val k = und
@@ -1495,85 +1539,51 @@ object GraphOps {
         .persist()
       (dC, k)
     }
-    // one scalar job, not two: the 1-row W and ΣD² aggs cross-joined;
-    // γ-independent — every resolution combines the same pair as
-    // q·m2·W − p·ΣD². ΣD² accumulates in DECIMAL(38,0): D_c ≤ m2, so a
-    // long dc·dc wraps once m2 exceeds ~3e9 edge-endpoints (~1.5e9
-    // edges) — far below the 100 TB graphs this ladder is documented
-    // for; decimal keeps the sum exact to 38 digits (m2² at 1e12 edges
-    // is 25 digits) and, being exact, leaves every in-range result
-    // bit-identical to the long path (round-10 overflow audit).
-    def wd2Of(a: DataFrame, dC: DataFrame, k: DataFrame): (Long, BigInt) = {
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      // state side hinted like every other vertex-sized join in the
-      // loop: unhinted, this probe re-shuffled the EDGE-bounded k frame
-      // (~59M rows at sf10) once per round just to read two scalars
-      val row = k.join(stateSide(a.withColumnRenamed("c", "cv"), bc), "id")
+    // one scalar job: the 1-row W and ΣD² aggs cross-joined (plus m2 on
+    // the initial probe); every γ combines them as q·m2·W − p·ΣD². ΣD²
+    // sums in DECIMAL(38,0): a long dc·dc wraps past ~1.5e9 edges, and
+    // the exact decimal is bit-identical to the long path in range
+    // (round-10 overflow audit). The state side is hinted: unhinted, the
+    // probe re-shuffled the edge-bounded k (~59M rows at sf10) per round.
+    private def wd2Of(a: DataFrame, dC: DataFrame, k: DataFrame,
+        withM2: Boolean = false): Row = {
+      val wd2 = k.join(stateSide(a.withColumnRenamed("c", "cv"), bc), "id")
         .filter(col("c") === col("cv"))
         .agg(coalesce(sum(col("kvc")), lit(0L)).as("w"))
         .crossJoin(
           dC.agg(coalesce(sum(col("dc").cast(dec) * col("dc")),
             lit(0L).cast(dec)).as("d2")))
-        .head()
-      (row.getLong(0), BigInt(row.getDecimal(1).toBigInteger))
+      (if (!withM2) wd2 else wd2.crossJoin(
+        deg.agg(coalesce(sum(col("kv")), lit(0L)).as("m2")))).head()
     }
-    val (dC0, k0) = frames(asg0)
-    // The initial probe ALSO yields m2 = Σ_v k_v over deg (every
-    // undirected edge endpoint counted once, 2|E|) — so no caller pays a
-    // separate und.count() driver gate for it (r14 verdict item 3).
-    // m2 is summed over DEG, not dC0 (r15 ADVICE): a PARTIAL assignment
-    // (some edge-incident vertices unassigned) would make Σ dc < 2|E|,
-    // silently rescaling every γ·m2-weighted move score with a quantity
-    // that is neither full-graph nor induced-subgraph modularity (kv/dc
-    // still use full degrees). Summing deg keeps m2 assignment-
-    // independent; for total assignments the two sums are equal, so
-    // every existing oracle is bit-identical. An empty graph gives
-    // m2 = 0 and every per-γ loop degenerates to the identity relabel
-    // below — the old callers' explicit m2 == 0 pre-branch, subsumed.
-    val (w0, d20, m2) = {
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val row = k0.join(stateSide(asg0.withColumnRenamed("c", "cv"), bc), "id")
-        .filter(col("c") === col("cv"))
-        .agg(coalesce(sum(col("kvc")), lit(0L)).as("w"))
-        .crossJoin(
-          dC0.agg(coalesce(sum(col("dc").cast(dec) * col("dc")),
-            lit(0L).cast(dec)).as("d2")))
-        .crossJoin(
-          deg.agg(coalesce(sum(col("kv")), lit(0L)).as("m2")))
-        .head()
-      (row.getLong(0), BigInt(row.getDecimal(1).toBigInteger), row.getLong(2))
-    }
-    // Per-γ gated local-move loops over the shared start state; `own`
-    // tracks whether (asg, dC, k) are this γ's private frames (safe to
-    // release) or the shared ones (released once, after all γ).
-    // The γ loops run CONCURRENTLY (round 14): each is driver-gated — a
-    // checkpoint registration + a scalar wd2Of probe per round — so run
-    // sequentially the ladder's rounds serialize end to end despite
-    // sharing nothing but the already-materialized start state (the
-    // initial probe above is the materializer: it reads asg0's lazy
-    // checkpoint AND fills the dC0/k0 caches, satisfying Concurrent's
-    // shared-inputs contract). Each γ touches only its own frames after
-    // that, so results — and the q134/q140/q147/q150/q60 oracles — are
-    // bit-identical.
-    //
-    // NEGATIVE RESULT, measured round 15 (r14 verdict item 3): a fully
-    // FUSED design — all γ in one tagged frame, one checkpoint + one
-    // fused (W, ΣD²) probe per lockstep round — cut q147's driver gates
-    // 27 → 18 (−33%) but ran 1.4–1.7× SLOWER wall at local[32]
-    // (alternating old/new A/B, min-of-2: q147 13.5/13.9 s → 23.6 s,
-    // q134 9.1/10.6 s → 13.9 s; untouched controls flat). One big AQE
-    // execution re-plans its ~3× query stages SEQUENTIALLY on the
-    // driver, serializing exactly what the concurrent per-γ executions
-    // overlap — gate count is not the whole driver-latency story. The
-    // concurrent design is retained; don't re-try the fusion without a
-    // fix for AQE's single-threaded re-optimization loop.
-    val finals = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
-      val (gp, gq) = reduced(g)
-      var asg = asg0; var dC = dC0; var k = k0
-      var own = false
+    private val (dC0, k0) = frames(asg0)
+    // The initial probe ALSO yields m2 = Σ_v k_v = 2|E| — no separate
+    // und.count() gate (r14 verdict item 3). It sums DEG, not dC0 (r15
+    // ADVICE): under a PARTIAL assignment Σ dc < 2|E| would silently
+    // rescale every γ·m2-weighted score; for total assignments the sums
+    // are equal. An empty graph gives m2 = 0, and every per-γ loop
+    // degenerates to the identity relabel.
+    private val probe0 = span("graph.refineCore")(wd2Of(asg0, dC0, k0, withM2 = true))
+    private val m2 = probe0.getLong(2)
+
+    /** γ's gated rounds from the shared start. Returns the accepted
+      * assignment (id, c) — a materialized checkpoint, the shared asg0
+      * when no round is accepted — and its W, which counts every
+      * intra-community row of the edges once per direction. Every other
+      * frame the rounds made is released. */
+    def accept(g: Long): (DataFrame, Long) = {
+      // γ = gammaPct/100 as the reduced rational p/q — all scoring stays
+      // exact-integer; γ = 1 reduces to p = q = 1, bit-identical to the
+      // γ-less gain.
+      val gcd = java.math.BigInteger.valueOf(g)
+        .gcd(java.math.BigInteger.valueOf(100L)).longValueExact()
+      val (gp, gq) = (g / gcd, 100L / gcd)
       // driver-side gate in BigInt: gq·m2·W is ~m2² at worst — wraps a
-      // Scala Long at the same ~1.5e9-edge scale wd2Of's doc describes
-      var qCur = BigInt(gq) * BigInt(m2) * BigInt(w0) - BigInt(gp) * d20
+      // Scala Long at the same ~1.5e9-edge scale wd2Of's note describes
+      def qNum(p: Row) = BigInt(gq) * BigInt(m2) * BigInt(p.getLong(0)) -
+        BigInt(gp) * BigInt(p.getDecimal(1).toBigInteger)
+      var asg = asg0; var dC = dC0; var k = k0; var w = probe0.getLong(0)
+      var qCur = qNum(probe0)
       var r = 0
       var improved = true
       // the in-plan move score holds the same products: kvc/kv/dc are
@@ -1581,7 +1591,6 @@ object GraphOps {
       // any graph size (in range they equal the long math bit-for-bit,
       // so the argmax — and every oracle — is unchanged); gq·m2 itself
       // is a BigDecimal literal, immune to the Scala-side wrap
-      val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val gqm2 = lit(new java.math.BigDecimal(
         (BigInt(gq) * BigInt(m2)).bigInteger)).cast(dec)
       while (r < rounds && improved) span("graph.refineCore.round") {
@@ -1605,15 +1614,15 @@ object GraphOps {
           .select(col("id"), (-col("best.nc")).as("c"))
           .localCheckpoint(eager = false) // materialized by the wd2 probe
         val (dC2, k2) = frames(moved)
-        val (w2, d22) = wd2Of(moved, dC2, k2)
-        val qNew = BigInt(gq) * BigInt(m2) * BigInt(w2) - BigInt(gp) * d22
+        val p = wd2Of(moved, dC2, k2)
+        val qNew = qNum(p)
         if (qNew > qCur) {
-          if (own) {
+          if (asg ne asg0) {
             releaseLocalCheckpoint(asg)
             dC.unpersist(blocking = false)
             k.unpersist(blocking = false)
           }
-          asg = moved; dC = dC2; k = k2; own = true
+          asg = moved; dC = dC2; k = k2; w = p.getLong(0)
           qCur = qNew
         } else {
           releaseLocalCheckpoint(moved)
@@ -1623,38 +1632,32 @@ object GraphOps {
         }
         r += 1
       }
-      if (own) {
+      if (asg ne asg0) {
         dC.unpersist(blocking = false)
         k.unpersist(blocking = false)
       }
-      (g, asg, own)
+      (asg, w)
     }
-    // localCheckpoint, NOT persist (round 16, found by the AQE-off A/B):
-    // a persisted `out` leaves the γ-branch union plan alive behind the
-    // cache entry, and a consumer re-plan that bypasses the cache (the
-    // well-connectedness split under AQE-off executed exactly that raw
-    // plan: the failing stage's RDD graph held the three γ checkpoint
-    // RDDs directly, with out's cached buffers absent) walks straight
-    // into the per-γ checkpoints released below —
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Truncating to a LogicalRDD
-    // makes the release provably safe: no downstream plan can reference
-    // the γ frames at all. Same single materializing action either way.
-    // GraphSpec re-reads the ladder output with AQE on and off.
-    val out = finals.map { case (g, asg, _) =>
+
+    /** (gamma_pct, id, label) for every vertex of the assignment: the
+      * accepted community, or the input label off the edges. */
+    def relabel(g: Long, asg: DataFrame): DataFrame =
       assignment
         .select(col(idCol).as("id"), col(labelCol).as("label"))
         .join(asg.select(col("id"), col("c")), Seq("id"), "left")
         .select(lit(g).as("gamma_pct"), col("id"),
           coalesce(col("c"), col("label")).as("label"))
-    }.reduce(_ unionByName _).localCheckpoint(eager = false)
-    out.agg(count(lit(1))).head() // fills the checkpoint
-    finals.foreach { case (_, asg, own) =>
-      if (own) releaseLocalCheckpoint(asg)
+
+    /** Releases an accepted assignment unless it is the shared start. */
+    def release(asg: DataFrame): Unit =
+      if (asg ne asg0) releaseLocalCheckpoint(asg)
+
+    /** Releases the shared start. */
+    def release(): Unit = {
+      releaseLocalCheckpoint(asg0)
+      dC0.unpersist(blocking = false)
+      k0.unpersist(blocking = false)
     }
-    releaseLocalCheckpoint(asg0)
-    dC0.unpersist(blocking = false)
-    k0.unpersist(blocking = false)
-    out
   }
 
   def modularityOf(

@@ -437,13 +437,7 @@ object GraphQueries {
       // and the refine+split semantics need structure, not volume — the
       // deterministic order sample keeps ~240k edges and the same
       // disconnected-community pathology the split exists for
-      val e = coPurchase(s, dir, orderMod = 5)
-        .localCheckpoint() // consumed by the refine loop AND the split
-      // superstep partitions sized from the true edge count (r17: the
-      // co-purchase join's statistics overestimate ~10^7×, so the
-      // stats-based default would keep the session floor; the count is
-      // a metadata-cheap scan of the eager checkpoint)
-      val parts = Some(GraphOps.sizedLoopParts(s, BigInt(e.count()) * 2))
+      val (e, parts) = countedCoPurchase(s, dir, orderMod = 5)
       val refined = GraphOps.lpaLouvainRefineMulti(e, "src", "dst",
           lpaIters = 2, rounds = 1, gammaPcts = Seq(100L),
           numPartitions = parts)
@@ -455,24 +449,15 @@ object GraphQueries {
     // The reference's FULL community stack in one operator: the 3-γ
     // resolution ladder (RB-configuration [2.0, 0.5, 0.1]) with the
     // well-connectedness split applied per resolution — leidenalg's
-    // find_partition × 3 resolutions (neo4j_helpers.py:237-268). The
-    // three splits run as ONE constrained-CC pass over γ-namespaced
-    // vertex ids (id·3 + γindex): the superstep loop is fixed-overhead-
-    // bound, so the union costs ~1 split instead of 3. o % 10 sample
-    // keeps the 3-γ composite in the q134/q140 cost family.
+    // find_partition × 3 resolutions (neo4j_helpers.py:237-268). Each γ
+    // runs as one concurrent chain from its refine rounds through its
+    // split, and the three chains meet once, in the ladder's output
+    // checkpoint. o % 10 sample keeps the 3-γ composite in the
+    // q134/q140 cost family.
     Q("q147_leiden_multires",
       leidenMultiOracle(lpaIters = 2, rounds = 1, Seq(200L, 50L, 10L),
         orderMod = 10)) { (s, dir) =>
-      val e = coPurchase(s, dir, orderMod = 10)
-        // the count materializes the lazy checkpoint (same single
-        // materialization as before — it just moved from refineCore's
-        // initial probe to here) AND sizes the ladder's superstep
-        // partitions to the data (r17: the co-purchase join's
-        // statistics overestimate ~10^7×, so the stats default would
-        // keep the session partition floor the 8c-beats-32c inversion
-        // exposed)
-        .localCheckpoint(eager = false)
-      val parts = Some(GraphOps.sizedLoopParts(s, BigInt(e.count()) * 2))
+      val (e, parts) = countedCoPurchase(s, dir, orderMod = 10)
       GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
           lpaIters = 2, rounds = 1, gammaPcts = Seq(200L, 50L, 10L),
           numPartitions = parts)
@@ -481,8 +466,9 @@ object GraphQueries {
 
     // The reference's CAPSTONE DAG as ONE lazy program — the path every
     // real user runs end-to-end: graph build → full Leiden ladder
-    // (q147's fused 3-γ machinery) → per-community metadata in single
-    // groupBys (q43's one-pass rewrite of detect_communities.py:294-330's
+    // (q147's per-γ chains, refine rounds → split, meeting in one
+    // output checkpoint) → per-community metadata in single groupBys
+    // (q43's one-pass rewrite of detect_communities.py:294-330's
     // per-community Python loop) → community name rule + doc-id
     // templating (generate_community_summaries.py:28-50,
     // ingest_community_summaries.py:156) → idempotent upsert status
@@ -496,12 +482,11 @@ object GraphQueries {
     Q("q150_graphrag_capstone",
       graphragCapstoneOracle(lpaIters = 2, rounds = 1, Seq(200L, 50L, 10L),
         orderMod = 10)) { (s, dir) =>
-      val e = coPurchase(s, dir, orderMod = 10)
-        // the count materializes the lazy checkpoint and sizes the
-        // ladder's superstep partitions (see q147)
-        .localCheckpoint(eager = false) // ladder loop + degree agg consume it
-      val parts = Some(GraphOps.sizedLoopParts(s, BigInt(e.count()) * 2))
-      // Stages 1-2: build + the fused multi-resolution Leiden ladder
+      // the ladder loop and the degree agg both consume e; with e and
+      // the ladder bounded by their counts, ladder ⋈ part ⋈ deg plans
+      // as broadcasts before AQE has run a stage
+      val (e, parts) = countedCoPurchase(s, dir, orderMod = 10)
+      // Stages 1-2: build + the multi-resolution Leiden ladder
       val ladder = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
         lpaIters = 2, rounds = 1, gammaPcts = Seq(200L, 50L, 10L),
         numPartitions = parts)
@@ -589,6 +574,21 @@ object GraphQueries {
         col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .select(col("a.p").cast("long").as("src"), col("b.p").cast("long").as("dst"))
       .distinct()
+  }
+
+  /** [[coPurchase]] as a lazy checkpoint, counted, and bounded by that
+    * count, with the superstep partitions sized from it. The count
+    * materializes the checkpoint. The co-purchase join's statistics
+    * overestimate ~10^7×: sized from them, the loops would keep the
+    * session partition floor; unbounded, the ladder's broadcast decision
+    * would pay an exact vertex count and joins over the edges would plan
+    * shuffles until AQE had run their stages. */
+  private def countedCoPurchase(s: org.apache.spark.sql.SparkSession, dir: String,
+      orderMod: Int): (org.apache.spark.sql.DataFrame, Option[Int]) = {
+    val e = coPurchase(s, dir, orderMod).localCheckpoint(eager = false)
+    val rows = e.count()
+    (org.apache.spark.sql.GraftSqlBridge.withRowBound(e, rows),
+      Some(GraphOps.sizedLoopParts(s, BigInt(rows) * 2)))
   }
 
   /** The part–supplier bipartite edge set shared by the graph queries

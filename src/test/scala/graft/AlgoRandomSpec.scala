@@ -432,6 +432,81 @@ class AlgoRandomSpec extends SparkSpec {
     }
   }
 
+  test("lpaLeidenRefineMulti equals refine-then-split per gamma on random graphs") {
+    // the chained ladder (refine rounds → split per γ, one union) against
+    // the two-call composition, row for row. Random graphs keep duplicate
+    // rows and self-loops; two fixed cases add a γ whose only round is
+    // rejected (disjoint cliques: every move candidate is the vertex's
+    // own community) and the empty edge set.
+    val gammas = Seq(200L, 50L, 10L)
+    def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
+    val random = (1 to 20).map { seed =>
+      val rnd = new Random(seed * 7919L)
+      val n = 12 + rnd.nextInt(20)
+      s"seed $seed" -> Seq.fill(10 + rnd.nextInt(40))(
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    }
+    assert(random.exists(_._2.exists { case (a, b) => a == b }) &&
+      random.exists { case (_, r) => r.distinct.size < r.size },
+      "no random case drew a self-loop and a duplicate row")
+    val cases = random ++ Seq(
+      "disjoint cliques" -> (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(11L, 12L, 13L))),
+      "no edges" -> Seq.empty[(Long, Long)])
+    var strandedSeen = 0
+    for (((name, rows), i) <- cases.zipWithIndex) {
+      val e = rows.toDF("src", "dst")
+      val rounds = 1 + i % 2
+      val refined = GraphOps.lpaLouvainRefineMulti(e, "src", "dst",
+        lpaIters = 2, rounds = rounds, gammaPcts = gammas)
+      val want = gammas.flatMap { g =>
+        val lvl = refined.filter(col("gamma_pct") === g)
+        val labels = lvl.select("id", "label").as[(Long, Long)].collect().toMap
+        // a vertex in no intra-community edge (the split's singleton rule)
+        strandedSeen += labels.keys.count(v => !rows.exists { case (a, b) =>
+          (a == v || b == v) && labels(a) == labels(b) })
+        val split = GraphOps.wellConnectedSplit(e, "src", "dst", lvl, "id", "label")
+        val out = split.as[(Long, Long)].collect().map { case (id, l) => (g, id, l) }
+        GraphOps.releaseLocalCheckpoint(split)
+        out
+      }.sorted
+      if (name == "disjoint cliques") {
+        // the round is rejected: every level keeps the LPA labels
+        val lpa = GraphOps.lpaEdges(e, "src", "dst", maxIter = 2)
+          .as[(Long, Long)].collect().toSet
+        for (g <- gammas)
+          assert(refined.filter(col("gamma_pct") === g).select("id", "label")
+            .as[(Long, Long)].collect().toSet == lpa, s"$name, γ=$g moved")
+      }
+      GraphOps.releaseLocalCheckpoint(refined)
+      val ladder = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
+        lpaIters = 2, rounds = rounds, gammaPcts = gammas)
+      val got = ladder.as[(Long, Long, Long)].collect().sorted.toSeq
+      GraphOps.releaseLocalCheckpoint(ladder)
+      assert(got == want, s"ladder ≠ refine-then-split for $name")
+      // the row count each chain hands ccAuto (W/2 off the refine gate)
+      // is the count of the intra frame it builds (on every third random
+      // case and both fixed ones); odd cases run the Catalyst CC rounds,
+      // even ones GraphX
+      if (i % 3 == 0 || i >= random.size) {
+        val handed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+        val hooked = GraphOps.leidenLadder(e, "src", "dst", lpaIters = 2,
+            rounds = rounds, gammaPcts = gammas, broadcastState = None,
+            numPartitions = None) { (intra, known) =>
+          handed.add(known -> intra.count())
+          GraphOps.ccAuto(intra, "src", "dst", graphxMaxEdges = if (i % 2 == 1) 0L else 50000L,
+            maxIter = 20, knownRows = Some(known))
+        }
+        assert(hooked.as[(Long, Long, Long)].collect().sorted.toSeq == want,
+          s"hooked ladder ≠ refine-then-split for $name")
+        GraphOps.releaseLocalCheckpoint(hooked)
+        val counts = handed.toArray(new Array[(Long, Long)](0)).toSeq
+        assert(counts.size == gammas.size && counts.forall { case (k, n) => k == n },
+          s"known intra rows ≠ counted for $name: $counts")
+      }
+    }
+    assert(strandedSeen > 0, "no case put a vertex outside every intra-community edge")
+  }
+
   test("modularityOf equals the scalar Newman formula on random partitions") {
     for (seed <- Seq(29, 61, 107)) {
       val rnd = new Random(seed)

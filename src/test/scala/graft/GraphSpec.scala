@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REPARTITION_BY_COL, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -472,7 +472,7 @@ class GraphSpec extends SparkSpec {
     assert(s2(20L) == 20L && s2(21L) == 21L && s2(22L) == 21L)
   }
 
-  test("lpaLeidenRefineMulti: namespaced union split equals per-gamma splits") {
+  test("lpaLeidenRefineMulti: per-gamma chains equal refine-then-split") {
     def clique(ids: Seq[Long]) =
       for (a <- ids; b <- ids if a < b) yield (a, b)
     val e = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(11L, 12L, 13L, 14L)) ++
@@ -515,14 +515,17 @@ class GraphSpec extends SparkSpec {
     }.toSet
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val entriesBefore = org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark)
     val out = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
       lpaIters = 2, rounds = 2, gammaPcts = gammas)
     // the output's plan is one checkpoint, and that checkpoint is the
-    // only RDD the ladder leaves registered
+    // only RDD the ladder leaves registered; no cache entry is left
+    // either (each chain releases its own asg, dC, k and components)
     val leaves = out.queryExecution.analyzed.collectLeaves()
     val own = leaves.collect { case l: LogicalRDD => l.rdd.id }
     assert(leaves.size == 1 && own.size == 1, s"not one checkpoint: $leaves")
     assert(sc.getPersistentRDDs.keySet -- before == own.toSet)
+    assert(org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark) == entriesBefore)
     // re-read after the release: a fresh plan over the output under
     // both planners (a released checkpoint once surfaced with AQE off)
     Thread.sleep(200L) // time for the asynchronous block removal
@@ -766,20 +769,28 @@ class GraphSpec extends SparkSpec {
       s"want one (gamma_pct, label) repartition:\n${exchanges.mkString("\n")}")
     assert(!exchanges.exists(_.shuffleOrigin == ENSURE_REQUIREMENTS),
       s"an operator re-shuffles on the community key:\n${exchanges.mkString("\n")}")
+    // exact sizes on the ladder's input and output: base's joins
+    // (ladder ⋈ part ⋈ deg) are planned as broadcasts from statistics,
+    // so its initial, pre-AQE plan holds no sort-merge join
+    val base = nodes.collectFirst { case m: InMemoryTableScanExec
+      if m.relation.output.exists(_.name == "p_type") => m.relation }.get
+    val smj = planNodes(base.cachedPlan, initial = true)
+      .collect { case j: SortMergeJoinExec => j }
+    assert(smj.isEmpty, s"sort-merge joins in base's initial plan:\n${smj.mkString("\n")}")
     out.unpersist()
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** Every node of an executed plan: AQE's current plan, the plans inside
-    * its query stages, and each cached relation's plan (once, however
-    * many scans read it). */
-  private def planNodes(root: SparkPlan): Seq[SparkPlan] = {
+  /** Every node of an executed plan: AQE's current plan (its initial,
+    * pre-AQE plan when `initial`), the plans inside its query stages, and
+    * each cached relation's plan (once, however many scans read it). */
+  private def planNodes(root: SparkPlan, initial: Boolean = false): Seq[SparkPlan] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
     def go(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => go(a.executedPlan)
+      case a: AdaptiveSparkPlanExec => go(if (initial) a.initialPlan else a.executedPlan)
       case q: QueryStageExec => q +: go(q.plan)
       case m: InMemoryTableScanExec =>
         m +: (if (seen.add(m.relation.cacheBuilder)) go(m.relation.cachedPlan) else Nil)
