@@ -15,13 +15,15 @@ import org.json4s.jackson.Serialization
   * (default `profile.jsonl`):
   *
   *   SPARK_GRAFT_SF_DIR=<sf dir> [SPARK_GRAFT_CPUS=4] [SPARK_GRAFT_ONLY=q150,q91]
+  *   [SPARK_GRAFT_WARMUP=n]
   *   java <add-opens> -cp "target/scala-2.13/classes:<spark jars>" graft.Profile [out]
   *
   * The session is [[Verify.session]], built as [[Bench]] builds it. To A/B a setting, run
   * twice with different `-Dspark.…` JVM properties (SparkConf reads them);
-  * each record carries the `spark.*` properties it ran under. Queries are
-  * not warmed up, so compare runs over the same query list. Bench's timed
-  * gate is untouched: this is a separate main.
+  * each record carries the `spark.*` properties it ran under. With
+  * `SPARK_GRAFT_WARMUP=n` each query first runs n untimed times, caches
+  * cleared after each, so the record shows its steady state, not class
+  * loading and JIT. Bench's timed gate is untouched: this is a separate main.
   */
 object Profile {
   /** Runs `fn` once under the root span `queries.<name>` with `rec`
@@ -91,19 +93,24 @@ object Profile {
     val spark = Verify.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val run = Map("sf" -> sfDir, "cpus" -> cpus, "git" -> Provenance.gitSha,
+    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "0").toInt
+    def clear(): Unit = {
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    }
+    val run = Map("sf" -> sfDir, "cpus" -> cpus, "warmup" -> warmup, "git" -> Provenance.gitSha,
       "conf" -> sys.props.toMap.filter(_._1.startsWith("spark.")))
     val rec = new obs.Recorder().attach(spark)
     val w = Files.newBufferedWriter(Paths.get(out))
     try SparkEntry.registry.filter(q => only.forall(_.exists(q.name.startsWith))).foreach { q =>
+      for (_ <- 1 to warmup) { Try(q.fn(spark, sfDir).count()); clear() }
       val r = query(spark, rec, sfDir, q.name, q.fn)
       w.write(Serialization.write(r ++ run)(DefaultFormats))
       w.newLine()
       w.flush()
       System.err.println("profile %s %.2f s, %s jobs, %s leaked RDDs %s".format(
         q.name, r("wall_s"), r("jobs"), r("leaked_rdds"), r("error")))
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      clear()
     } finally w.close()
     spark.stop()
   }

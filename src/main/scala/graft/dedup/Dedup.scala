@@ -385,16 +385,15 @@ object Dedup {
     * doc×doc); verification joins ONLY candidate pairs against per-doc
     * distinct-shingle arrays (a semi-join-sized fraction of the corpus);
     * the verified pair graph holds near-dups only — usually orders of
-    * magnitude smaller than the corpus — so components run in-process
-    * GraphX Pregel when the graph is small (the communityLevels
-    * measurement: on small graphs its convergence loop beats a Catalyst
-    * superstep loop) and switch to [[graft.graph.GraphOps.ccStarEdges]]
-    * (pointer-jumping, O(log n) rounds on any topology) past
-    * `graphxMaxEdges` verified pairs — the heavily-duplicated-corpus
+    * magnitude smaller than the corpus — so at or below `graphxMaxEdges`
+    * verified pairs its components come from one collect and a
+    * union-find on the driver (32 MB of edges at the 2M default), and
+    * past it from [[graft.graph.GraphOps.ccStarEdges]] (pointer jumping,
+    * O(log n) rounds on any topology) — the heavily-duplicated-corpus
     * regime where each dup group is a near-clique and the pair graph
-    * itself is big (round-12 measurement at sf10: the 27M-edge replicated
-    * dup graph took GraphX Pregel minutes of RDD churn per run; the
-    * Catalyst path cut q91's min-of-2 189 s → 88 s). The pick is
+    * itself is big (round-12 measurement at sf10: on the 27M-edge
+    * replicated dup graph the Catalyst path cut q91's min-of-2 189 s →
+    * 88 s against GraphX Pregel). The pick is
     * [[graft.graph.GraphOps.ccAuto]]'s; both engines label every vertex
     * with its component's MIN id (AlgoRandomSpec asserts set-equality),
     * so the switch can never change results. */

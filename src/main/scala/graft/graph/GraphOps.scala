@@ -3,10 +3,11 @@ package graft.graph
 import org.apache.spark.graphx.{Edge, EdgeTriplet, Graph, Pregel, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.obs.span
 
-/** Graph/community layer (SURVEY §2.10) on GraphX.
+/** Graph/community layer (SURVEY §2.10).
   *
   * Mirrors the reference's graph plane: bipartite graph build
   * (neo4j_helpers.py:196-234 via /root/reference), community detection
@@ -17,9 +18,10 @@ import graft.obs.span
   * self-joins, the scalable form of the 2-hop Cypher).
   *
   * Scale notes: edge lists arrive as DataFrames (distinct equi-join
-  * products, shuffled on their keys); GraphX partitions edges via
-  * EdgePartition2D at cluster scale; CC/LPA are Pregel programs whose
-  * per-superstep cost is one shuffle over the (pruned) active edge set.
+  * products, shuffled on their keys). The pipelines' loops are Catalyst
+  * supersteps over a partitioned edge cache, except CC on graphs small
+  * enough for a union-find on the driver ([[ccAuto]]); the GraphX Pregel
+  * forms stay as RDD reference implementations.
   */
 object GraphOps {
 
@@ -35,9 +37,8 @@ object GraphOps {
   /** Materialize a small-ish result DataFrame and release the graph's
     * cached RDDs: GraphX caches vertices/edges per superstep, and leaving
     * them resident squeezes execution memory for every subsequent query in
-    * the session (observed 3-7× slowdowns). The result comes persisted
-    * or lazily checkpointed (still distributed — no driver collect); one
-    * job materializes it before the graphs are unpersisted. */
+    * the session (observed 3-7× slowdowns). One job fills the persisted
+    * result before the graphs are unpersisted. */
   private def materializeAndRelease(
       kept: DataFrame, graphs: Graph[_, _]*): DataFrame = {
     kept.count()
@@ -58,16 +59,11 @@ object GraphOps {
 
   /** Connected components → DataFrame(id, component) where component is
     * GraphX's min-vertex-id label. Deterministic (min propagation). */
-  def connectedComponentsDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame =
-    graphxComponents(spark, g, _.persist())
-
-  /** GraphX CC kept by `keep` (persist or lazy localCheckpoint). */
-  private def graphxComponents(spark: SparkSession, g: Graph[Long, Int],
-      keep: DataFrame => DataFrame): DataFrame = {
+  def connectedComponentsDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame = {
     import spark.implicits._
     val cc = g.connectedComponents()
     materializeAndRelease(
-      keep(cc.vertices.map { case (id, c) => (id, c) }.toDF("id", "component")), cc, g)
+      cc.vertices.map { case (id, c) => (id, c) }.toDF("id", "component").persist(), cc, g)
   }
 
   /** Deterministic synchronous label propagation (the G2 community
@@ -97,13 +93,6 @@ object GraphOps {
       res, g)
   }
 
-  /** The same deterministic synchronous LPA expressed as a Catalyst loop —
-    * per superstep: neighbor-label join → (id,label) count → hash-agg
-    * argmax with the (count desc, label asc) tie-break. Tungsten hash joins +
-    * codegen beat RDD Pregel's per-message Map allocations by ~10× here,
-    * and every step is a plain shuffle-on-key that scales out; this is the
-    * 100 TB path (the Pregel form above is kept as the GraphX-idiomatic
-    * reference implementation). */
   /** Supersteps per lazily-chained block in the Catalyst loops below.
     * Each superstep references the previous state exactly once, so a
     * block is a LINEAR plan — Catalyst optimizes it whole and the block
@@ -277,6 +266,10 @@ object GraphOps {
     })
   }
 
+  /** The same deterministic synchronous LPA as a Catalyst loop: per
+    * superstep a neighbor-label join, an (id, label) count and a hash-agg
+    * argmax with the (count desc, label asc) tie-break — ~10× faster than
+    * the Pregel form's per-message Maps, and the path that scales out. */
   def lpaEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int,
       broadcastState: Option[Boolean] = None, numPartitions: Option[Int] = None): DataFrame = {
     // src-partitioned: the superstep joins on dst and BOTH aggs
@@ -364,8 +357,7 @@ object GraphOps {
   /** Connected components as a Catalyst loop: min-label propagation to
     * fixpoint (labels converge to the component's min vertex id in
     * O(diameter) supersteps — the right trade for the short-diameter
-    * graphs pipelines build; GraphX's Pregel CC stays alongside as the
-    * RDD-idiomatic form). Convergence-checked at block boundaries (see
+    * graphs pipelines build). Convergence-checked at block boundaries (see
     * SuperstepBlock), `maxIter` bounds pathological chains. Returns
     * (id, component) as a materialized local checkpoint. */
   def ccEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 20,
@@ -490,72 +482,103 @@ object GraphOps {
     truncatedCc(edges, srcCol, dstCol)(ccStarRounds(_, _, _, parts, maxIter))
   }
 
-  /** Connected components by graph size: the one place the GraphX /
-    * Catalyst engine is picked from the data. The `(src, dst)` frame is persisted
-    * and counted once; that count sizes the partitions
+  /** Connected components by graph size: the one place the engine is
+    * picked from the data. Without `knownRows` the `(src, dst)` frame is
+    * persisted and counted once; the count sizes the partitions
     * ([[sizedLoopParts]]) and picks the engine. At or below
-    * `graphxMaxEdges` GraphX Pregel runs over the coalesced cache: on
-    * small graphs its in-process convergence beats the Catalyst loop's
-    * per-round driver gates and near-empty shuffles. Above it the
-    * [[ccStarEdges]] rounds run over one lazy `localCheckpoint` view of
-    * the cache, so no round re-renders the caller's lineage and its
-    * O(log n) rounds hold on any topology. Both engines label a vertex
-    * with its component's min id (AlgoRandomSpec), so the pick changes
-    * wall time only.
+    * `localMaxEdges` a union-find labels the collected edges on the
+    * driver ([[localComponents]]; 32 MB at the largest threshold, 2M,
+    * a broadcast build side's size) with no per-superstep cost. Above
+    * it the [[ccStarEdges]] rounds run over one lazy `localCheckpoint`
+    * view of the cache, so no round re-renders the caller's lineage and
+    * its O(log n) rounds hold on any topology. Both engines label a
+    * vertex with its component's min id (AlgoRandomSpec), so the pick
+    * changes wall time only.
     *
-    * Each caller keeps its own threshold because its graphs differ in
-    * where the crossover sits: the Leiden split's intra graphs and
-    * semDedup's near-clique τ-graphs lose under GraphX well below 2M
-    * edges (sf1: 68 s vs 38 s on q150's splits, 16–20 s vs 9–10 s on a
-    * 207k-edge τ-graph; GraphX still wins at 1.2k edges), so both use
-    * 50k; fuzzyDedup's sparse near-dup graphs keep 2M (sf10: a 27M-edge
-    * dup graph went 189 s → 88 s on the Catalyst side).
+    * Each caller keeps the threshold it set against GraphX Pregel, the
+    * small-graph engine before: 50k for the Leiden split's intra graphs
+    * and semDedup's near-clique τ-graphs (sf1: 68 s vs 38 s on q150's
+    * splits), 2M for fuzzyDedup's sparse near-dup graphs (sf10: a
+    * 27M-edge dup graph went 189 s → 88 s on the Catalyst side).
     *
     * `pointerJumping = false` runs [[ccEdges]]' min-propagation
-    * supersteps instead of the pointer-jumping rounds (`maxIter` then
-    * counts supersteps): semDedup's τ-graphs are near-cliques that
-    * converge in the first superstep block, and forced onto the
-    * Catalyst side at sf0.1 (4 cores; CHANGES.md, "One connected-components
-    * entry point") semDedup took 14.0–15.4 s with the rounds vs 3.8–4.6 s
-    * with the supersteps.
+    * supersteps instead (`maxIter` then counts supersteps): semDedup's
+    * near-clique τ-graphs converge in one block, 3.8–4.6 s vs 14.0–15.4 s
+    * with the rounds at sf0.1. The local engine ignores `maxIter`.
     *
     * `knownRows`, when given, must be `edges`' exact row count (the
     * Leiden ladder reads it off its refine gate). The input is then
     * neither persisted nor counted: the engine's first job runs its plan.
     *
-    * Returns (id, component), materialized, as a local checkpoint
-    * whichever engine ran; the caller releases it with
-    * [[releaseLocalCheckpoint]] once its own output is materialized.
-    * Its size estimate is bounded by two vertices per edge, so a join
-    * over it plans like one over the persisted frame GraphX CC used to
-    * return. The edge cache and the view are released before returning. */
+    * Returns (id, component) for every vertex of an edge, its size
+    * estimate bounded so a join over it plans a broadcast at once. The
+    * caller releases it with [[releaseLocalCheckpoint]] once its own
+    * output is materialized: the Catalyst engine's is a local
+    * checkpoint, the local one holds no blocks (a no-op). */
   private[graft] def ccAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      graphxMaxEdges: Long, maxIter: Int = 30, pointerJumping: Boolean = true,
+      localMaxEdges: Long, maxIter: Int = 30, pointerJumping: Boolean = true,
       knownRows: Option[Long] = None): DataFrame = span("graph.ccAuto") {
-    val spark = edges.sparkSession
     val proj = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val input = if (knownRows.isEmpty) proj.persist() else proj
     // the caller's lazy input plan (fuzzyDedup's LSH band + verify pass)
     // runs here unless its count is known
     val rows = knownRows.getOrElse(span("graph.ccAuto.input")(input.count()))
-    val parts = sizedLoopParts(spark, BigInt(rows) * 2)
+    val parts = sizedLoopParts(edges.sparkSession, BigInt(rows) * 2)
     val comp =
-      if (rows <= graphxMaxEdges)
-        graphxComponents(spark,
-          fromEdges(spark, input.coalesce(parts), "src", "dst"),
-          _.localCheckpoint(eager = false))
+      if (rows <= localMaxEdges) localComponents(input, parts)
       else {
         val view = input.localCheckpoint(eager = false)
         val labels =
           if (pointerJumping) ccStarRounds(view, "src", "dst", parts, maxIter)
           else ccMinSupersteps(view, "src", "dst", parts, maxIter, None, view)
         releaseLocalCheckpoint(view)
-        labels
+        // at most two vertices per edge
+        GraftSqlBridge.withRowBound(labels, BigInt(rows) * 2)
       }
     if (knownRows.isEmpty) input.unpersist(blocking = false)
-    // at most two vertices per edge: lets the caller's join over the
-    // labels plan a broadcast without waiting for AQE's shuffle stages
-    GraftSqlBridge.withRowBound(comp, BigInt(rows) * 2)
+    comp
+  }
+
+  /** [[ccAuto]]'s driver-local engine. One job collects the `(src, dst)`
+    * rows as one packed `Array[Long]` per partition (16 bytes an edge);
+    * the sorted distinct endpoints index a union-find that roots each
+    * union at the smaller index, i.e. the smaller id, and halves paths,
+    * so each root is its component's min id. Returns (id, component) in
+    * `parts` partitions of an RDD over the driver's arrays, bounded by
+    * its exact row count; not a `LocalRelation`, whose rows the optimizer
+    * evaluates at plan time to fold projections over it (GraphSpec pins
+    * the form). */
+  private def localComponents(edges: DataFrame, parts: Int): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    // a Dataset action, not an RDD one: the job and the AQE stages of the
+    // caller's plan run under one SQL execution
+    val ends = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .mapPartitions { it =>
+        val b = Array.newBuilder[Long]
+        it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect().flatten
+    val ids = ends.sorted
+    var n = 0
+    for (i <- ids.indices if n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+    val up = Array.range(0, n)
+    @annotation.tailrec def find(x: Int): Int =
+      if (up(x) == x) x else { up(x) = up(up(x)); find(up(x)) }
+    def idx(id: Long) = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (k <- ends.indices by 2) {
+      val (a, b) = (find(idx(ends(k))), find(idx(ends(k + 1))))
+      if (a < b) up(b) = a else if (b < a) up(a) = b
+    }
+    val slices = (0 until parts).map { p =>
+      val (from, until) = ((n.toLong * p / parts).toInt, (n.toLong * (p + 1) / parts).toInt)
+      (ids.slice(from, until), Array.tabulate(until - from)(i => ids(find(from + i))))
+    }
+    val rows = spark.sparkContext.parallelize(slices, parts).flatMap { case (id, c) =>
+      id.indices.iterator.map(i => Row(id(i), c(i)))
+    }
+    val schema = StructType(Seq("id", "component").map(StructField(_, LongType, false)))
+    GraftSqlBridge.withRowBound(spark.createDataFrame(rows, schema), n)
   }
 
   /** The [[ccStarEdges]] rounds over a materialized edge frame. Returns
@@ -563,12 +586,9 @@ object GraphOps {
   private def ccStarRounds(in: DataFrame, srcCol: String, dstCol: String,
       parts: Int, maxIter: Int): DataFrame = span("graph.ccStarRounds") {
     val (und, release) = undirectedCache(in, srcCol, dstCol, "src", Some(parts))
-    // NOT checkpointed (round 15, r14 verdict item 3 — one driver gate
-    // fewer): round 1 references this twice, recomputing the distinct
-    // from und's cache — one extra in-job scan, no extra gate; round 2
-    // onward reads the round-1 checkpoint. The `init eq labels` guard
-    // below keeps releaseLocalCheckpoint away from it — its leaves are
-    // the input frame's, whose blocks the loop still needs.
+    // NOT checkpointed (one driver gate fewer): round 1 recomputes the
+    // distinct from und's cache in-job; the `init eq labels` guard below
+    // keeps releaseLocalCheckpoint off it (its leaves are the input's)
     val init = und.select(col("src").as("id")).distinct()
       .withColumn("l", col("id"))
     var labels = init
@@ -581,15 +601,10 @@ object GraphOps {
         .groupBy(col("src").as("id")).agg(min(col("ln")).as("lp"))
         .join(labels, "id")
         .select(col("id"), least(col("l"), col("lp")).as("l"))
-      // ONE pointer jump per round (round 15 probed a double jump —
-      // jump(jump(prop)) — expecting to halve the loop's gate count:
-      // measured on q147's fused split the ROUND COUNT did not drop (the
-      // intra components are shallow; rounds are bound by the
-      // min-propagation frontier plus the one confirmation round, not by
-      // chain length) while stages per round grew ~25% (126→154 jobs) —
-      // the extra self-join's exchanges don't reuse under AQE here.
-      // Single jump retained; the negative result is recorded so the
-      // next round doesn't re-try it.
+      // ONE pointer jump per round. A double jump did not cut the round
+      // count on q147's fused split (rounds are bound by the
+      // min-propagation frontier plus one confirmation round, not chain
+      // length) and grew stages per round ~25% (126→154 jobs).
       val doubled = prop.as("a")
         .join(prop.select(col("id").as("pid"), col("l").as("pl")).as("p"),
           col("a.l") === col("pid"), "left")
@@ -622,8 +637,9 @@ object GraphOps {
     * the result is bit-identical to full CC over old ∪ new (the q138
     * oracle states precisely that).
     *
-    * Cost: two label joins over the batch + the contracted-graph CC
-    * loop + one vertex-sized relabel join; never touches old edges. */
+    * Cost: two label joins over the batch + [[ccAuto]] over the
+    * contracted graph + one vertex-sized relabel join; never touches old
+    * edges. Returns (id, component), checkpointed and materialized. */
   def incrementalCC(
       labels: DataFrame, newEdges: DataFrame,
       srcCol: String, dstCol: String): DataFrame = {
@@ -636,29 +652,22 @@ object GraphOps {
         coalesce(col("cd"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      // lazy: the sizing count below materializes it; CC + the relabel
-      // join then branch on the truncated lineage
-      .localCheckpoint(eager = false)
-    // the contracted graph is batch-bounded and usually TINY relative to
-    // the labeling — GraphX's in-process Pregel beats the Catalyst
-    // ccEdges loop there (chained-block planning overhead dominates on
-    // small graphs; same measurement as communityLevels L2), with
-    // parallelism sized to the data (the count is ~free on the
-    // checkpointed frame). ccEdges(mapped, ...) remains the swap-in when
-    // a batch is itself corpus-sized.
-    val spark = labels.sparkSession
-    val mParts = sizedLoopParts(spark, BigInt(mapped.count()))
-    val merged = connectedComponentsDF(spark,
-        fromEdges(spark, mapped.coalesce(mParts), "src", "dst"))
-      .select(col("id").as("component"), col("component").as("newc"))
+    // the contracted graph is batch-bounded and usually tiny next to the
+    // labeling: ccAuto labels it on the driver below 50k edges
+    val comp = ccAuto(mapped, "src", "dst", localMaxEdges = 50000L)
+    val merged = comp.select(col("id").as("component"), col("component").as("newc"))
     // batch vertices the old labeling has never seen enter as self-labels
     val newVerts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .join(l.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
-    l.unionByName(newVerts)
+    val out = l.unionByName(newVerts)
       .join(merged, Seq("component"), "left")
       .select(col("id"), coalesce(col("newc"), col("component")).as("component"))
+      .localCheckpoint(eager = false)
+    val n = out.count()
+    releaseLocalCheckpoint(comp)
+    GraftSqlBridge.withRowBound(out, n)
   }
 
   /** Multi-resolution community ladder — the engine's analog of the
@@ -673,18 +682,18 @@ object GraphOps {
     *
     * Scale: contraction shrinks the edge set geometrically; every level
     * is equi-joins + the lpaEdges Catalyst loop; CC runs on the tiny
-    * contracted graph. */
+    * contracted graph. Returns the levels checkpointed and materialized;
+    * every intermediate is released. */
   def communityLevels(
       spark: SparkSession, edges: DataFrame, srcCol: String, dstCol: String,
       iterPerLevel: Int = 4): DataFrame = {
-    // persist the edge set ONCE — the L0 LPA supersteps AND the
-    // contraction join below all scan the same cache (previously the
-    // upstream distinct re-ran for the contraction; ~1s at sf0.1, a full
-    // re-shuffle at corpus scale)
+    // the L0 LPA supersteps AND the contraction join scan one cache
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
     // L0: fine communities on the raw graph; checkpointed because four
     // downstream branches reference it (see lpaEdges lineage note)
-    val l0 = lpaEdges(e, "src", "dst", iterPerLevel).localCheckpoint()
+    val lpa0 = lpaEdges(e, "src", "dst", iterPerLevel)
+    val l0 = lpa0.localCheckpoint()
+    lpa0.unpersist(blocking = false)
     // contract: community graph (distinct inter-community edges);
     // checkpointed — three levels branch off it (see lpaEdges note)
     val asg0 = l0.select(col("id"), col("label").as("c0"))
@@ -696,30 +705,18 @@ object GraphOps {
       .distinct()
       .localCheckpoint() // eager: e's last consumer — safe to release below
     e.unpersist(blocking = false)
-    // L1: LPA over the contracted graph with self-loops (self-votes).
-    // The contracted edge set is ALWAYS ≪ the original (distinct
-    // community pairs); counting it is ~free (ce is checkpointed) and
-    // sizing the superstep partitions to the data ([[sizedLoopParts]])
-    // drops the near-empty-task scheduling overhead that otherwise
-    // dominates this stage (~25% at sf0.1). A contracted graph that is
-    // still huge keeps the session default.
-    val l1Parts = sizedLoopParts(spark, BigInt(ce.count()))
+    // L1: LPA with self-votes over the contracted graph (≪ the
+    // original), its partitions sized to its count ([[sizedLoopParts]]):
+    // near-empty tasks cost ~25% of this stage at sf0.1
+    val ceRows = ce.count()
+    val l1Parts = sizedLoopParts(spark, BigInt(ceRows))
     val withSelf = ce.union(
       ce.select(col("src").as("v")).union(ce.select(col("dst").as("v")))
         .distinct().select(col("v").as("src"), col("v").as("dst")))
     val l1 = lpaEdges(withSelf, "src", "dst", iterPerLevel,
       numPartitions = Some(l1Parts)) // (c0 -> c1)
-    // L2: coarsest = connected components of the contracted graph.
-    // GraphX CC here: on the small contracted graph its in-process Pregel
-    // convergence beats the Catalyst ccEdges loop even in block-lazy form
-    // (re-measured round 4: 7.2s vs 11.1s end-to-end at sf0.1 — the
-    // convergence-probe jobs per block dominate on a tiny graph); ccEdges
-    // remains the scale path when the contracted graph is itself huge.
-    // same data-sized parallelism for the Pregel CC: 32 near-empty RDD
-    // partitions per superstep cost more scheduling than the tiny
-    // contracted graph's compute (coalesce is narrow — no shuffle)
-    val l2 = connectedComponentsDF(spark,
-      fromEdges(spark, ce.coalesce(l1Parts), "src", "dst"))
+    // L2: coarsest = connected components of the contracted graph
+    val l2 = ccAuto(ce, "src", "dst", localMaxEdges = 50000L, knownRows = Some(ceRows))
     val lvl0 = asg0.select(col("id"), lit(0).as("level"), col("c0").as("community"))
     val lvl1 = asg0.join(l1.select(col("id").as("c0"), col("label").as("c1")), "c0")
       .select(col("id"), lit(1).as("level"), col("c1").as("community"))
@@ -730,7 +727,11 @@ object GraphOps {
     val lvl2 = asg0.join(l2.select(col("id").as("c0"), col("component").as("c2")),
         Seq("c0"), "left")
       .select(col("id"), lit(2).as("level"), coalesce(col("c2"), col("c0")).as("community"))
-    lvl0.unionByName(lvl1All).unionByName(lvl2)
+    val out = lvl0.unionByName(lvl1All).unionByName(lvl2).localCheckpoint(eager = false)
+    val n = out.count()
+    Seq(l0, ce, l2).foreach(releaseLocalCheckpoint)
+    l1.unpersist(blocking = false)
+    GraftSqlBridge.withRowBound(out, n)
   }
 
   /** PageRank as a Catalyst loop in FIXED-POINT arithmetic: rank mass is
@@ -1257,22 +1258,17 @@ object GraphOps {
     * sub-communities — so the output is a deterministic refinement of
     * the input partition.
     *
-    * CC runs via [[ccAuto]]: GraphX Pregel (to convergence) at or below
+    * CC runs via [[ccAuto]]: a union-find on the driver at or below
     * `graphxMaxEdges` intra edges, [[ccStarEdges]] (pointer jumping,
-    * O(log n) rounds on ANY topology) above — never [[ccEdges]]:
-    * min-propagation needs O(diameter) supersteps, and a chain-shaped
-    * intra-community subgraph with diameter > the superstep budget would
-    * return UNCONVERGED labels — i.e. emit a still-internally-
-    * disconnected community with no error, violating the exact
-    * guarantee this function exists to provide. `maxIter` bounds
-    * pointer-jumping ROUNDS (each round halves label-chain lengths, so
-    * the default 20 covers components of ~2^20 hops — every real
-    * graph).
+    * O(log n) rounds on ANY topology) above — never [[ccEdges]], whose
+    * O(diameter) supersteps would leave a long chain-shaped community
+    * UNCONVERGED, i.e. still internally disconnected, with no error.
+    * `maxIter` bounds pointer-jumping ROUNDS (the default 20 covers
+    * components of ~2^20 hops).
     *
-    * Scale shape: two vertex-sized equi-joins to mark intra edges
-    * (AQE broadcasts the assignment when it fits) + the CC loop bounded
-    * by the INTRA edge subset (≤ the graph, often ≪ after a sensible
-    * pre-partition) — no pairwise work, no driver collect.
+    * Scale shape: two vertex-sized equi-joins mark intra edges (AQE
+    * broadcasts the assignment when it fits), then CC runs over the
+    * INTRA edge subset only (often ≪ the graph) — no pairwise work.
     *
     * Returns (id, label) for every vertex of `assignment`, checkpointed
     * and materialized; every intermediate is released. */
@@ -1320,7 +1316,9 @@ object GraphOps {
     * intra edges join the chain's own accepted assignment, and their row
     * count rides the refine gate (W of that assignment counts each
     * intra-community row of `edges` once per direction), so ccAuto
-    * neither persists nor counts its input. Results equal the two-call
+    * neither persists nor counts its input: below 50k intra edges one
+    * job collects them and the driver's union-find labels them. Results
+    * equal the two-call
     * composition ([[lpaLouvainRefineMulti]], then [[wellConnectedSplit]]
     * per γ; AlgoRandomSpec).
     * Returns (gamma_pct, id, label): one checkpoint, materialized and
@@ -1333,7 +1331,7 @@ object GraphOps {
       numPartitions: Option[Int] = None): DataFrame =
     leidenLadder(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
         broadcastState, numPartitions) { (intra, rows) =>
-      ccAuto(intra, "src", "dst", graphxMaxEdges = 50000L, maxIter = 20,
+      ccAuto(intra, "src", "dst", localMaxEdges = 50000L, maxIter = 20,
         knownRows = Some(rows))
     }
 

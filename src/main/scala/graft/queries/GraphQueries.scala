@@ -316,18 +316,11 @@ object GraphQueries {
         .filter(col("a.o") % 3 =!= 0)
         .select(col("a.o").as("src"), col("b.o").as("dst"))
         .persist()
-      // materialize once and size the CC supersteps to the edge count
-      // (GraphOps.sizedLoopParts) — the path graph's components are
-      // tiny, so near-empty default-partition tasks would dominate
-      val parts = GraphOps.sizedLoopParts(s, BigInt(e.count()))
       val old = e.filter(col("src") % 5 =!= 0)
       val batch = e.filter(col("src") % 5 === 0)
-      // GraphX Pregel for the base labeling: the path graph's components
-      // are tiny (≤4 vertices), where the Catalyst loop's chained-block
-      // planning overhead dominates — same choice as communityLevels L2;
-      // ccEdges is the swap-in for big-component graphs
-      val base = GraphOps.connectedComponentsDF(s,
-        GraphOps.fromEdges(s, old.coalesce(parts), "src", "dst"))
+      // the base labeling on the driver: a sparse path graph whose
+      // components hold at most 4 vertices (fuzzyDedup's 2M threshold)
+      val base = GraphOps.ccAuto(old, "src", "dst", localMaxEdges = 2000000L)
       GraphOps.incrementalCC(base, batch, "src", "dst")
     },
 

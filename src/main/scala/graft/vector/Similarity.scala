@@ -3,7 +3,7 @@ package graft.vector
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 import graft.obs.span
@@ -437,10 +437,11 @@ object Similarity {
     * checkpointed and materialized; every intermediate is released.
     *
     * CC over the τ-graph is [[graft.graph.GraphOps.ccAuto]]'s engine
-    * pick, with min-propagation supersteps on its Catalyst side;
-    * `graphxMaxEdges` is LOWER here than fuzzyDedup's 2M because
-    * semDedup's τ-graphs are dense near-clique blobs (ccAuto's doc has
-    * the measurements). The threshold affects wall time only. */
+    * pick: a union-find on the driver at or below `graphxMaxEdges`
+    * pairs, min-propagation supersteps above. The threshold is LOWER
+    * here than fuzzyDedup's 2M because semDedup's τ-graphs are dense
+    * near-clique blobs (ccAuto's doc has the measurements). It affects
+    * wall time only. */
   def semDedup(
       emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int, tau: Double,
@@ -471,10 +472,10 @@ object Similarity {
         coalesce(col("component"), col(idCol)).as("keep_id"))
       .withColumn("is_dup", col("keep_id") =!= col(idCol))
       .localCheckpoint(eager = false)
-    out.count()
+    val n = out.count()
     graft.graph.GraphOps.releaseLocalCheckpoint(comp)
     v.unpersist(blocking = false)
-    out
+    GraftSqlBridge.withRowBound(out, n)
   }
 
   /** The corpus-scaled SemDeDup k (the paper's own sizing: cluster COUNT

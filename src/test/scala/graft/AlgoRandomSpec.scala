@@ -486,14 +486,14 @@ class AlgoRandomSpec extends SparkSpec {
       // the row count each chain hands ccAuto (W/2 off the refine gate)
       // is the count of the intra frame it builds (on every third random
       // case and both fixed ones); odd cases run the Catalyst CC rounds,
-      // even ones GraphX
+      // even ones the driver-local union-find
       if (i % 3 == 0 || i >= random.size) {
         val handed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
         val hooked = GraphOps.leidenLadder(e, "src", "dst", lpaIters = 2,
             rounds = rounds, gammaPcts = gammas, broadcastState = None,
             numPartitions = None) { (intra, known) =>
           handed.add(known -> intra.count())
-          GraphOps.ccAuto(intra, "src", "dst", graphxMaxEdges = if (i % 2 == 1) 0L else 50000L,
+          GraphOps.ccAuto(intra, "src", "dst", localMaxEdges = if (i % 2 == 1) 0L else 50000L,
             maxIter = 20, knownRows = Some(known))
         }
         assert(hooked.as[(Long, Long, Long)].collect().sorted.toSeq == want,
@@ -734,9 +734,10 @@ class AlgoRandomSpec extends SparkSpec {
 
   test("ccAuto equals ccEdges on both engines and leaves only its output") {
     // the same random graphs as above, under the Catalyst rounds
-    // (graphxMaxEdges = 0) and under GraphX (the callers' 50k default)
+    // (localMaxEdges = 0) and under the driver-local union-find (the
+    // callers' 50k default), whose output holds no cached blocks
     val sc = spark.sparkContext
-    for (seed <- Seq(7, 41, 97); graphxMaxEdges <- Seq(0L, 50000L)) {
+    for (seed <- Seq(7, 41, 97); localMaxEdges <- Seq(0L, 50000L)) {
       val rnd = new Random(seed)
       val n = 35
       val edges = Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
@@ -745,17 +746,50 @@ class AlgoRandomSpec extends SparkSpec {
       val prop = GraphOps.ccEdges(df, "src", "dst", maxIter = 40)
         .as[(Long, Long)].collect().toMap
       val before = sc.getPersistentRDDs.keySet
-      val out = GraphOps.ccAuto(df, "src", "dst", graphxMaxEdges)
+      val out = GraphOps.ccAuto(df, "src", "dst", localMaxEdges)
       val own = out.queryExecution.analyzed.collectLeaves().collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
       }.toSet
-      assert(own.size == 1 && sc.getPersistentRDDs.keySet -- before == own,
-        s"seed $seed, graphxMaxEdges=$graphxMaxEdges left more than its output registered")
+      assert(own.size == 1 && sc.getPersistentRDDs.keySet -- before ==
+          (if (localMaxEdges > 0) Set.empty[Int] else own),
+        s"seed $seed, localMaxEdges=$localMaxEdges left more than its output registered")
       // read after the call: the edge cache and the view are released
       Thread.sleep(200L) // time for the asynchronous block removal
       assert(out.as[(Long, Long)].collect().toMap == prop,
-        s"ccAuto mismatch for seed $seed, graphxMaxEdges=$graphxMaxEdges")
+        s"ccAuto mismatch for seed $seed, localMaxEdges=$localMaxEdges")
       GraphOps.releaseLocalCheckpoint(out)
+    }
+  }
+
+  test("ccAuto's driver-local engine equals the Catalyst engines on edge-case graphs") {
+    // each input at the callers' 50k default: the local union-find must
+    // label like ccEdges / ccStarEdges and leave no RDD or cache entry
+    val sc = spark.sparkContext
+    val star = (1L to 10000L).map(0L -> _)
+    val path = new Random(5).shuffle((0L until 9999L).map(v => v -> (v + 1L)))
+    val cases = Seq(
+      "empty" -> Seq.empty[(Long, Long)],
+      "self-loops only" -> Seq(1L -> 1L, 5L -> 5L, -3L -> -3L),
+      "duplicate rows" -> Seq(1L -> 2L, 1L -> 2L, 2L -> 1L, 3L -> 4L, 3L -> 4L, 9L -> 9L),
+      "negative ids" -> Seq(-5L -> 3L, 3L -> -10L, 7L -> -1L, -1L -> 8L, -20L -> -30L),
+      "10k-leaf star" -> star,
+      "10k-vertex path" -> path)
+    for ((name, edges) <- cases) {
+      val df = edges.toDF("src", "dst")
+      // min propagation needs ~10⁴ supersteps on the path: the rounds there
+      val want = (if (name.endsWith("path")) GraphOps.ccStarEdges(df, "src", "dst", maxIter = 40)
+        else GraphOps.ccEdges(df, "src", "dst", maxIter = 40)).as[(Long, Long)].collect().toMap
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val entriesBefore = org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark)
+      val out = GraphOps.ccAuto(df, "src", "dst", localMaxEdges = 50000L)
+      assert(sc.getPersistentRDDs.keySet == rddsBefore, s"$name left an RDD")
+      assert(org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark) == entriesBefore,
+        s"$name left a cache entry")
+      val got = out.as[(Long, Long)].collect()
+      assert(got.length == got.map(_._1).distinct.length, s"$name repeats a vertex")
+      assert(got.toMap == want, s"ccAuto ≠ the Catalyst engine on $name")
+      if (name.startsWith("10k"))
+        assert(want.size >= 10000 && want.values.toSet == Set(0L), s"$name: wrong oracle")
     }
   }
 

@@ -289,20 +289,20 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fuzzyDedup: the large-graph ccStarEdges path (graphxMaxEdges=0) " +
-      "is bit-equal to the default GraphX path") {
+      "is bit-equal to the default driver-local path") {
     val a = base
     val b = base.replace("small dimension", "compact dimension")
     val c = b.replace("columnar parquet", "vectorized parquet")
     val corpus = Seq(
       (10L, a), (11L, b), (12L, c), (20L, unrelated), (21L, unrelated),
       (30L, "short text only")).toDF("doc_id", "text")
-    val graphx = Dedup.fuzzyDedup(spark, corpus, "doc_id", "text", bands = 8)
+    val local = Dedup.fuzzyDedup(spark, corpus, "doc_id", "text", bands = 8)
       .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
     val catalyst = Dedup.fuzzyDedup(spark, corpus, "doc_id", "text",
         bands = 8, graphxMaxEdges = 0L)
       .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    assert(catalyst == graphx)
-    assert(graphx.nonEmpty)
+    assert(catalyst == local)
+    assert(local.nonEmpty)
   }
 
   test("BandIndex facade: build/checkBatch/append/open replays the kernel " +

@@ -556,11 +556,28 @@ class GraphSpec extends SparkSpec {
       GraphOps.releaseLocalCheckpoint(out)
       m
     }
-    val graphx = run(graphxMaxEdges = 50000L)
+    val local = run(graphxMaxEdges = 50000L) // the driver-local union-find
     val star = run(graphxMaxEdges = 0L) // the ccStarEdges loop
-    assert(graphx == star)
-    assert(graphx == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+    assert(local == star)
+    assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       12L -> 12L, 13L -> 12L, 30L -> 30L))
+  }
+
+  test("ccAuto's local engine returns an RDD-backed frame with an exact size estimate") {
+    val df = Seq(1L -> 2L, 2L -> 3L, 7L -> 8L).toDF("src", "dst")
+    val out = GraphOps.ccAuto(df, "src", "dst", localMaxEdges = 50000L)
+    // an RDD leaf, never a LocalRelation, whose rows the optimizer would
+    // evaluate at plan time to fold the filter and projection below
+    val plan = out.filter(col("id") > 1L).select("component").queryExecution.optimizedPlan
+    assert(plan.collectLeaves().forall(_.isInstanceOf[LogicalRDD]), plan)
+    assert(org.apache.spark.sql.GraftSqlBridge.isCheckpoint(out))
+    val rowBytes = org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(out.queryExecution.analyzed.output)
+    assert(out.queryExecution.optimizedPlan.stats.sizeInBytes == rowBytes * 5)
+    // releasing it is a safe no-op: the rows still read back
+    GraphOps.releaseLocalCheckpoint(out)
+    assert(out.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
   }
 
   test("loop-input rule: cached frames and checkpoints are materialized, scans and joins are not") {

@@ -320,9 +320,9 @@ class SimilaritySpec extends SparkSpec {
       graft.graph.GraphOps.releaseLocalCheckpoint(out)
       rows
     }
-    val graphx = run(graphxMaxEdges = 50000L)
-    assert(run(graphxMaxEdges = 0L) == graphx) // the ccStarEdges rounds
-    assert(graphx.count(_._4) == 2)
+    val local = run(graphxMaxEdges = 50000L) // the driver-local union-find
+    assert(run(graphxMaxEdges = 0L) == local) // the min-propagation supersteps
+    assert(local.count(_._4) == 2)
   }
 
   test("semDedupAuto: corpus-scaled k sizing rule, delegation equals explicit k") {
