@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Build-time configuration for [[BandIndex]] — the MinHash/LSH
   * parameters that define the index's band keys plus the verify

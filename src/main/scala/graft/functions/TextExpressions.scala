@@ -197,7 +197,7 @@ object TextKernels {
     * that would corrupt) stops the loop and the last good form is kept. */
   def fixMojibake(s: UTF8String, passes: Int): UTF8String = {
     var cur: String = null
-    var base = s.toString
+    val base = s.toString
     var p = 0
     var go = true
     while (p < passes && go) {

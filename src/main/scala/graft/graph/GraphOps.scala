@@ -98,11 +98,82 @@ object GraphOps {
     * block is a LINEAR plan — Catalyst optimizes it whole and the block
     * runs as ONE job (no per-superstep driver barrier / broadcast-build
     * round-trip; measured ~10× on sub-second graphs, and at cluster
-    * scale it removes (block-1) scheduler barriers per block). The
-    * persist+count at block boundaries bounds plan depth and lets the
-    * previous block's cache be dropped, so memory stays bounded at any
-    * iteration count. */
+    * scale it removes (block-1) scheduler barriers per block). */
   private val SuperstepBlock = 4
+
+  /** The block loop of the Catalyst graph loops: LPA, both CC engines,
+    * fixed-point PageRank and k-core peeling. `step` maps one
+    * superstep's state to the next, and `block` steps chain lazily into
+    * one plan.
+    *
+    * - The snapshot: at each block boundary the state is [[snapshot]]ed,
+    *   and the one action that fills it also reads the `gate` aggregate
+    *   when there is one.
+    * - The gate: the loop halts once the gate reads null or the same
+    *   value as at the previous boundary.
+    * - The release: the previous snapshot is released once the next is
+    *   filled. `init` is the caller's and is never released.
+    * - The bound: the last snapshot is returned bounded by its exact
+    *   row count ([[GraftSqlBridge.withRowBound]]); the caller owns it
+    *   and releases it with [[releaseLocalCheckpoint]]. With `iters` 0
+    *   it is `init`'s snapshot.
+    *
+    * With `materializeLast = false` a first-and-final block runs no job:
+    * its state is returned persisted and unfilled, to a caller whose
+    * next job fills it (a lazy checkpoint would run the block's stages
+    * at the call, one driver gate more). A later final block still takes
+    * its action, because its plan reads the snapshot released before it
+    * returns. [[releaseState]] releases either form. */
+  private def supersteps(init: DataFrame, iters: Int, block: Int,
+      gate: Option[Column] = None, materializeLast: Boolean = true)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var state = init
+    var prev: Option[DataFrame] = None
+    var prevGate: Any = null
+    var done = 0
+    var halted = false
+    do {
+      val steps = math.min(block, iters - done)
+      val next = (1 to steps).foldLeft(state)((s, _) => step(s))
+      state =
+        if (!materializeLast && prev.isEmpty && done + steps >= iters) next.persist()
+        else {
+          val (snap, r) = snapshot(next, gate.toSeq: _*)
+          val g = gate.map(_ => r.get(1))
+          halted = g.exists(v => v == null || v == prevGate)
+          prevGate = g.orNull
+          snap
+        }
+      prev.foreach(releaseLocalCheckpoint)
+      prev = Some(state)
+      done += steps
+    } while (done < iters && !halted)
+    state
+  }
+
+  /** Releases what [[supersteps]] returned. */
+  private def releaseState(df: DataFrame): Unit =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      df.unpersist(blocking = false)
+    else releaseLocalCheckpoint(df)
+
+  /** `df` as a lazy `localCheckpoint` that one action fills while it
+    * reads the row count and `stats`. Returns the checkpoint bounded by
+    * that count ([[GraftSqlBridge.withRowBound]]) and the action's row:
+    * the count, then `stats`. The caller owns the checkpoint. */
+  private def snapshot(df: DataFrame, stats: Column*): (DataFrame, Row) = {
+    val cp = df.localCheckpoint(eager = false)
+    val r = cp.agg(count(lit(1)), stats: _*).head()
+    (GraftSqlBridge.withRowBound(cp, r.getLong(0)), r)
+  }
+
+  /** The CC gate: the exact decimal sum of the label column. Labels only
+    * ever decrease, so an unchanged sum means no label moved in the block
+    * (a fixed point; extra supersteps in a converged block are
+    * idempotent), and a null sum means no vertices. Decimal: no
+    * wraparound false convergence at any vertex count. A populated graph
+    * pays one extra, converged block to see the unchanged sum. */
+  private def labelSum(c: String): Column = sum(col(c).cast("decimal(38,0)"))
 
   /** Join-side wrapper for the vertex-sized per-iteration state of the
     * Catalyst graph loops. `bc = true` (default) pins a broadcast hint —
@@ -128,24 +199,15 @@ object GraphOps {
 
   /** Resolve the per-loop state-join strategy. Some(x) honors the
     * caller; None (auto, the default everywhere) pins the broadcast only
-    * while the statistics bound stays under [[BroadcastVertexLimit]] —
+    * while the vertex count stays under [[BroadcastVertexLimit]] —
     * beyond it the plain join side lets the planner/AQE pick a shuffle
     * join from runtime stats, degrading to one vertex-sized exchange per
     * superstep instead of an executor OOM (round-6 verdict item 6: the
-    * default must not hard-pin a broadcast at any size). */
-  private def resolveBroadcastState(choice: Option[Boolean], edges: DataFrame): Boolean =
-    choice.getOrElse {
-      val stats = edges.queryExecution.optimizedPlan.stats
-      stats.rowCount match {
-        case Some(rows) => rows * 2 <= BigInt(BroadcastVertexLimit)
-        case None       => stats.sizeInBytes <= BroadcastEdgeBytesLimit
-      }
-    }
-
-  /** [[resolveBroadcastState]] with an exact second opinion for DENSE
-    * graphs. The statistics bound can only infer vertices ≤ 2·edges, so
-    * past ~25M edges it refuses the state broadcast even when the real
-    * vertex count is tiny — sf10's 59M-edge part×supplier graph has just
+    * default must not hard-pin a broadcast at any size).
+    *
+    * The statistics bound is asked first. It can only infer vertices ≤
+    * 2·edges, so past ~25M edges it refuses the state broadcast even
+    * when the real vertex count is tiny — sf10's 59M-edge part×supplier graph has just
     * 2.1M vertices (avg degree ~28), and the refusal turns EVERY
     * superstep/refine pass into an edge-sized dst exchange of the
     * 118M-row undirected cache (measured: q126's refine rounds at sf10).
@@ -162,12 +224,31 @@ object GraphOps {
     * limit models (~1.2 GB). The stats path keeps its historical
     * single-count rule: it only ever admits graphs ≤ 25M edges, whose
     * blocks have always fit. */
-  private def resolveBroadcastStateExact(
+  private def resolveBroadcastState(
       choice: Option[Boolean], edges: DataFrame,
       vertexCount: => Long, stateCopies: Int = SuperstepBlock): Boolean =
-    choice.getOrElse(
-      resolveBroadcastState(None, edges) ||
-        vertexCount * stateCopies <= BroadcastVertexLimit)
+    choice.getOrElse {
+      val stats = edges.queryExecution.optimizedPlan.stats
+      stats.rowCount.fold(stats.sizeInBytes <= BroadcastEdgeBytesLimit)(
+        _ * 2 <= BigInt(BroadcastVertexLimit)) ||
+        vertexCount * stateCopies <= BroadcastVertexLimit
+    }
+
+  /** The vertices (id) of a src-keyed undirected cache and the
+    * state-join decision for them, handed to `loop`. When the
+    * statistics bound refuses the broadcast, the exact-count probe
+    * persists the vertex frame it counts, so `loop` seeds from it without
+    * a second distinct; it is unpersisted once `loop` has returned. */
+  private def withVertices(und: DataFrame, edges: DataFrame,
+      broadcastState: Option[Boolean])(loop: (DataFrame, Boolean) => DataFrame): DataFrame = {
+    val verts = und.select(col("src").as("id")).distinct()
+    var probed = false
+    val bc = resolveBroadcastState(broadcastState, edges,
+      { probed = true; verts.persist().count() })
+    val out = loop(verts, bc)
+    if (probed) verts.unpersist(blocking = false)
+    out
+  }
 
   /** Estimated edge rows from optimizer statistics — job-free. Parquet
     * scan-derived frames propagate ~4 stats-bytes/row (OPTIMIZATION_r17.md,
@@ -269,89 +350,50 @@ object GraphOps {
   /** The same deterministic synchronous LPA as a Catalyst loop: per
     * superstep a neighbor-label join, an (id, label) count and a hash-agg
     * argmax with the (count desc, label asc) tie-break — ~10× faster than
-    * the Pregel form's per-message Maps, and the path that scales out. */
+    * the Pregel form's per-message Maps, and the path that scales out.
+    * Returns (id, label) as a checkpoint bounded by its row count; the
+    * caller releases it with [[releaseLocalCheckpoint]]. */
   def lpaEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int,
       broadcastState: Option[Boolean] = None, numPartitions: Option[Int] = None): DataFrame = {
     // src-partitioned: the superstep joins on dst and BOTH aggs
     // ((src,label) counts, then the per-src argmax) cluster on src
     val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
-    // exact-count fallback: only evaluated when the stats bound refuses
-    // (dense-graph regime) — one distinct-count over the edge cache buys
-    // maxIter exchange-free supersteps. The probed vertex frame is
-    // persisted and handed to lpaSupersteps as the label seed, so the
-    // dense regime pays the vertex distinct once, not twice
-    val verts = und.select(col("src").as("id")).distinct()
-    var vertsProbed = false
-    val bc = resolveBroadcastStateExact(broadcastState, edges,
-      { vertsProbed = true; verts.persist(); verts.count() })
-    val labels = lpaSupersteps(und, maxIter, bc,
-      seed = if (vertsProbed) Some(verts) else None)
-    if (vertsProbed) verts.unpersist(blocking = false)
+    val labels = withVertices(und, edges, broadcastState)(lpaSupersteps(und, _, maxIter, _))
     release()
     labels
   }
 
-  /** LPA superstep loop over a PREBUILT src-partitioned undirected cache
-    * (shared by lpaEdges and the lpa+refine composites — the expansion
-    * shuffle is the setup cost worth paying once). Returns the final
-    * persisted snapshot; callers that BRANCH on it (e.g. communityLevels)
-    * must localCheckpoint it, or the shared subtree re-prints/
-    * re-optimizes exponentially. */
-  private def lpaSupersteps(und: DataFrame, maxIter: Int, bc: Boolean,
-      seed: Option[DataFrame] = None, materializeLast: Boolean = true): DataFrame =
-      span("graph.lpaSupersteps") {
-    // seed: a caller-persisted (id) vertex frame (the exact-count probe's)
-    // — reused so the initial distinct isn't recomputed; must be released
-    // by the caller AFTER this returns (the first block snapshot persists)
-    var labels = seed.getOrElse(und.select(col("src").as("id")).distinct())
-      .withColumn("label", col("id"))
-    var cached: Option[DataFrame] = None
-    var done = 0
-    while (done < maxIter) {
-      val steps = math.min(SuperstepBlock, maxIter - done)
-      for (_ <- 1 to steps) {
-        // most-frequent neighbor label, ties → smallest label. Two
-        // codegen'd hash aggs (count, then argmax via
-        // max(struct(cnt,-label))) measure ~2× faster than the
-        // single-shuffle mode(deterministic) form, whose
-        // ObjectHashAggregate map buffers fall out of codegen.
-        // (Negative result, measured round 5: the struct-max plans a
-        // SortAggregate, and re-encoding the argmax as max over ONE
-        // decimal(38,0) — cnt·10¹⁹ + (10¹⁹−1−label) — does keep the
-        // superstep in pure HashAggregate and won ~15% in an isolated
-        // probe, but made the full q42/q60 queries 2× SLOWER end-to-end
-        // (9.3s vs 4.9s at sf0.1): the 16-byte decimal state doubles
-        // the shuffle/cache row width and the decimal mul/mod/cast in
-        // every superstep outweighs the saved per-partition sort of the
-        // already-aggregated message table. Keep the struct form.)
-        val msgs = und
-          .join(stateSide(labels.withColumnRenamed("id", "nbr"), bc),
-            col("dst") === col("nbr"))
-          .groupBy(col("src").as("id"), col("label"))
-          .agg(count(lit(1)).as("cnt"))
-        labels = msgs
-          .groupBy("id")
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("best"))
-          .select(col("id"), (-col("best.nl")).as("label"))
-      }
-      val snap = labels.persist()
-      // Final-block piggyback (round-15, r14 verdict item 3 — fewer
-      // driver gates in the stall-amplifying loops): a SINGLE-block loop
-      // whose caller materializes the result immediately (the refine
-      // composites probe their lazy checkpoint right away) skips the
-      // block-boundary count — the downstream materializer pays the same
-      // job once and fills this persist in passing. Only the
-      // first-and-final block qualifies: a LATER block's recompute path
-      // must never reach past its predecessor's cache, and that cache is
-      // released on the next line.
-      if (materializeLast || cached.nonEmpty || done + steps < maxIter)
-        snap.count()
-      cached.foreach(_.unpersist(blocking = false))
-      cached = Some(snap)
-      labels = snap
-      done += steps
+  /** LPA supersteps from `verts` (id) over a PREBUILT src-partitioned
+    * undirected cache (shared by lpaEdges and the lpa+refine composites —
+    * the expansion shuffle is the setup cost worth paying once). Returns
+    * [[supersteps]]' last snapshot of (id, label). */
+  private def lpaSupersteps(und: DataFrame, verts: DataFrame, maxIter: Int, bc: Boolean,
+      materializeLast: Boolean = true): DataFrame = span("graph.lpaSupersteps") {
+    supersteps(verts.withColumn("label", col("id")), maxIter, SuperstepBlock,
+        materializeLast = materializeLast) { labels =>
+      // most-frequent neighbor label, ties → smallest label. Two
+      // codegen'd hash aggs (count, then argmax via
+      // max(struct(cnt,-label))) measure ~2× faster than the
+      // single-shuffle mode(deterministic) form, whose
+      // ObjectHashAggregate map buffers fall out of codegen.
+      // (Negative result, measured round 5: the struct-max plans a
+      // SortAggregate, and re-encoding the argmax as max over ONE
+      // decimal(38,0) — cnt·10¹⁹ + (10¹⁹−1−label) — does keep the
+      // superstep in pure HashAggregate and won ~15% in an isolated
+      // probe, but made the full q42/q60 queries 2× SLOWER end-to-end
+      // (9.3s vs 4.9s at sf0.1): the 16-byte decimal state doubles
+      // the shuffle/cache row width and the decimal mul/mod/cast in
+      // every superstep outweighs the saved per-partition sort of the
+      // already-aggregated message table. Keep the struct form.)
+      und
+        .join(stateSide(labels.withColumnRenamed("id", "nbr"), bc),
+          col("dst") === col("nbr"))
+        .groupBy(col("src").as("id"), col("label"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy("id")
+        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("best"))
+        .select(col("id"), (-col("best.nl")).as("label"))
     }
-    labels
   }
 
   /** Connected components as a Catalyst loop: min-label propagation to
@@ -361,9 +403,8 @@ object GraphOps {
     * SuperstepBlock), `maxIter` bounds pathological chains. Returns
     * (id, component) as a materialized local checkpoint. */
   def ccEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 20,
-      broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val parts = numPartitions.getOrElse(sizedLoopPartsFromStats(edges))
+      broadcastState: Option[Boolean] = None): DataFrame = {
+    val parts = sizedLoopPartsFromStats(edges)
     truncatedCc(edges, srcCol, dstCol)(
       ccMinSupersteps(_, _, _, parts, maxIter, broadcastState, edges))
   }
@@ -390,7 +431,7 @@ object GraphOps {
 
   /** The [[ccEdges]] supersteps over a materialized edge frame; `edges`
     * is the frame whose statistics bound the vertex count for the
-    * state-join strategy. Returns the last block's checkpoint. */
+    * state-join strategy. Returns [[supersteps]]' last snapshot. */
   private def ccMinSupersteps(in: DataFrame, srcCol: String, dstCol: String,
       parts: Int, maxIter: Int, broadcastState: Option[Boolean],
       edges: DataFrame): DataFrame = span("graph.ccMinSupersteps") {
@@ -402,53 +443,15 @@ object GraphOps {
     // twice and doubled the subtree per chained step).
     val (und, release) = undirectedCache(in, srcCol, dstCol, "src",
       Some(parts), selfLoops = true)
-    // exact-count fallback (evaluated only when the stats bound refuses);
-    // the probe PERSISTS the vertex frame it counts and the label seed
-    // reuses it, so the dense regime pays the vertex distinct once, not
-    // twice (review finding, round 13)
-    val verts = und.select(col("src").as("id")).distinct()
-    var vertsProbed = false
-    val bc = resolveBroadcastStateExact(broadcastState, edges,
-      { vertsProbed = true; verts.persist(); verts.count() })
-    var labels = verts.withColumn("label", col("id"))
-    var cached: Option[DataFrame] = None
-    // Convergence via the block-boundary label sum: min propagation only
-    // ever DECREASES labels, so an unchanged exact sum between snapshots
-    // ⇔ no label moved anywhere in the block ⇔ fixed point (extra
-    // supersteps inside a converged block are idempotent). Decimal sum:
-    // exact at any vertex count, no wraparound false-convergence.
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val steps = math.min(SuperstepBlock, maxIter - iter)
-      for (_ <- 1 to steps) {
-        labels = und
-          .join(stateSide(labels.withColumnRenamed("id", "nbr"), bc),
+    val labels = withVertices(und, edges, broadcastState) { (verts, bc) =>
+      supersteps(verts.withColumn("label", col("id")), maxIter, SuperstepBlock,
+          Some(labelSum("label"))) { labels =>
+        und.join(stateSide(labels.withColumnRenamed("id", "nbr"), bc),
             col("dst") === col("nbr"))
           .groupBy(col("src").as("id"))
           .agg(min(col("label")).as("label"))
       }
-      // a checkpoint: the next block's plan roots at its leaf, and the
-      // returned labels never reach the input checkpoint released after
-      val snap = labels.localCheckpoint(eager = false)
-      // ONE action materializes the snapshot AND reads the convergence
-      // sum (the first action on a lazy checkpoint fills its blocks
-      // while computing the agg) — previously a count job THEN a sum job,
-      // i.e. two driver round-trips per block (round-6 verdict item 5).
-      val s = snap.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-      // null sum = zero vertices: nothing can ever move — converged.
-      // Cost note: a populated graph pays one extra (tiny, converged)
-      // block to observe the unchanged sum — the price of keeping the
-      // superstep itself a single-reference linear plan.
-      converged = s == null || (prevSum != null && s.compareTo(prevSum) == 0)
-      prevSum = s
-      cached.foreach(releaseLocalCheckpoint)
-      cached = Some(snap)
-      labels = snap
-      iter += steps
     }
-    if (vertsProbed) verts.unpersist(blocking = false)
     release()
     labels.withColumnRenamed("label", "component")
   }
@@ -477,10 +480,9 @@ object GraphOps {
     * ~2× ccEdges' per-superstep work, won back exponentially on
     * diameter. Returns (id, component). */
   def ccStarEdges(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 30, numPartitions: Option[Int] = None): DataFrame = {
-    val parts = numPartitions.getOrElse(sizedLoopPartsFromStats(edges))
-    truncatedCc(edges, srcCol, dstCol)(ccStarRounds(_, _, _, parts, maxIter))
-  }
+      maxIter: Int = 30): DataFrame =
+    truncatedCc(edges, srcCol, dstCol)(
+      ccStarRounds(_, _, _, sizedLoopPartsFromStats(edges), maxIter))
 
   /** Connected components by graph size: the one place the engine is
     * picked from the data. Without `knownRows` the `(src, dst)` frame is
@@ -532,8 +534,7 @@ object GraphOps {
           if (pointerJumping) ccStarRounds(view, "src", "dst", parts, maxIter)
           else ccMinSupersteps(view, "src", "dst", parts, maxIter, None, view)
         releaseLocalCheckpoint(view)
-        // at most two vertices per edge
-        GraftSqlBridge.withRowBound(labels, BigInt(rows) * 2)
+        labels
       }
     if (knownRows.isEmpty) input.unpersist(blocking = false)
     comp
@@ -581,21 +582,16 @@ object GraphOps {
     GraftSqlBridge.withRowBound(spark.createDataFrame(rows, schema), n)
   }
 
-  /** The [[ccStarEdges]] rounds over a materialized edge frame. Returns
-    * the last round's checkpoint. */
+  /** The [[ccStarEdges]] rounds over a materialized edge frame, one round
+    * a block. Returns [[supersteps]]' last snapshot. */
   private def ccStarRounds(in: DataFrame, srcCol: String, dstCol: String,
       parts: Int, maxIter: Int): DataFrame = span("graph.ccStarRounds") {
     val (und, release) = undirectedCache(in, srcCol, dstCol, "src", Some(parts))
-    // NOT checkpointed (one driver gate fewer): round 1 recomputes the
-    // distinct from und's cache in-job; the `init eq labels` guard below
-    // keeps releaseLocalCheckpoint off it (its leaves are the input's)
+    // not snapshotted: round 1 recomputes the distinct from und's cache
+    // in its own job, one driver gate fewer
     val init = und.select(col("src").as("id")).distinct()
       .withColumn("l", col("id"))
-    var labels = init
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val labels = supersteps(init, maxIter, 1, Some(labelSum("l"))) { labels =>
       val prop = und
         .join(labels.select(col("id").as("dst"), col("l").as("ln")), "dst")
         .groupBy(col("src").as("id")).agg(min(col("ln")).as("lp"))
@@ -605,20 +601,10 @@ object GraphOps {
       // count on q147's fused split (rounds are bound by the
       // min-propagation frontier plus one confirmation round, not chain
       // length) and grew stages per round ~25% (126→154 jobs).
-      val doubled = prop.as("a")
+      prop.as("a")
         .join(prop.select(col("id").as("pid"), col("l").as("pl")).as("p"),
           col("a.l") === col("pid"), "left")
         .select(col("a.id").as("id"), coalesce(col("pl"), col("a.l")).as("l"))
-        .localCheckpoint(eager = false)
-      // ONE action: materializes the round AND reads the convergence sum
-      val s = doubled.agg(sum(col("l").cast("decimal(38,0)"))).head().getDecimal(0)
-      converged = s == null || (prevSum != null && s.compareTo(prevSum) == 0)
-      prevSum = s
-      // doubled is materialized; the uncheckpointed init frame must NOT
-      // be "released" — its leaves are the caller's live checkpoints
-      if (labels ne init) releaseLocalCheckpoint(labels)
-      labels = doubled
-      iter += 1
     }
     release()
     labels.withColumnRenamed("l", "component")
@@ -661,13 +647,11 @@ object GraphOps {
       .union(e.select(col("dst").as("id"))).distinct()
       .join(l.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
-    val out = l.unionByName(newVerts)
+    val (out, _) = snapshot(l.unionByName(newVerts)
       .join(merged, Seq("component"), "left")
-      .select(col("id"), coalesce(col("newc"), col("component")).as("component"))
-      .localCheckpoint(eager = false)
-    val n = out.count()
+      .select(col("id"), coalesce(col("newc"), col("component")).as("component")))
     releaseLocalCheckpoint(comp)
-    GraftSqlBridge.withRowBound(out, n)
+    out
   }
 
   /** Multi-resolution community ladder — the engine's analog of the
@@ -689,26 +673,24 @@ object GraphOps {
       iterPerLevel: Int = 4): DataFrame = {
     // the L0 LPA supersteps AND the contraction join scan one cache
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
-    // L0: fine communities on the raw graph; checkpointed because four
-    // downstream branches reference it (see lpaEdges lineage note)
-    val lpa0 = lpaEdges(e, "src", "dst", iterPerLevel)
-    val l0 = lpa0.localCheckpoint()
-    lpa0.unpersist(blocking = false)
+    // L0: fine communities on the raw graph (a checkpoint: four
+    // downstream branches reference it)
+    val l0 = lpaEdges(e, "src", "dst", iterPerLevel)
     // contract: community graph (distinct inter-community edges);
-    // checkpointed — three levels branch off it (see lpaEdges note)
+    // checkpointed — three levels branch off it; its filling action is
+    // e's last consumer
     val asg0 = l0.select(col("id"), col("label").as("c0"))
-    val ce = e
+    val (ce, ceStats) = snapshot(e
       .join(asg0.select(col("id").as("src"), col("c0").as("sc")), "src")
       .join(asg0.select(col("id").as("dst"), col("c0").as("dc")), "dst")
       .filter(col("sc") =!= col("dc"))
       .select(col("sc").as("src"), col("dc").as("dst"))
-      .distinct()
-      .localCheckpoint() // eager: e's last consumer — safe to release below
+      .distinct())
     e.unpersist(blocking = false)
     // L1: LPA with self-votes over the contracted graph (≪ the
     // original), its partitions sized to its count ([[sizedLoopParts]]):
     // near-empty tasks cost ~25% of this stage at sf0.1
-    val ceRows = ce.count()
+    val ceRows = ceStats.getLong(0)
     val l1Parts = sizedLoopParts(spark, BigInt(ceRows))
     val withSelf = ce.union(
       ce.select(col("src").as("v")).union(ce.select(col("dst").as("v")))
@@ -727,11 +709,9 @@ object GraphOps {
     val lvl2 = asg0.join(l2.select(col("id").as("c0"), col("component").as("c2")),
         Seq("c0"), "left")
       .select(col("id"), lit(2).as("level"), coalesce(col("c2"), col("c0")).as("community"))
-    val out = lvl0.unionByName(lvl1All).unionByName(lvl2).localCheckpoint(eager = false)
-    val n = out.count()
-    Seq(l0, ce, l2).foreach(releaseLocalCheckpoint)
-    l1.unpersist(blocking = false)
-    GraftSqlBridge.withRowBound(out, n)
+    val (out, _) = snapshot(lvl0.unionByName(lvl1All).unionByName(lvl2))
+    Seq(l0, ce, l1, l2).foreach(releaseLocalCheckpoint)
+    out
   }
 
   /** PageRank as a Catalyst loop in FIXED-POINT arithmetic: rank mass is
@@ -749,7 +729,9 @@ object GraphOps {
     * real distributed PageRank; no driver collect (the single
     * `deg.count()` scalar is one agg job). GraphX's `staticPageRank`
     * stays available for double-precision needs; this form is the
-    * oracle-able / deterministic one. */
+    * oracle-able / deterministic one. Returns (id, pr) over a checkpoint
+    * bounded by its row count, as do the two variants below; the caller
+    * releases it with [[releaseLocalCheckpoint]]. */
   def pageRankFixedPoint(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampingPct: Long = 85L,
@@ -841,13 +823,13 @@ object GraphOps {
     * dst-partitioned [[undirectedCache]] (each step joins the state on
     * src and aggregates on dst, so no step re-shuffles the edges), the
     * degree frame (`degree` per `src`) and its count n, the state-join
-    * decision, the empty-graph return and the block loop; `terms` builds
-    * the variant's part from the degree frame and n. The state is (id,
-    * static columns, pr) and the static frame is cached once, so each
-    * step references the previous state exactly once: the chain is a
-    * linear plan and a block of 2·SuperstepBlock steps runs as one job.
-    * Every step is pr' = teleport + (damping% · Σ shares) div 100.
-    * Returns (id, pr), persisted; everything else is released. */
+    * decision and the empty-graph return; `terms` builds the variant's
+    * part from the degree frame and n. The state is (id, static columns,
+    * pr) and the static frame is cached once, so each step references
+    * the previous state exactly once: the chain is a linear plan and a
+    * block of 2·SuperstepBlock steps runs as one job. Every step is
+    * pr' = teleport + (damping% · Σ shares) div 100. Returns (id, pr)
+    * over [[supersteps]]' last snapshot; everything else is released. */
   private def rankLoop(
       edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String], degree: Column, iters: Int,
@@ -860,36 +842,25 @@ object GraphOps {
     // n IS the vertex count — the exact-fallback resolution is free here.
     // stateCopies: a block chains 2·SuperstepBlock lazy steps per job,
     // each pinning its own state broadcast — budget all 8, not 4
-    val bc = resolveBroadcastStateExact(broadcastState, edges, n,
+    val bc = resolveBroadcastState(broadcastState, edges, n,
       stateCopies = 2 * SuperstepBlock)
     // empty edge set: no vertices, no rank mass to divide
     val out = if (n == 0) deg.select(col("id"), lit(0L).as("pr")) else {
       val t = terms(deg, n)
       val static = if (t.static eq deg) deg else t.static.persist()
       val kept = static.columns.toSeq.map(col)
-      var st = static.withColumn("pr", t.start)
-      var cached: Option[DataFrame] = None
-      var done = 0
-      while (done < iters) {
-        val steps = math.min(2 * SuperstepBlock, iters - done)
-        for (_ <- 1 to steps) {
-          val incoming = und
-            .join(stateSide(t.edgeSide(st), bc), "src")
-            .groupBy(col("dst").as("id"))
-            .agg(t.share.as("s"))
-          // left join keeps isolated-in-degree vertices (none in an
-          // undirected expansion, but the guard costs nothing)
-          st = static
-            .join(incoming, Seq("id"), "left")
-            .select(kept :+ (t.teleport +
-              expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("pr"): _*)
-        }
-        val snap = st.persist()
-        snap.count()
-        cached.foreach(_.unpersist(blocking = false))
-        cached = Some(snap)
-        st = snap
-        done += steps
+      val st = supersteps(static.withColumn("pr", t.start), iters,
+          2 * SuperstepBlock) { st =>
+        val incoming = und
+          .join(stateSide(t.edgeSide(st), bc), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(t.share.as("s"))
+        // left join keeps isolated-in-degree vertices (none in an
+        // undirected expansion, but the guard costs nothing)
+        static
+          .join(incoming, Seq("id"), "left")
+          .select(kept :+ (t.teleport +
+            expr(s"($dampingPct * coalesce(s, 0L)) div 100")).as("pr"): _*)
       }
       if (static ne deg) static.unpersist(blocking = false)
       st.select(col("id"), col("pr"))
@@ -936,7 +907,7 @@ object GraphOps {
     val (und, release) = undirectedCache(edges, srcCol, dstCol, "dst")
     // frontier ∪ visited state is bounded by the vertex count — the
     // exact fallback only runs when the stats bound refuses (dense graph)
-    val bc = resolveBroadcastStateExact(broadcastState, edges,
+    val bc = resolveBroadcastState(broadcastState, edges,
       und.select(col("src")).distinct().count())
     val side = col("id").as("src") +: seeds.columns.toSeq.tail.map(col)
     var frontier = seeds.withColumn("level", lit(0)).persist()
@@ -1015,7 +986,7 @@ object GraphOps {
     // undirected-style graphs) and would refuse dense graphs whose true
     // combined state fits (round-13 advice). Evaluated only when the
     // stats bound refuses.
-    val bc = resolveBroadcastStateExact(broadcastState, edges,
+    val bc = resolveBroadcastState(broadcastState, edges,
       eBySrc.select(col("src").as("id"))
         .union(eByDst.select(col("dst").as("id")))
         .distinct().count())
@@ -1282,10 +1253,9 @@ object GraphOps {
       bc = false)(ccAuto(_, "src", "dst", graphxMaxEdges, maxIter))
     // a checkpoint, not a persist: no later plan can reach the component
     // checkpoint released below (the refineCore output note)
-    val out = labels.localCheckpoint(eager = false)
-    val n = out.count()
+    val (out, _) = snapshot(labels)
     releaseLocalCheckpoint(comp)
-    GraftSqlBridge.withRowBound(out, n)
+    out
   }
 
   /** The split shared by [[wellConnectedSplit]] and the ladder's chains:
@@ -1321,6 +1291,9 @@ object GraphOps {
     * equal the two-call
     * composition ([[lpaLouvainRefineMulti]], then [[wellConnectedSplit]]
     * per γ; AlgoRandomSpec).
+    * `numPartitions`, when given, replaces the superstep partition
+    * count sized from `edges`' statistics ([[sizedLoopParts]]), which
+    * is exact for an input bounded by its row count.
     * Returns (gamma_pct, id, label): one checkpoint, materialized and
     * bounded by its row count, that the caller owns. Everything else the
     * ladder built is released. */
@@ -1356,12 +1329,10 @@ object GraphOps {
           (labels.select(lit(g).as("gamma_pct"), col("id"), col("label")), comp)
         }
       }
-      val out = chains.map(_._1).reduce(_ unionByName _)
-        .localCheckpoint(eager = false)
-      val n = out.count()
+      val (out, _) = snapshot(chains.map(_._1).reduce(_ unionByName _))
       chains.foreach(c => releaseLocalCheckpoint(c._2))
       start.release()
-      GraftSqlBridge.withRowBound(out, n)
+      out
     }
   }
 
@@ -1396,10 +1367,9 @@ object GraphOps {
       edges: DataFrame, srcCol: String, dstCol: String,
       assignment: DataFrame, idCol: String, labelCol: String,
       rounds: Int, gammaPcts: Seq[Long],
-      broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame =
+      broadcastState: Option[Boolean] = None): DataFrame =
     refineSetup(edges, srcCol, dstCol, gammaPcts, broadcastState,
-        numPartitions) { (und, deg, bc) =>
+        numPartitions = None) { (und, deg, bc) =>
       refineCore(new RefineStart(und, deg, bc, assignment, idCol, labelCol,
         rounds), gammaPcts)
     }
@@ -1414,10 +1384,9 @@ object GraphOps {
   def lpaLouvainRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
-      broadcastState: Option[Boolean] = None,
-      numPartitions: Option[Int] = None): DataFrame =
+      broadcastState: Option[Boolean] = None): DataFrame =
     lpaRefine(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
-      broadcastState, numPartitions)(refineCore(_, gammaPcts))
+      broadcastState, numPartitions = None)(refineCore(_, gammaPcts))
 
   /** The setup every refine entry point shares: the src-partitioned
     * undirected cache, the degree frame and the state-join decision,
@@ -1437,7 +1406,7 @@ object GraphOps {
     // exact-count fallback: deg is the vertex frame and the refine reads
     // it either way — its count is the true state size the broadcast
     // decision wants (the stats bound refuses any dense graph)
-    val bc = resolveBroadcastStateExact(broadcastState, edges, deg.count())
+    val bc = resolveBroadcastState(broadcastState, edges, deg.count())
     val out = body(und, deg, bc)
     release()
     deg.unpersist(blocking = false)
@@ -1445,10 +1414,9 @@ object GraphOps {
   }
 
   /** [[refineSetup]] plus the LPA supersteps, whose labels seed the
-    * refine start handed to `body`. materializeLast = false: the single
-    * LPA block's boundary count is paid by the start's probe through its
-    * lazy checkpoint (r14 verdict item 3), and the persisted labels go to
-    * the start directly, released after `body`. */
+    * refine start handed to `body`. materializeLast = false: a single
+    * LPA block is filled by the start's probe (r14 verdict item 3), and
+    * the labels are released after `body`. */
   private def lpaRefine[T](
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
@@ -1456,9 +1424,10 @@ object GraphOps {
       body: RefineStart => T): T =
     refineSetup(edges, srcCol, dstCol, gammaPcts, broadcastState,
         numPartitions) { (und, deg, bc) =>
-      val lpa = lpaSupersteps(und, lpaIters, bc, materializeLast = false)
+      val lpa = lpaSupersteps(und, und.select(col("src").as("id")).distinct(),
+        lpaIters, bc, materializeLast = false)
       val out = body(new RefineStart(und, deg, bc, lpa, "id", "label", rounds))
-      lpa.unpersist(blocking = false)
+      releaseState(lpa)
       out
     }
 
@@ -1484,12 +1453,11 @@ object GraphOps {
     // the per-γ checkpoints released below
     // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); a LogicalRDD root reaches no γ
     // frame. GraphSpec re-reads the ladder output with AQE on and off.
-    val out = finals.map { case (g, asg) => start.relabel(g, asg) }
-      .reduce(_ unionByName _).localCheckpoint(eager = false)
-    val n = out.count() // fills the checkpoint
+    val (out, _) = snapshot(finals.map { case (g, asg) => start.relabel(g, asg) }
+      .reduce(_ unionByName _))
     finals.foreach(f => start.release(f._2))
     start.release()
-    GraftSqlBridge.withRowBound(out, n)
+    out
   }
 
   /** The γ-independent start of the gated local-move rounds over a
@@ -1829,10 +1797,12 @@ object GraphOps {
     *
     * Returns (id, in_core, core_deg) for every vertex of the input edge
     * set; core_deg is the final survivor-induced degree (null for peeled
-    * vertices). Scale: per round two semi-join-shaped equi-joins of the
-    * cached undirected edge list against the shrinking survivor set and
-    * one hash-agg degree count — work is proportional to surviving
-    * edges, the standard distributed peeling shape. */
+    * vertices), as a checkpoint bounded by its row count that the caller
+    * releases with [[releaseLocalCheckpoint]]. Scale: per round two
+    * semi-join-shaped equi-joins of the cached undirected edge list
+    * against the shrinking survivor set and one hash-agg degree count —
+    * work is proportional to surviving edges, the standard distributed
+    * peeling shape. */
   def kCorePeel(
       edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int,
@@ -1857,33 +1827,32 @@ object GraphOps {
     // only when the stats bound refuses (one agg over the checkpoint).
     // stateCopies = 6: 3-round blocks × 2 survivor joins per round can
     // hold six broadcasts live in one job
-    val bc = resolveBroadcastStateExact(broadcastState, edges, allV.count(),
+    val bc = resolveBroadcastState(broadcastState, edges, allV.count(),
       stateCopies = 6)
-    var surv = allV
-    var degS = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-    for (r <- 1 to rounds) {
-      surv = degS.filter(col("d") >= k).select("id")
-      // block-lazy (the lpaEdges discipline): each round references the
-      // previous survivor frame twice (src + dst joins), so the lazy plan
-      // doubles per round — but every branch is cheap joins over the
-      // cached canonical set, so a block of 3 rounds runs as ONE job
-      // (measured 5.8s → ~2s for q102); checkpoint at block boundaries
-      // bounds plan growth for deep cascades
-      if (r % 3 == 0 && r < rounds) surv = surv.localCheckpoint()
-      degS = und
-        .join(stateSide(surv.select(col("id").as("src")), bc), "src")
-        .join(stateSide(surv.select(col("id").as("dst")), bc), "dst")
-        .groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-    }
-    val out = allV
+    def peel(deg: DataFrame) = deg.filter(col("d") >= k).select("id")
+    // the degree of each survivor in the survivor-induced subgraph
+    def degIn(surv: DataFrame) = und
+      .join(stateSide(surv.select(col("id").as("src")), bc), "src")
+      .join(stateSide(surv.select(col("id").as("dst")), bc), "dst")
+      .groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
+    // round 1 peels by the plain degree. Each later round references the
+    // previous survivor frame twice (src + dst joins), so the lazy plan
+    // doubles per round — but every branch is cheap joins over the
+    // checkpointed canonical set, so a block of 3 rounds runs as ONE job
+    // (measured 5.8s → ~2s for q102). The output job fills a
+    // first-and-final block.
+    val surv = if (rounds == 0) allV else supersteps(
+        peel(und.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))),
+        rounds - 1, 3, materializeLast = false)(s => peel(degIn(s)))
+    val (out, _) = snapshot(allV
       .join(surv.select(col("id"), lit(true).as("in_core")), Seq("id"), "left")
-      .join(degS.select(col("id"), col("d")), Seq("id"), "left")
+      .join(degIn(surv), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("in_core"), lit(false)).as("in_core"),
         when(coalesce(col("in_core"), lit(false)), coalesce(col("d"), lit(0L)))
-          .as("core_deg"))
-    val persisted = materializeAndRelease(out.persist())
+          .as("core_deg")))
+    if (rounds > 0) releaseState(surv)
     releaseLocalCheckpoint(und)
-    persisted
+    out
   }
 }

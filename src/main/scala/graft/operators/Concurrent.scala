@@ -3,7 +3,6 @@ package graft.operators
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.{Failure, Try}
 
 /** Concurrent materialization of INDEPENDENT lazy Spark chains.

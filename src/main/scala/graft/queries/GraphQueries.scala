@@ -250,6 +250,7 @@ object GraphQueries {
       val asg = GraphOps.lpaEdges(e, "src", "dst", maxIter = 2)
       val out = GraphOps.modularityOf(e, "src", "dst", asg, "id", "label")
       e.unpersist(blocking = false)
+      GraphOps.releaseLocalCheckpoint(asg) // out is persisted and counted
       out
     },
 
@@ -321,7 +322,9 @@ object GraphQueries {
       // the base labeling on the driver: a sparse path graph whose
       // components hold at most 4 vertices (fuzzyDedup's 2M threshold)
       val base = GraphOps.ccAuto(old, "src", "dst", localMaxEdges = 2000000L)
-      GraphOps.incrementalCC(base, batch, "src", "dst")
+      val out = GraphOps.incrementalCC(base, batch, "src", "dst")
+      e.unpersist(blocking = false) // out is a materialized checkpoint
+      out
     },
 
     // WEIGHTED PageRank: edges weighted by lineitem co-occurrence count
@@ -430,10 +433,9 @@ object GraphQueries {
       // and the refine+split semantics need structure, not volume — the
       // deterministic order sample keeps ~240k edges and the same
       // disconnected-community pathology the split exists for
-      val (e, parts) = countedCoPurchase(s, dir, orderMod = 5)
+      val e = countedCoPurchase(s, dir, orderMod = 5)
       val refined = GraphOps.lpaLouvainRefineMulti(e, "src", "dst",
-          lpaIters = 2, rounds = 1, gammaPcts = Seq(100L),
-          numPartitions = parts)
+          lpaIters = 2, rounds = 1, gammaPcts = Seq(100L))
         .select(col("id"), col("label"))
       GraphOps.wellConnectedSplit(e, "src", "dst", refined, "id", "label")
         .select(col("id").as("key"), col("label"))
@@ -450,10 +452,9 @@ object GraphQueries {
     Q("q147_leiden_multires",
       leidenMultiOracle(lpaIters = 2, rounds = 1, Seq(200L, 50L, 10L),
         orderMod = 10)) { (s, dir) =>
-      val (e, parts) = countedCoPurchase(s, dir, orderMod = 10)
+      val e = countedCoPurchase(s, dir, orderMod = 10)
       GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
-          lpaIters = 2, rounds = 1, gammaPcts = Seq(200L, 50L, 10L),
-          numPartitions = parts)
+          lpaIters = 2, rounds = 1, gammaPcts = Seq(200L, 50L, 10L))
         .select(col("gamma_pct"), col("id").as("key"), col("label"))
     },
 
@@ -478,11 +479,10 @@ object GraphQueries {
       // the ladder loop and the degree agg both consume e; with e and
       // the ladder bounded by their counts, ladder ⋈ part ⋈ deg plans
       // as broadcasts before AQE has run a stage
-      val (e, parts) = countedCoPurchase(s, dir, orderMod = 10)
+      val e = countedCoPurchase(s, dir, orderMod = 10)
       // Stages 1-2: build + the multi-resolution Leiden ladder
       val ladder = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
-        lpaIters = 2, rounds = 1, gammaPcts = Seq(200L, 50L, 10L),
-        numPartitions = parts)
+        lpaIters = 2, rounds = 1, gammaPcts = Seq(200L, 50L, 10L))
       // connectivity = undirected co-purchase degree (the reference ranks
       // representatives by similar_artists list length)
       val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -570,18 +570,17 @@ object GraphQueries {
   }
 
   /** [[coPurchase]] as a lazy checkpoint, counted, and bounded by that
-    * count, with the superstep partitions sized from it. The count
-    * materializes the checkpoint. The co-purchase join's statistics
-    * overestimate ~10^7×: sized from them, the loops would keep the
-    * session partition floor; unbounded, the ladder's broadcast decision
-    * would pay an exact vertex count and joins over the edges would plan
-    * shuffles until AQE had run their stages. */
+    * count. The count materializes the checkpoint. The co-purchase
+    * join's statistics overestimate ~10^7×: sized from them, the loops
+    * would keep the session partition floor; unbounded, the ladder's
+    * broadcast decision would pay an exact vertex count and joins over
+    * the edges would plan shuffles until AQE had run their stages. With
+    * the count recorded as the row count, the loops size their
+    * partitions from it. */
   private def countedCoPurchase(s: org.apache.spark.sql.SparkSession, dir: String,
-      orderMod: Int): (org.apache.spark.sql.DataFrame, Option[Int]) = {
+      orderMod: Int): org.apache.spark.sql.DataFrame = {
     val e = coPurchase(s, dir, orderMod).localCheckpoint(eager = false)
-    val rows = e.count()
-    (org.apache.spark.sql.GraftSqlBridge.withRowBound(e, rows),
-      Some(GraphOps.sizedLoopParts(s, BigInt(rows) * 2)))
+    org.apache.spark.sql.GraftSqlBridge.withRowBound(e, e.count())
   }
 
   /** The part–supplier bipartite edge set shared by the graph queries

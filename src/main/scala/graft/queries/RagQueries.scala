@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{TextFunctions => T}
-import graft.sinks.Sinks
 import graft.text.{Chunker, Sections}
 import org.apache.spark.sql.functions._
 

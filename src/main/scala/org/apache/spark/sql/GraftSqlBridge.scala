@@ -41,18 +41,19 @@ object GraftSqlBridge {
   def isCheckpoint(df: DataFrame): Boolean = checkpointLeaf(df).isDefined
 
   /** `df` — a checkpoint leaf, bare or under one projection — with the
-    * leaf's size bounded by `maxRows` rows. A lazy `localCheckpoint`
+    * leaf's statistics set from its row count `rows`: `rowCount` and
+    * `sizeInBytes` = row size × `rows`. A lazy `localCheckpoint`
     * reports the size of the plan it was made from, and a plan over a
-    * bare RDD (GraphX output) reports the unknown 8 EiB default, so a
-    * join over it cannot be planned as a broadcast until AQE has run its
-    * shuffle stages. Same rows, same RDD; only the estimate changes. */
-  def withRowBound(df: DataFrame, maxRows: BigInt): DataFrame = {
+    * bare RDD reports the unknown 8 EiB default, so a join over it
+    * cannot be planned as a broadcast until AQE has run its shuffle
+    * stages. Same rows, same RDD; only the estimate changes. */
+  def withRowBound(df: DataFrame, rows: BigInt): DataFrame = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     // copied by hand, not by transform: the bounded leaf compares equal
     // to the original (statistics sit outside case-class equality), so
     // a transform would keep the original
-    def bound(l: LogicalRDD) = l.copy()(session,
-      Some(Statistics(EstimationUtils.getSizePerRow(l.output) * maxRows)), None)
+    def bound(l: LogicalRDD) = l.copy()(session, Some(Statistics(
+      EstimationUtils.getSizePerRow(l.output) * rows, rowCount = Some(rows))), None)
     checkpointLeaf(df) match {
       case Some((l, rebuild)) => classic.Dataset.ofRows(session, rebuild(bound(l)))
       case None => df

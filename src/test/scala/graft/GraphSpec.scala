@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.GraphOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -317,6 +318,25 @@ class GraphSpec extends SparkSpec {
     assert(r1 == out.view.mapValues(_._2).toMap) // this cascade settles in 1
   }
 
+  test("kCorePeel at 7 rounds leaves only its output registered") {
+    // K4 with the chain 4-5-…-11 off it: round r peels vertex 12 − r, so
+    // all 7 rounds (the first, then blocks of 3 and 3) move the survivors
+    val k4 = for { a <- 1L to 4L; b <- 1L to 4L if a < b } yield (a, b)
+    val e = (k4 ++ (4L until 11L).map(v => (v, v + 1L))).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val entriesBefore = org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark)
+    val out = GraphOps.kCorePeel(e, "src", "dst", k = 2, rounds = 7)
+    val own = out.queryExecution.analyzed.collectLeaves().collect {
+      case l: LogicalRDD => l.rdd.id
+    }.toSet
+    assert(own.size == 1 && sc.getPersistentRDDs.keySet -- rddsBefore == own)
+    assert(org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark) == entriesBefore)
+    val core = out.filter(col("in_core")).select("id").as[Long].collect().toSet
+    assert(core == (1L to 4L).toSet)
+    GraphOps.releaseLocalCheckpoint(out)
+  }
+
   test("hitsFixedPoint: star hub dominates, determinism, mass conservation") {
     // hub 1 points at 3 suppliers; hub 2 points at one of them
     val e = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L)).toDF("src", "dst")
@@ -598,13 +618,41 @@ class GraphSpec extends SparkSpec {
     Seq(eager, lazyCp).foreach(GraphOps.releaseLocalCheckpoint)
   }
 
-  test("the PageRank and BFS loops leave only their output registered, on uncached and checkpointed input") {
-    import org.apache.spark.sql.DataFrame
+  /** Runs `run` and checks that it leaves registered only the RDD of its
+    * output (a cache or a checkpoint) and no cache entry but the output's
+    * own. A checkpoint output must report row size × row count as its
+    * size. Releases the output. */
+  private def assertLeavesOnlyOutput(what: String)(run: => DataFrame): Unit = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val entriesBefore = GraftSqlBridge.cachedEntries(spark)
+    val out = run
+    val cached = out.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+    }.toSet
+    val own = if (cached.nonEmpty) cached
+      else out.queryExecution.analyzed.collectLeaves().collect { case l: LogicalRDD => l.rdd.id }.toSet
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(own.size == 1 && left == own, s"$what: left $left, output $own")
+    assert(GraftSqlBridge.cachedEntries(spark) == entriesBefore + cached.size,
+      s"$what left a cache entry")
+    val rows = out.count()
+    assert(rows > 0L)
+    if (cached.isEmpty) {
+      val rowBytes = EstimationUtils.getSizePerRow(out.queryExecution.analyzed.output)
+      assert(out.queryExecution.optimizedPlan.stats.sizeInBytes == rowBytes * rows,
+        s"$what: size estimate is not row size × $rows rows")
+      GraphOps.releaseLocalCheckpoint(out)
+    } else own.foreach(sc.getPersistentRDDs(_).unpersist())
+  }
+
+  test("the PageRank and BFS loops leave only their output registered, on uncached and checkpointed input") {
     val raw = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (3L, 4L, 5L), (10L, 11L, 1L))
       .toDF("src", "dst", "w")
     val anchor = Seq(1L).toDF("id")
-    val sc = spark.sparkContext
     val loops = Seq[(String, DataFrame => DataFrame)](
       "pageRankFixedPoint" -> (GraphOps.pageRankFixedPoint(_, "src", "dst", iters = 3)),
       "personalizedPageRankFixedPoint" ->
@@ -615,17 +663,40 @@ class GraphSpec extends SparkSpec {
       "multiSourceBfs" -> (GraphOps.multiSourceBfs(_, "src", "dst", anchor, maxHops = 2)))
     val cp = raw.localCheckpoint()
     for ((input, e) <- Seq("uncached" -> raw, "checkpointed" -> cp);
-         (name, run) <- loops) {
-      val before = sc.getPersistentRDDs.keySet
-      val out = run(e)
-      val own = out.queryExecution.withCachedData.collect {
-        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
-      }.toSet
-      val left = sc.getPersistentRDDs.keySet.toSet -- before
-      assert(own.size == 1 && left == own, s"$name on the $input input: left $left, output $own")
-      assert(out.count() > 0L)
-      own.foreach(sc.getPersistentRDDs(_).unpersist())
-    }
+         (name, run) <- loops)
+      assertLeavesOnlyOutput(s"$name on the $input input")(run(e))
+    GraphOps.releaseLocalCheckpoint(cp)
+  }
+
+  test("the superstep-core loops run 3+ blocks and leave only their bounded output") {
+    // a 10-vertex path: ccEdges converges in 3 blocks of 4 and confirms
+    // in a 4th, ccStarEdges takes several 1-round blocks, and the
+    // iteration counts below give LPA (blocks of 4), PageRank (8) and
+    // k-core (its first round, then blocks of 3) three blocks each
+    val raw = (0L until 9L).map(v => (v, v + 1L)).toDF("src", "dst")
+    val cp = raw.localCheckpoint()
+    val loops = Seq[(String, DataFrame => DataFrame)](
+      "lpaEdges" -> (GraphOps.lpaEdges(_, "src", "dst", maxIter = 9)),
+      "ccEdges" -> (GraphOps.ccEdges(_, "src", "dst")),
+      "ccStarEdges" -> (GraphOps.ccStarEdges(_, "src", "dst")),
+      "pageRankFixedPoint" -> (GraphOps.pageRankFixedPoint(_, "src", "dst", iters = 17)),
+      "kCorePeel" -> (GraphOps.kCorePeel(_, "src", "dst", k = 2, rounds = 8)))
+    for ((input, e) <- Seq("uncached" -> raw, "checkpointed" -> cp);
+         (name, run) <- loops)
+      assertLeavesOnlyOutput(s"$name on the $input input")(run(e))
+    // the CC engines label the path with its min id
+    assert(GraphOps.ccEdges(raw, "src", "dst").as[(Long, Long)].collect().toSet ==
+      (0L to 9L).map(_ -> 0L).toSet)
+    GraphOps.releaseLocalCheckpoint(cp)
+  }
+
+  test("withRowBound records the row count along with the size") {
+    val cp = Seq(1L -> 2L, 3L -> 4L, 5L -> 6L).toDF("src", "dst").localCheckpoint(eager = false)
+    val bounded = org.apache.spark.sql.GraftSqlBridge.withRowBound(cp, 3)
+    val stats = bounded.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(3)))
+    assert(stats.sizeInBytes == org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(bounded.queryExecution.analyzed.output) * 3)
     GraphOps.releaseLocalCheckpoint(cp)
   }
 
