@@ -385,23 +385,19 @@ object Dedup {
     * doc×doc); verification joins ONLY candidate pairs against per-doc
     * distinct-shingle arrays (a semi-join-sized fraction of the corpus);
     * the verified pair graph holds near-dups only — usually orders of
-    * magnitude smaller than the corpus — so at or below `graphxMaxEdges`
-    * verified pairs its components come from one collect and a
-    * union-find on the driver (32 MB of edges at the 2M default), and
-    * past it from [[graft.graph.GraphOps.ccStarEdges]] (pointer jumping,
-    * O(log n) rounds on any topology) — the heavily-duplicated-corpus
-    * regime where each dup group is a near-clique and the pair graph
-    * itself is big (round-12 measurement at sf10: on the 27M-edge
-    * replicated dup graph the Catalyst path cut q91's min-of-2 189 s →
-    * 88 s against GraphX Pregel). The pick is
-    * [[graft.graph.GraphOps.ccAuto]]'s; both engines label every vertex
-    * with its component's MIN id (AlgoRandomSpec asserts set-equality),
-    * so the switch can never change results. */
+    * magnitude smaller than the corpus — so its components come from
+    * [[graft.graph.GraphOps.ccAuto]], which picks the engine from the
+    * verified pair count: one collect and a union-find on the driver
+    * for most corpora, [[graft.graph.GraphOps.ccStarEdges]] (pointer
+    * jumping, O(log n) rounds on any topology) in the
+    * heavily-duplicated-corpus regime where each dup group is a
+    * near-clique and the pair graph itself is big. Both engines label
+    * every vertex with its component's MIN id (AlgoRandomSpec asserts
+    * set-equality), so the pick can never change results. */
   def fuzzyDedup(
       spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      jaccNum: Int = 1, jaccDen: Int = 2,
-      graphxMaxEdges: Long = 2000000L): DataFrame = span("dedup.fuzzyDedup") {
+      jaccNum: Int = 1, jaccDen: Int = 2): DataFrame = span("dedup.fuzzyDedup") {
     import graft.graph.GraphOps
     // the band pass is persisted: the cand subplan is embedded three
     // times in the verify stage (candIds inside both shingle-set sides
@@ -439,7 +435,7 @@ object Dedup {
       .join(sets.select(col("sid").as("id_b"), col("sh").as("sh_b")), "id_b")
       .filter(inter * jaccDen >= uni * jaccNum)
     // the CC output stays referenced by the returned lazy frame
-    val cc = GraphOps.ccAuto(verified, "id_a", "id_b", graphxMaxEdges)
+    val cc = GraphOps.ccAuto(verified, "id_a", "id_b")
     cand.unpersist(blocking = false)
     docs.select(col(idCol))
       .join(cc.select(col("id").as(idCol), col("component")), Seq(idCol), "left")

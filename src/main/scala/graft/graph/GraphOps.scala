@@ -19,9 +19,10 @@ import graft.obs.span
   *
   * Scale notes: edge lists arrive as DataFrames (distinct equi-join
   * products, shuffled on their keys). The pipelines' loops are Catalyst
-  * supersteps over a partitioned edge cache, except CC on graphs small
-  * enough for a union-find on the driver ([[ccAuto]]); the GraphX Pregel
-  * forms stay as RDD reference implementations.
+  * supersteps over a partitioned edge cache, except CC on graphs at or
+  * below [[ccAuto]]'s one edge threshold, which a union-find labels on
+  * the driver; the GraphX Pregel forms stay as RDD reference
+  * implementations.
   */
 object GraphOps {
 
@@ -403,11 +404,30 @@ object GraphOps {
     * SuperstepBlock), `maxIter` bounds pathological chains. Returns
     * (id, component) as a materialized local checkpoint. */
   def ccEdges(edges: DataFrame, srcCol: String, dstCol: String, maxIter: Int = 20,
-      broadcastState: Option[Boolean] = None): DataFrame = {
-    val parts = sizedLoopPartsFromStats(edges)
-    truncatedCc(edges, srcCol, dstCol)(
-      ccMinSupersteps(_, _, _, parts, maxIter, broadcastState, edges))
-  }
+      broadcastState: Option[Boolean] = None): DataFrame =
+    truncatedCc(edges, srcCol, dstCol) { (in, inSrc, inDst) =>
+      span("graph.ccMinSupersteps") {
+        // Self-loops make the superstep a pure aggregation over the static
+        // edge table — new label = min over (self ∪ neighbors) — so the
+        // previous state is referenced exactly ONCE per superstep and a
+        // lazily-chained block stays a LINEAR plan (the SuperstepBlock
+        // invariant; the earlier labels ⋈ nbrMin form referenced the state
+        // twice and doubled the subtree per chained step).
+        val (und, release) = undirectedCache(in, inSrc, inDst, "src",
+          Some(sizedLoopPartsFromStats(edges)), selfLoops = true)
+        val labels = withVertices(und, edges, broadcastState) { (verts, bc) =>
+          supersteps(verts.withColumn("label", col("id")), maxIter, SuperstepBlock,
+              Some(labelSum("label"))) { labels =>
+            und.join(stateSide(labels.withColumnRenamed("id", "nbr"), bc),
+                col("dst") === col("nbr"))
+              .groupBy(col("src").as("id"))
+              .agg(min(col("label")).as("label"))
+          }
+        }
+        release()
+        labels.withColumnRenamed("label", "component")
+      }
+    }
 
   /** Runs a CC loop over `edges` with its lineage truncated: the
     * caller's frame and columns when [[loopInputMaterialized]], else a
@@ -428,33 +448,6 @@ object GraphOps {
       releaseLocalCheckpoint(pre)
       labels
     }
-
-  /** The [[ccEdges]] supersteps over a materialized edge frame; `edges`
-    * is the frame whose statistics bound the vertex count for the
-    * state-join strategy. Returns [[supersteps]]' last snapshot. */
-  private def ccMinSupersteps(in: DataFrame, srcCol: String, dstCol: String,
-      parts: Int, maxIter: Int, broadcastState: Option[Boolean],
-      edges: DataFrame): DataFrame = span("graph.ccMinSupersteps") {
-    // Self-loops make the superstep a pure aggregation over the static
-    // edge table — new label = min over (self ∪ neighbors) — so the
-    // previous state is referenced exactly ONCE per superstep and a
-    // lazily-chained block stays a LINEAR plan (the SuperstepBlock
-    // invariant; the earlier labels ⋈ nbrMin form referenced the state
-    // twice and doubled the subtree per chained step).
-    val (und, release) = undirectedCache(in, srcCol, dstCol, "src",
-      Some(parts), selfLoops = true)
-    val labels = withVertices(und, edges, broadcastState) { (verts, bc) =>
-      supersteps(verts.withColumn("label", col("id")), maxIter, SuperstepBlock,
-          Some(labelSum("label"))) { labels =>
-        und.join(stateSide(labels.withColumnRenamed("id", "nbr"), bc),
-            col("dst") === col("nbr"))
-          .groupBy(col("src").as("id"))
-          .agg(min(col("label")).as("label"))
-      }
-    }
-    release()
-    labels.withColumnRenamed("label", "component")
-  }
 
   /** Connected components in O(log n) ROUNDS — the high-diameter scale
     * path (Shiloach–Vishkin-style pointer jumping; the MapReduce
@@ -484,33 +477,30 @@ object GraphOps {
     truncatedCc(edges, srcCol, dstCol)(
       ccStarRounds(_, _, _, sizedLoopPartsFromStats(edges), maxIter))
 
+  /** [[ccAuto]]'s threshold: graphs of at most this many edges are
+    * labeled on the driver, 32 MB of collected edges at most. Timed on
+    * 4 cores at 50k, 500k and 2M edges, the driver engine beat the
+    * rounds at every size on both sparse random edges (4.1 s vs 156 s at
+    * 2M) and near-clique blobs (1.9 s vs 6.2 s at 2M); 2M is the largest
+    * size measured. */
+  private val LocalCcMaxEdges = 2000000L
+
   /** Connected components by graph size: the one place the engine is
-    * picked from the data. Without `knownRows` the `(src, dst)` frame is
-    * persisted and counted once; the count sizes the partitions
-    * ([[sizedLoopParts]]) and picks the engine. At or below
-    * `localMaxEdges` a union-find labels the collected edges on the
-    * driver ([[localComponents]]; 32 MB at the largest threshold, 2M,
-    * a broadcast build side's size) with no per-superstep cost. Above
-    * it the [[ccStarEdges]] rounds run over one lazy `localCheckpoint`
-    * view of the cache, so no round re-renders the caller's lineage and
-    * its O(log n) rounds hold on any topology. Both engines label a
-    * vertex with its component's min id (AlgoRandomSpec), so the pick
-    * changes wall time only.
-    *
-    * Each caller keeps the threshold it set against GraphX Pregel, the
-    * small-graph engine before: 50k for the Leiden split's intra graphs
-    * and semDedup's near-clique τ-graphs (sf1: 68 s vs 38 s on q150's
-    * splits), 2M for fuzzyDedup's sparse near-dup graphs (sf10: a
-    * 27M-edge dup graph went 189 s → 88 s on the Catalyst side).
-    *
-    * `pointerJumping = false` runs [[ccEdges]]' min-propagation
-    * supersteps instead (`maxIter` then counts supersteps): semDedup's
-    * near-clique τ-graphs converge in one block, 3.8–4.6 s vs 14.0–15.4 s
-    * with the rounds at sf0.1. The local engine ignores `maxIter`.
+    * picked, from the edge count alone. Without `knownRows` the
+    * `(src, dst)` frame is persisted and counted once; the count sizes
+    * the partitions ([[sizedLoopParts]]) and picks the engine. At or
+    * below [[LocalCcMaxEdges]] a union-find labels the collected edges
+    * on the driver ([[localComponents]]; 16 bytes an edge) with no
+    * per-superstep cost. Above it the [[ccStarEdges]] rounds run over
+    * one lazy `localCheckpoint` view of the cache, so no round
+    * re-renders the caller's lineage and its O(log n) rounds hold on any
+    * topology. Both engines label a vertex with its component's min id
+    * (AlgoRandomSpec), so the pick changes wall time only.
     *
     * `knownRows`, when given, must be `edges`' exact row count (the
     * Leiden ladder reads it off its refine gate). The input is then
     * neither persisted nor counted: the engine's first job runs its plan.
+    * `localMaxEdges` replaces the threshold in tests only.
     *
     * Returns (id, component) for every vertex of an edge, its size
     * estimate bounded so a join over it plans a broadcast at once. The
@@ -518,8 +508,8 @@ object GraphOps {
     * output is materialized: the Catalyst engine's is a local
     * checkpoint, the local one holds no blocks (a no-op). */
   private[graft] def ccAuto(edges: DataFrame, srcCol: String, dstCol: String,
-      localMaxEdges: Long, maxIter: Int = 30, pointerJumping: Boolean = true,
-      knownRows: Option[Long] = None): DataFrame = span("graph.ccAuto") {
+      knownRows: Option[Long] = None,
+      localMaxEdges: Long = LocalCcMaxEdges): DataFrame = span("graph.ccAuto") {
     val proj = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val input = if (knownRows.isEmpty) proj.persist() else proj
     // the caller's lazy input plan (fuzzyDedup's LSH band + verify pass)
@@ -530,9 +520,8 @@ object GraphOps {
       if (rows <= localMaxEdges) localComponents(input, parts)
       else {
         val view = input.localCheckpoint(eager = false)
-        val labels =
-          if (pointerJumping) ccStarRounds(view, "src", "dst", parts, maxIter)
-          else ccMinSupersteps(view, "src", "dst", parts, maxIter, None, view)
+        // 30 rounds cover components of ~2^30 hops
+        val labels = ccStarRounds(view, "src", "dst", parts, maxIter = 30)
         releaseLocalCheckpoint(view)
         labels
       }
@@ -639,8 +628,8 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
       .distinct()
     // the contracted graph is batch-bounded and usually tiny next to the
-    // labeling: ccAuto labels it on the driver below 50k edges
-    val comp = ccAuto(mapped, "src", "dst", localMaxEdges = 50000L)
+    // labeling, so ccAuto most often labels it on the driver
+    val comp = ccAuto(mapped, "src", "dst")
     val merged = comp.select(col("id").as("component"), col("component").as("newc"))
     // batch vertices the old labeling has never seen enter as self-labels
     val newVerts = e.select(col("src").as("id"))
@@ -698,7 +687,7 @@ object GraphOps {
     val l1 = lpaEdges(withSelf, "src", "dst", iterPerLevel,
       numPartitions = Some(l1Parts)) // (c0 -> c1)
     // L2: coarsest = connected components of the contracted graph
-    val l2 = ccAuto(ce, "src", "dst", localMaxEdges = 50000L, knownRows = Some(ceRows))
+    val l2 = ccAuto(ce, "src", "dst", knownRows = Some(ceRows))
     val lvl0 = asg0.select(col("id"), lit(0).as("level"), col("c0").as("community"))
     val lvl1 = asg0.join(l1.select(col("id").as("c0"), col("label").as("c1")), "c0")
       .select(col("id"), lit(1).as("level"), col("c1").as("community"))
@@ -1069,18 +1058,6 @@ object GraphOps {
       case _ => ()
     }
 
-  /** Newman modularity of a community assignment, per community, in EXACT
-    * integer arithmetic: for the undirected expansion (m2 = 2m directed
-    * rows), contribution_c = E2_c/m2 − (D_c/m2)² with E2_c = directed
-    * within-community edge count and D_c = community degree sum. The
-    * integer numerator q_num_c = E2_c·m2 − D_c² is exact (the double
-    * `contrib` is its exactly-rounded IEEE quotient by m2² — the quality
-    * score for any community detector's output, the evaluation step the
-    * reference's Leiden pipeline leaves implicit in leidenalg).
-    *
-    * Scale: two assignment equi-joins over the edge list + two hash
-    * aggs; D_c ≤ m2 so q_num needs |m2²| < 2⁶³ — exact to ~3e9-edge
-    * graphs, beyond that cast the products to decimal(38,0). */
   /** Neighborhood feature aggregation — ONE message-passing layer
     * (GraphSAGE-mean / GCN style, the feature-propagation step a
     * graph-retrieval ranker runs over entity attributes): for every
@@ -1229,13 +1206,11 @@ object GraphOps {
     * sub-communities — so the output is a deterministic refinement of
     * the input partition.
     *
-    * CC runs via [[ccAuto]]: a union-find on the driver at or below
-    * `graphxMaxEdges` intra edges, [[ccStarEdges]] (pointer jumping,
-    * O(log n) rounds on ANY topology) above — never [[ccEdges]], whose
+    * CC runs via [[ccAuto]], which picks its engine from the intra edge
+    * count: a union-find on the driver or [[ccStarEdges]] (pointer
+    * jumping, O(log n) rounds on ANY topology) — never [[ccEdges]], whose
     * O(diameter) supersteps would leave a long chain-shaped community
     * UNCONVERGED, i.e. still internally disconnected, with no error.
-    * `maxIter` bounds pointer-jumping ROUNDS (the default 20 covers
-    * components of ~2^20 hops).
     *
     * Scale shape: two vertex-sized equi-joins mark intra edges (AQE
     * broadcasts the assignment when it fits), then CC runs over the
@@ -1245,12 +1220,11 @@ object GraphOps {
     * and materialized; every intermediate is released. */
   def wellConnectedSplit(
       edges: DataFrame, srcCol: String, dstCol: String,
-      assignment: DataFrame, idCol: String, labelCol: String,
-      maxIter: Int = 20,
-      graphxMaxEdges: Long = 50000L): DataFrame = span("graph.wellConnectedSplit") {
+      assignment: DataFrame, idCol: String, labelCol: String): DataFrame =
+      span("graph.wellConnectedSplit") {
     val asg = assignment.select(col(idCol).as("id"), col(labelCol).as("c"))
     val (labels, comp) = splitCore(edges, srcCol, dstCol, asg, asg.select("id"),
-      bc = false)(ccAuto(_, "src", "dst", graphxMaxEdges, maxIter))
+      bc = false)(ccAuto(_, "src", "dst"))
     // a checkpoint, not a persist: no later plan can reach the component
     // checkpoint released below (the refineCore output note)
     val (out, _) = snapshot(labels)
@@ -1286,7 +1260,7 @@ object GraphOps {
     * intra edges join the chain's own accepted assignment, and their row
     * count rides the refine gate (W of that assignment counts each
     * intra-community row of `edges` once per direction), so ccAuto
-    * neither persists nor counts its input: below 50k intra edges one
+    * neither persists nor counts its input: at or below its threshold one
     * job collects them and the driver's union-find labels them. Results
     * equal the two-call
     * composition ([[lpaLouvainRefineMulti]], then [[wellConnectedSplit]]
@@ -1304,8 +1278,7 @@ object GraphOps {
       numPartitions: Option[Int] = None): DataFrame =
     leidenLadder(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
         broadcastState, numPartitions) { (intra, rows) =>
-      ccAuto(intra, "src", "dst", localMaxEdges = 50000L, maxIter = 20,
-        knownRows = Some(rows))
+      ccAuto(intra, "src", "dst", knownRows = Some(rows))
     }
 
   /** [[lpaLeidenRefineMulti]] with its connected-components call given:
@@ -1626,6 +1599,18 @@ object GraphOps {
     }
   }
 
+  /** Newman modularity of a community assignment, per community, in EXACT
+    * integer arithmetic: for the undirected expansion (m2 = 2m directed
+    * rows), contribution_c = E2_c/m2 − (D_c/m2)² with E2_c = directed
+    * within-community edge count and D_c = community degree sum. The
+    * integer numerator q_num_c = E2_c·m2 − D_c² is exact (the double
+    * `contrib` is its exactly-rounded IEEE quotient by m2² — the quality
+    * score for any community detector's output, the evaluation step the
+    * reference's Leiden pipeline leaves implicit in leidenalg).
+    *
+    * Scale: two assignment equi-joins over the edge list + two hash
+    * aggs; D_c ≤ m2 so q_num needs |m2²| < 2⁶³ — exact to ~3e9-edge
+    * graphs, beyond that cast the products to decimal(38,0). */
   def modularityOf(
       edges: DataFrame, srcCol: String, dstCol: String,
       assignment: DataFrame, idCol: String, labelCol: String): DataFrame = {

@@ -319,9 +319,9 @@ object GraphQueries {
         .persist()
       val old = e.filter(col("src") % 5 =!= 0)
       val batch = e.filter(col("src") % 5 === 0)
-      // the base labeling on the driver: a sparse path graph whose
-      // components hold at most 4 vertices (fuzzyDedup's 2M threshold)
-      val base = GraphOps.ccAuto(old, "src", "dst", localMaxEdges = 2000000L)
+      // the base labeling: a sparse path graph whose components hold
+      // at most 4 vertices
+      val base = GraphOps.ccAuto(old, "src", "dst")
       val out = GraphOps.incrementalCC(base, batch, "src", "dst")
       e.unpersist(blocking = false) // out is a materialized checkpoint
       out

@@ -222,20 +222,6 @@ object Similarity {
     concat(bits.toIndexedSeq: _*)
   }
 
-  /** IVF-style ANN: a coarse quantizer assigns every vector to its
-    * nearest centroid cell (argmax cosine, ties → smaller centroid id);
-    * search probes only the query's cell and re-ranks by exact cosine.
-    *
-    * Centroids here are the `nCells` lowest-id vectors — a deterministic,
-    * training-free quantizer so the whole operator has an exact SQL
-    * oracle; a production build would drop k-means centroids into the
-    * same `cent` table and nothing else changes. Scale shape: centroids
-    * broadcast, assignment is one scan + hash-agg argmax (no window
-    * sort), probe is an equi-join on the cell id. */
-  /** The IVF coarse-quantizer cell assignment — (cell_id, cell) for
-    * every corpus vector. Centroids are the `nCells` lowest-id vectors
-    * (deterministic, training-free — see [[annIvf]]); assignment is one
-    * broadcast scan + hash-agg argmax, no window sort. */
   /** Cosine-argmax cell assignment against an explicit centroid frame
     * (cell, cv raw-double vectors) — THE assignment body of [[ivfCells]]
     * and the add-time rule of [[appendPqIndex]] under cos_raw; one
@@ -267,12 +253,26 @@ object Similarity {
           .getField("ncid")).as("cell"))
   }
 
+  /** The IVF coarse-quantizer cell assignment — (cell_id, cell) for
+    * every corpus vector. Centroids are the `nCells` lowest-id vectors
+    * (deterministic, training-free — see [[annIvf]]); assignment is one
+    * broadcast scan + hash-agg argmax, no window sort. */
   def ivfCells(
       emb: DataFrame, idCol: String, vecCol: String, nCells: Int): DataFrame =
     cosAssign(emb, idCol, vecCol,
       emb.select(col(idCol).as("cell"), vecD(col(vecCol)).as("cv"))
         .orderBy(col("cell")).limit(nCells))
 
+  /** IVF-style ANN: a coarse quantizer assigns every vector to its
+    * nearest centroid cell (argmax cosine, ties → smaller centroid id);
+    * search probes only the query's cell and re-ranks by exact cosine.
+    *
+    * Centroids here are the `nCells` lowest-id vectors — a deterministic,
+    * training-free quantizer so the whole operator has an exact SQL
+    * oracle; a production build would drop k-means centroids into the
+    * same `cent` table and nothing else changes. Scale shape: centroids
+    * broadcast, assignment is one scan + hash-agg argmax (no window
+    * sort), probe is an equi-join on the cell id. */
   def annIvf(
       emb: DataFrame, idCol: String, vecCol: String,
       query: DataFrame, k: Int, nCells: Int): DataFrame =
@@ -436,16 +436,11 @@ object Similarity {
     * (idCol, cluster, keep_id, is_dup) for every embedded doc,
     * checkpointed and materialized; every intermediate is released.
     *
-    * CC over the τ-graph is [[graft.graph.GraphOps.ccAuto]]'s engine
-    * pick: a union-find on the driver at or below `graphxMaxEdges`
-    * pairs, min-propagation supersteps above. The threshold is LOWER
-    * here than fuzzyDedup's 2M because semDedup's τ-graphs are dense
-    * near-clique blobs (ccAuto's doc has the measurements). It affects
-    * wall time only. */
+    * CC over the τ-graph is [[graft.graph.GraphOps.ccAuto]]'s: it picks
+    * the engine from the pair count, which affects wall time only. */
   def semDedup(
       emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, tau: Double,
-      graphxMaxEdges: Long = 50000L): DataFrame = span("vector.semDedup") {
+      k: Int, iters: Int, tau: Double): DataFrame = span("vector.semDedup") {
     // persist the clustered-vector frame: it feeds BOTH sides of the
     // pair join AND the final projection — without the cache every
     // consumer re-executes the full Lloyd chain (measured 31 s → ~8 s
@@ -462,8 +457,7 @@ object Similarity {
       .filter(col("ia") < col("ib"))
       .filter(cosine(col("va"), col("vb"), col("na"), col("nb")) >= tau)
       .select(col("ia").as("src"), col("ib").as("dst"))
-    val comp = graft.graph.GraphOps.ccAuto(pairs, "src", "dst", graphxMaxEdges,
-      maxIter = 20, pointerJumping = false)
+    val comp = graft.graph.GraphOps.ccAuto(pairs, "src", "dst")
     // a checkpoint, not a persist: no later plan can reach the component
     // checkpoint released below
     val out = v.select(col(idCol), col("cluster"))

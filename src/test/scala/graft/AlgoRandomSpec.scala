@@ -493,8 +493,8 @@ class AlgoRandomSpec extends SparkSpec {
             rounds = rounds, gammaPcts = gammas, broadcastState = None,
             numPartitions = None) { (intra, known) =>
           handed.add(known -> intra.count())
-          GraphOps.ccAuto(intra, "src", "dst", localMaxEdges = if (i % 2 == 1) 0L else 50000L,
-            maxIter = 20, knownRows = Some(known))
+          if (i % 2 == 1) GraphOps.ccAuto(intra, "src", "dst", Some(known), localMaxEdges = 0L)
+          else GraphOps.ccAuto(intra, "src", "dst", Some(known))
         }
         assert(hooked.as[(Long, Long, Long)].collect().sorted.toSeq == want,
           s"hooked ladder ≠ refine-then-split for $name")
@@ -733,36 +733,74 @@ class AlgoRandomSpec extends SparkSpec {
   }
 
   test("ccAuto equals ccEdges on both engines and leaves only its output") {
-    // the same random graphs as above, under the Catalyst rounds
-    // (localMaxEdges = 0) and under the driver-local union-find (the
-    // callers' 50k default), whose output holds no cached blocks
+    // the same random graphs as above plus the graph each CC caller
+    // builds in its own spec, under the Catalyst rounds (localMaxEdges =
+    // 0) and under the default threshold's driver-local union-find, whose
+    // output holds no cached blocks
     val sc = spark.sparkContext
-    for (seed <- Seq(7, 41, 97); localMaxEdges <- Seq(0L, 50000L)) {
+    val random = Seq(7, 41, 97).map { seed =>
       val rnd = new Random(seed)
       val n = 35
-      val edges = Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      s"seed $seed" -> Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
+    }
+    val callers = Seq(
+      // GraphSpec's wellConnectedSplit case: a path, two disconnected
+      // pairs in one community; the stranded vertex has no intra edge
+      "stranded-community intra graph" -> Seq(1L -> 2L, 2L -> 3L, 10L -> 11L, 12L -> 13L),
+      // SimilaritySpec's semDedup case: one near-clique blob at τ = 0.95
+      "blob τ-graph" -> Seq(0L -> 1L, 0L -> 4L, 1L -> 4L),
+      // DedupSpec's fuzzyDedup case: a near-dup chain and an exact pair
+      "LSH dup graph" -> Seq(10L -> 11L, 11L -> 12L, 10L -> 12L, 20L -> 21L))
+    for ((name, edges) <- random ++ callers; rounds <- Seq(true, false)) {
       val df = edges.toDF("src", "dst")
       val prop = GraphOps.ccEdges(df, "src", "dst", maxIter = 40)
         .as[(Long, Long)].collect().toMap
       val before = sc.getPersistentRDDs.keySet
-      val out = GraphOps.ccAuto(df, "src", "dst", localMaxEdges)
+      val out =
+        if (rounds) GraphOps.ccAuto(df, "src", "dst", localMaxEdges = 0L)
+        else GraphOps.ccAuto(df, "src", "dst")
       val own = out.queryExecution.analyzed.collectLeaves().collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
       }.toSet
       assert(own.size == 1 && sc.getPersistentRDDs.keySet -- before ==
-          (if (localMaxEdges > 0) Set.empty[Int] else own),
-        s"seed $seed, localMaxEdges=$localMaxEdges left more than its output registered")
+          (if (rounds) own else Set.empty[Int]),
+        s"$name, rounds=$rounds left more than its output registered")
       // read after the call: the edge cache and the view are released
       Thread.sleep(200L) // time for the asynchronous block removal
       assert(out.as[(Long, Long)].collect().toMap == prop,
-        s"ccAuto mismatch for seed $seed, localMaxEdges=$localMaxEdges")
+        s"ccAuto mismatch for $name, rounds=$rounds")
       GraphOps.releaseLocalCheckpoint(out)
     }
   }
 
+  test("ccAuto labels on the driver at the threshold and runs the rounds one edge past it") {
+    // n edges with the threshold at n, then the same graph with one
+    // duplicate row: the labels are the same, the engine is not
+    val rnd = new Random(13)
+    val edges = Seq.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+    val n = edges.size.toLong
+    def run(rows: Seq[(Long, Long)]) = {
+      val rec = new graft.obs.Recorder().attach(spark)
+      try {
+        val out = GraphOps.ccAuto(rows.toDF("src", "dst"), "src", "dst", localMaxEdges = n)
+        val labels = out.as[(Long, Long)].collect().toMap
+        GraphOps.releaseLocalCheckpoint(out)
+        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
+        (labels, rec.spanTable.keySet.exists(_.endsWith("graph.ccStarRounds")))
+      } finally rec.detach(spark)
+    }
+    val (atN, roundsAtN) = run(edges)
+    val (pastN, roundsPastN) = run(edges :+ edges.head)
+    assert(!roundsAtN, s"the rounds ran on $n edges with the threshold at $n")
+    assert(roundsPastN, s"the driver engine ran on ${n + 1} edges with the threshold at $n")
+    assert(atN == pastN)
+    assert(atN == GraphOps.ccEdges(edges.toDF("src", "dst"), "src", "dst", maxIter = 40)
+      .as[(Long, Long)].collect().toMap)
+  }
+
   test("ccAuto's driver-local engine equals the Catalyst engines on edge-case graphs") {
-    // each input at the callers' 50k default: the local union-find must
+    // each input at the default threshold: the local union-find must
     // label like ccEdges / ccStarEdges and leave no RDD or cache entry
     val sc = spark.sparkContext
     val star = (1L to 10000L).map(0L -> _)
@@ -781,7 +819,7 @@ class AlgoRandomSpec extends SparkSpec {
         else GraphOps.ccEdges(df, "src", "dst", maxIter = 40)).as[(Long, Long)].collect().toMap
       val rddsBefore = sc.getPersistentRDDs.keySet
       val entriesBefore = org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark)
-      val out = GraphOps.ccAuto(df, "src", "dst", localMaxEdges = 50000L)
+      val out = GraphOps.ccAuto(df, "src", "dst")
       assert(sc.getPersistentRDDs.keySet == rddsBefore, s"$name left an RDD")
       assert(org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark) == entriesBefore,
         s"$name left a cache entry")

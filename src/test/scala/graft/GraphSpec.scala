@@ -558,34 +558,28 @@ class GraphSpec extends SparkSpec {
     GraphOps.releaseLocalCheckpoint(out)
   }
 
-  test("wellConnectedSplit: both CC engines agree and leave only the output") {
+  test("wellConnectedSplit: splits a stranded community and leaves only the output") {
     // a path inside one community (split keeps it whole), a community
-    // of two disconnected pairs (split in two), and a stranded vertex
+    // of two disconnected pairs (split in two), and a stranded vertex;
+    // AlgoRandomSpec runs its intra graph under both CC engines
     val e = Seq((1L, 2L), (2L, 3L), (10L, 11L), (12L, 13L), (3L, 10L))
       .toDF("src", "dst").localCheckpoint()
     val asg = (Seq(1L, 2L, 3L).map(_ -> 1L) ++ Seq(10L, 11L, 12L, 13L).map(_ -> 10L) ++
       Seq(30L -> 1L)).toDF("id", "label")
     val sc = spark.sparkContext
-    def run(graphxMaxEdges: Long) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = GraphOps.wellConnectedSplit(e, "src", "dst", asg, "id", "label",
-        graphxMaxEdges = graphxMaxEdges)
-      assert((sc.getPersistentRDDs.keySet -- before).size == 1,
-        s"graphxMaxEdges=$graphxMaxEdges left more than its output registered")
-      val m = out.as[(Long, Long)].collect().toMap
-      GraphOps.releaseLocalCheckpoint(out)
-      m
-    }
-    val local = run(graphxMaxEdges = 50000L) // the driver-local union-find
-    val star = run(graphxMaxEdges = 0L) // the ccStarEdges loop
-    assert(local == star)
-    assert(local == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
+    val before = sc.getPersistentRDDs.keySet
+    val out = GraphOps.wellConnectedSplit(e, "src", "dst", asg, "id", "label")
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1,
+      "left more than its output registered")
+    val m = out.as[(Long, Long)].collect().toMap
+    GraphOps.releaseLocalCheckpoint(out)
+    assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       12L -> 12L, 13L -> 12L, 30L -> 30L))
   }
 
   test("ccAuto's local engine returns an RDD-backed frame with an exact size estimate") {
     val df = Seq(1L -> 2L, 2L -> 3L, 7L -> 8L).toDF("src", "dst")
-    val out = GraphOps.ccAuto(df, "src", "dst", localMaxEdges = 50000L)
+    val out = GraphOps.ccAuto(df, "src", "dst")
     // an RDD leaf, never a LocalRelation, whose rows the optimizer would
     // evaluate at plan time to fold the filter and projection below
     val plan = out.filter(col("id") > 1L).select("component").queryExecution.optimizedPlan
