@@ -19,10 +19,12 @@ import graft.obs.span
   *
   * Scale notes: edge lists arrive as DataFrames (distinct equi-join
   * products, shuffled on their keys). The pipelines' loops are Catalyst
-  * supersteps over a partitioned edge cache, except CC on graphs at or
-  * below [[ccAuto]]'s one edge threshold, which a union-find labels on
-  * the driver; the GraphX Pregel forms stay as RDD reference
-  * implementations.
+  * supersteps over a partitioned edge cache, except on graphs at or
+  * below the one edge constant [[LocalMaxEdges]]: there [[ccAuto]]'s
+  * union-find and the whole Leiden ladder ([[lpaLouvainRefineMulti]],
+  * [[lpaLeidenRefineMulti]]) run on the driver after one collect, with
+  * the labels of their Catalyst engines. The GraphX Pregel forms stay
+  * as RDD reference implementations.
   */
 object GraphOps {
 
@@ -275,20 +277,20 @@ object GraphOps {
     * ceil(undRows / target) clamped to
     * [1, session shuffle partitions]: big graphs keep today's plans
     * exactly (the cap), small graphs stop paying the floor. The target
-    * (default 100 k rows/partition — the constant communityLevels and
-    * q138 already measured) is a session conf so a cluster deployment
-    * can retune it without code. Partition count never changes results:
+    * is [[LoopRowsPerPartition]]. Partition count never changes results:
     * every loop body is exact-integer aggregation with total-order
     * tie-breaks. */
   private[graft] def sizedLoopParts(
       spark: SparkSession, undRows: BigInt): Int = {
-    val target = BigInt(math.max(1L,
-      spark.conf.get("spark.graft.superstep.targetRowsPerPartition",
-        "100000").toLong))
+    val target = BigInt(LoopRowsPerPartition)
     val cap = spark.sessionState.conf.numShufflePartitions
     if (undRows >= target * cap) cap
     else math.max(1, ((undRows + target - 1) / target).toInt)
   }
+
+  /** [[sizedLoopParts]]' target: 100 k rows a partition, the constant
+    * communityLevels and q138 measured. */
+  private val LoopRowsPerPartition = 100000L
 
   /** [[sizedLoopParts]] from statistics: the job-free default for loop
     * setup sites whose edge frames are scan-derived (see
@@ -477,22 +479,46 @@ object GraphOps {
     truncatedCc(edges, srcCol, dstCol)(
       ccStarRounds(_, _, _, sizedLoopPartsFromStats(edges), maxIter))
 
-  /** [[ccAuto]]'s threshold: graphs of at most this many edges are
-    * labeled on the driver, 32 MB of collected edges at most. Timed on
-    * 4 cores at 50k, 500k and 2M edges, the driver engine beat the
-    * rounds at every size on both sparse random edges (4.1 s vs 156 s at
-    * 2M) and near-clique blobs (1.9 s vs 6.2 s at 2M); 2M is the largest
-    * size measured. */
-  private val LocalCcMaxEdges = 2000000L
+  /** The graph constant: [[ccAuto]] and the Leiden ladder run graphs of
+    * at most this many edges on the driver, 32 MB of collected edges at
+    * most. Timed on 4 cores at 50k, 500k and 2M edges, the driver
+    * engines beat the distributed ones at every size, on sparse random
+    * edges and on near-clique blobs. At 2M: CC 4.1 s vs 156 s (sparse)
+    * and 1.9 s vs 6.2 s (blob); the 3-γ ladder about 7 s vs 54 s and
+    * 2.4 s vs 25 s. 2M is the largest size measured. */
+  private val LocalMaxEdges = 2000000L
+
+  /** `edges` and its exact row count, handed to `body` with the frame
+    * and the `(src, dst)` column names it reads. `knownRows`, when given,
+    * must be that count. Without it, a materialized `edges`
+    * ([[loopInputMaterialized]]) is counted in place; any other is
+    * projected to `(src, dst)`, persisted and counted once, `body` reads
+    * that projection (a loop input used in place), and it is released
+    * after `body`. The count picks the engine of the two callers,
+    * [[ccAuto]] and the Leiden ladder. */
+  private def withEdgeCount(edges: DataFrame, srcCol: String, dstCol: String,
+      knownRows: Option[Long], countSpan: String)(
+      body: (DataFrame, String, String, Long) => DataFrame): DataFrame =
+    knownRows match {
+      case Some(rows) => body(edges, srcCol, dstCol, rows)
+      case None if loopInputMaterialized(edges) =>
+        body(edges, srcCol, dstCol, span(countSpan)(edges.count()))
+      case None =>
+        val input = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
+        // the caller's lazy input plan (fuzzyDedup's LSH band + verify
+        // pass) runs here
+        val out = body(input, "src", "dst", span(countSpan)(input.count()))
+        input.unpersist(blocking = false)
+        out
+    }
 
   /** Connected components by graph size: the one place the engine is
-    * picked, from the edge count alone. Without `knownRows` the
-    * `(src, dst)` frame is persisted and counted once; the count sizes
-    * the partitions ([[sizedLoopParts]]) and picks the engine. At or
-    * below [[LocalCcMaxEdges]] a union-find labels the collected edges
-    * on the driver ([[localComponents]]; 16 bytes an edge) with no
+    * picked, from the edge count alone ([[withEdgeCount]]); the count
+    * also sizes the partitions ([[sizedLoopParts]]). At or below
+    * [[LocalMaxEdges]] a union-find labels the collected edges on the
+    * driver ([[localComponents]]; 16 bytes an edge) with no
     * per-superstep cost. Above it the [[ccStarEdges]] rounds run over
-    * one lazy `localCheckpoint` view of the cache, so no round
+    * one lazy `localCheckpoint` view of the input, so no round
     * re-renders the caller's lineage and its O(log n) rounds hold on any
     * topology. Both engines label a vertex with its component's min id
     * (AlgoRandomSpec), so the pick changes wall time only.
@@ -509,65 +535,96 @@ object GraphOps {
     * checkpoint, the local one holds no blocks (a no-op). */
   private[graft] def ccAuto(edges: DataFrame, srcCol: String, dstCol: String,
       knownRows: Option[Long] = None,
-      localMaxEdges: Long = LocalCcMaxEdges): DataFrame = span("graph.ccAuto") {
-    val proj = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val input = if (knownRows.isEmpty) proj.persist() else proj
-    // the caller's lazy input plan (fuzzyDedup's LSH band + verify pass)
-    // runs here unless its count is known
-    val rows = knownRows.getOrElse(span("graph.ccAuto.input")(input.count()))
-    val parts = sizedLoopParts(edges.sparkSession, BigInt(rows) * 2)
-    val comp =
-      if (rows <= localMaxEdges) localComponents(input, parts)
+      localMaxEdges: Long = LocalMaxEdges): DataFrame = span("graph.ccAuto") {
+    withEdgeCount(edges, srcCol, dstCol, knownRows, "graph.ccAuto.input") {
+        (input, src, dst, rows) =>
+      val parts = sizedLoopParts(edges.sparkSession, BigInt(rows) * 2)
+      if (rows <= localMaxEdges) localComponents(input, src, dst, parts)
       else {
-        val view = input.localCheckpoint(eager = false)
+        val view = input.select(col(src).as("src"), col(dst).as("dst"))
+          .localCheckpoint(eager = false)
         // 30 rounds cover components of ~2^30 hops
         val labels = ccStarRounds(view, "src", "dst", parts, maxIter = 30)
         releaseLocalCheckpoint(view)
         labels
       }
-    if (knownRows.isEmpty) input.unpersist(blocking = false)
-    comp
+    }
   }
 
-  /** [[ccAuto]]'s driver-local engine. One job collects the `(src, dst)`
-    * rows as one packed `Array[Long]` per partition (16 bytes an edge);
-    * the sorted distinct endpoints index a union-find that roots each
-    * union at the smaller index, i.e. the smaller id, and halves paths,
-    * so each root is its component's min id. Returns (id, component) in
-    * `parts` partitions of an RDD over the driver's arrays, bounded by
-    * its exact row count; not a `LocalRelation`, whose rows the optimizer
-    * evaluates at plan time to fold projections over it (GraphSpec pins
-    * the form). */
-  private def localComponents(edges: DataFrame, parts: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // a Dataset action, not an RDD one: the job and the AQE stages of the
-    // caller's plan run under one SQL execution
-    val ends = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .mapPartitions { it =>
-        val b = Array.newBuilder[Long]
-        it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
-        Iterator.single(b.result())
-      }.collect().flatten
-    val ids = ends.sorted
-    var n = 0
-    for (i <- ids.indices if n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
-    val up = Array.range(0, n)
-    @annotation.tailrec def find(x: Int): Int =
-      if (up(x) == x) x else { up(x) = up(up(x)); find(up(x)) }
-    def idx(id: Long) = java.util.Arrays.binarySearch(ids, 0, n, id)
-    for (k <- ends.indices by 2) {
-      val (a, b) = (find(idx(ends(k))), find(idx(ends(k + 1))))
-      if (a < b) up(b) = a else if (b < a) up(a) = b
+  /** [[ccAuto]]'s driver-local engine: the collected edges
+    * ([[LocalEdges]]) and their [[LocalEdges.minRoots]] union-find.
+    * Returns (id, component) as a [[driverFrame]] of `parts`
+    * partitions. */
+  private def localComponents(edges: DataFrame, srcCol: String, dstCol: String,
+      parts: Int): DataFrame = {
+    val g = LocalEdges.collect(edges, srcCol, dstCol)
+    val root = g.minRoots(_ => true)
+    driverFrame(edges.sparkSession, Seq("id", "component"),
+      Seq(g.ids, Array.tabulate(g.n)(v => g.ids(root(v)))), parts)
+  }
+
+  /** The edges of a driver-local engine: the `(src, dst)` rows, collected
+    * by one job as one packed `Array[Long]` per partition (16 bytes an
+    * edge). `ids` are the sorted distinct endpoints, and row k joins the
+    * vertex indices `ends(2k)` and `ends(2k + 1)`; a vertex's index
+    * orders like its id. */
+  private final class LocalEdges(val ids: Array[Long], val ends: Array[Int]) {
+    def n: Int = ids.length
+
+    /** Each vertex's root in a union-find over the rows k with
+      * `keep(k)`. A union roots at the smaller index, i.e. the smaller
+      * id, and finds halve paths, so each root is the min vertex of its
+      * component; a vertex in no kept row is its own root. */
+    def minRoots(keep: Int => Boolean): Array[Int] = {
+      val up = Array.range(0, n)
+      @annotation.tailrec def find(x: Int): Int =
+        if (up(x) == x) x else { up(x) = up(up(x)); find(up(x)) }
+      for (k <- 0 until ends.length / 2 if keep(k)) {
+        val (a, b) = (find(ends(2 * k)), find(ends(2 * k + 1)))
+        if (a < b) up(b) = a else if (b < a) up(a) = b
+      }
+      Array.tabulate(n)(find)
     }
+  }
+
+  private object LocalEdges {
+    def collect(edges: DataFrame, srcCol: String, dstCol: String): LocalEdges = {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      // a Dataset action, not an RDD one: the job and the AQE stages of
+      // the caller's plan run under one SQL execution
+      val raw = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+        .mapPartitions { it =>
+          val b = Array.newBuilder[Long]
+          it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+          Iterator.single(b.result())
+        }.collect().flatten
+      val sorted = raw.sorted
+      var n = 0
+      for (i <- sorted.indices if n == 0 || sorted(i) != sorted(n - 1)) {
+        sorted(n) = sorted(i); n += 1
+      }
+      val ids = java.util.Arrays.copyOf(sorted, n)
+      new LocalEdges(ids, raw.map(java.util.Arrays.binarySearch(ids, _)))
+    }
+  }
+
+  /** The long columns `cols`, named `names`, as `parts` partitions of an
+    * RDD over the driver's arrays, bounded by its exact row count; not a
+    * `LocalRelation`, whose rows the optimizer evaluates at plan time to
+    * fold projections over it (GraphSpec pins the form). It holds no
+    * blocks, so [[releaseLocalCheckpoint]] on it is a no-op. */
+  private def driverFrame(spark: SparkSession, names: Seq[String],
+      cols: Seq[Array[Long]], parts: Int): DataFrame = {
+    val n = cols.head.length
     val slices = (0 until parts).map { p =>
       val (from, until) = ((n.toLong * p / parts).toInt, (n.toLong * (p + 1) / parts).toInt)
-      (ids.slice(from, until), Array.tabulate(until - from)(i => ids(find(from + i))))
+      cols.map(_.slice(from, until))
     }
-    val rows = spark.sparkContext.parallelize(slices, parts).flatMap { case (id, c) =>
-      id.indices.iterator.map(i => Row(id(i), c(i)))
+    val rows = spark.sparkContext.parallelize(slices, parts).flatMap { c =>
+      c.head.indices.iterator.map(i => Row.fromSeq(c.map(_(i))))
     }
-    val schema = StructType(Seq("id", "component").map(StructField(_, LongType, false)))
+    val schema = StructType(names.map(StructField(_, LongType, false)))
     GraftSqlBridge.withRowBound(spark.createDataFrame(rows, schema), n)
   }
 
@@ -1254,23 +1311,26 @@ object GraphOps {
     * ladder with the well-connectedness split applied PER RESOLUTION —
     * the reference's full community stack (leidenalg at resolutions
     * [2.0, 0.5, 0.1] with split-refinement, neo4j_helpers.py:237-268).
-    * Each γ runs as one concurrent chain
-    * (Concurrent.mapInParallel) from its refine rounds through its split,
-    * with no barrier between the γ until the final union: the split's
-    * intra edges join the chain's own accepted assignment, and their row
-    * count rides the refine gate (W of that assignment counts each
-    * intra-community row of `edges` once per direction), so ccAuto
-    * neither persists nor counts its input: at or below its threshold one
-    * job collects them and the driver's union-find labels them. Results
-    * equal the two-call
-    * composition ([[lpaLouvainRefineMulti]], then [[wellConnectedSplit]]
-    * per γ; AlgoRandomSpec).
-    * `numPartitions`, when given, replaces the superstep partition
-    * count sized from `edges`' statistics ([[sizedLoopParts]]), which
-    * is exact for an input bounded by its row count.
-    * Returns (gamma_pct, id, label): one checkpoint, materialized and
-    * bounded by its row count, that the caller owns. Everything else the
-    * ladder built is released. */
+    * The engine is picked from the edge count ([[lpaRefine]]): at or
+    * below [[LocalMaxEdges]] the whole ladder runs on the driver
+    * ([[localLadder]]), one job collecting the edges. Above it each γ
+    * runs as one concurrent Catalyst chain (Concurrent.mapInParallel)
+    * from its refine rounds through its split, with no barrier between
+    * the γ until the final union: the split's intra edges join the
+    * chain's own accepted assignment, and their row count rides the
+    * refine gate (W of that assignment counts each intra-community row
+    * of `edges` once per direction), so ccAuto neither persists nor
+    * counts its input. Both engines equal the two-call composition
+    * ([[lpaLouvainRefineMulti]], then [[wellConnectedSplit]] per γ;
+    * AlgoRandomSpec).
+    * `numPartitions`, when given, replaces the Catalyst engine's
+    * superstep partition count sized from the edge count
+    * ([[sizedLoopParts]]).
+    * Returns (gamma_pct, id, label), bounded by its row count, that the
+    * caller owns and releases with [[releaseLocalCheckpoint]]: the
+    * Catalyst engine's one checkpoint, or the driver engine's RDD over
+    * its arrays, which holds no blocks. Everything else the ladder built
+    * is released. */
   def lpaLeidenRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
@@ -1282,21 +1342,25 @@ object GraphOps {
     }
 
   /** [[lpaLeidenRefineMulti]] with its connected-components call given:
-    * each chain hands `cc` its intra-community edges and their row count. */
+    * each Catalyst chain hands `cc` its intra-community edges and their
+    * row count. `localMaxEdges` replaces [[LocalMaxEdges]] in tests
+    * only. */
   private[graft] def leidenLadder(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
-      broadcastState: Option[Boolean], numPartitions: Option[Int])(
+      broadcastState: Option[Boolean], numPartitions: Option[Int],
+      localMaxEdges: Long = LocalMaxEdges)(
       cc: (DataFrame, Long) => DataFrame): DataFrame =
       span("graph.lpaLeidenRefineMulti") {
     lpaRefine(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
-        broadcastState, numPartitions) { start =>
+        broadcastState, numPartitions, localMaxEdges, split = true) {
+        (start, input, src, dst) =>
       // Shared-inputs contract (Concurrent): the start state is
-      // materialized by its probe; `edges` by the setup's union scans
+      // materialized by its probe; `input` by the setup's union scans
       val chains = graft.operators.Concurrent.mapInParallel(gammaPcts) { g =>
         val (asg, w) = span("graph.refineCore")(start.accept(g))
         span("graph.wellConnectedSplit") {
-          val (labels, comp) = splitCore(edges, srcCol, dstCol, asg,
+          val (labels, comp) = splitCore(input, src, dst, asg,
             start.verts, start.bc)(cc(_, w / 2))
           start.release(asg) // the components are materialized
           (labels.select(lit(g).as("gamma_pct"), col("id"), col("label")), comp)
@@ -1334,45 +1398,79 @@ object GraphOps {
     * q·m2·W − p·ΣD² differs). The reference runs its Leiden ladder at
     * resolutions [2.0, 0.5, 0.1] over one graph the same way
     * (neo4j_helpers.py:237-268 via /root/reference); re-deriving the
-    * setup per γ tripled the multi-resolution query's cost.
+    * setup per γ tripled the multi-resolution query's cost. Always the
+    * Catalyst engine: the caller's assignment may label with values
+    * that are no vertex id.
     * Returns (gamma_pct, id, label). */
   def louvainRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       assignment: DataFrame, idCol: String, labelCol: String,
       rounds: Int, gammaPcts: Seq[Long],
-      broadcastState: Option[Boolean] = None): DataFrame =
-    refineSetup(edges, srcCol, dstCol, gammaPcts, broadcastState,
+      broadcastState: Option[Boolean] = None): DataFrame = {
+    requireRefine(rounds, gammaPcts)
+    refineSetup(edges, srcCol, dstCol, broadcastState,
         numPartitions = None) { (und, deg, bc) =>
       refineCore(new RefineStart(und, deg, bc, assignment, idCol, labelCol,
         rounds), gammaPcts)
     }
+  }
 
-  /** LPA + γ-ladder refinement over ONE shared setup: the undirected
-    * src-partitioned cache, degree frame, and m2 serve BOTH the LPA
-    * supersteps and every resolution's refine rounds (calling lpaEdges
-    * then louvainRefineMulti separately re-shuffles the expansion and
+  /** LPA + γ-ladder refinement, on the engine the edge count picks
+    * ([[lpaRefine]]): the driver's arrays at or below [[LocalMaxEdges]],
+    * else ONE shared Catalyst setup — the undirected src-partitioned
+    * cache, degree frame, and m2 serve BOTH the LPA supersteps and every
+    * resolution's refine rounds (calling lpaEdges then
+    * louvainRefineMulti separately re-shuffles the expansion and
     * re-aggregates degrees — ~2-3 s of pure rework at sf1). The
-    * recurrence is identical to the two-call form: the LPA snapshot is
-    * refined exactly as louvainRefineMulti would refine it. */
+    * recurrence is identical to the two-call form: the LPA labels are
+    * refined exactly as louvainRefineMulti would refine them.
+    * Returns (gamma_pct, id, label), the accepted community per γ,
+    * bounded by its row count; the caller releases it with
+    * [[releaseLocalCheckpoint]]. */
   def lpaLouvainRefineMulti(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
       broadcastState: Option[Boolean] = None): DataFrame =
-    lpaRefine(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
-      broadcastState, numPartitions = None)(refineCore(_, gammaPcts))
+    louvainLadder(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
+      broadcastState)
 
-  /** The setup every refine entry point shares: the src-partitioned
+  /** [[lpaLouvainRefineMulti]]; `localMaxEdges` replaces
+    * [[LocalMaxEdges]] in tests only. */
+  private[graft] def louvainLadder(
+      edges: DataFrame, srcCol: String, dstCol: String,
+      lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
+      broadcastState: Option[Boolean],
+      localMaxEdges: Long = LocalMaxEdges): DataFrame =
+    lpaRefine(edges, srcCol, dstCol, lpaIters, rounds, gammaPcts,
+        broadcastState, numPartitions = None, localMaxEdges, split = false) {
+      (start, _, _, _) => refineCore(start, gammaPcts)
+    }
+
+  private def requireRefine(rounds: Int, gammaPcts: Seq[Long]): Unit = {
+    require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
+      s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
+    require(rounds >= 1, s"louvainRefine needs rounds >= 1, got $rounds")
+  }
+
+  /** γ = gammaPct/100 as the reduced rational (p, q): all scoring stays
+    * exact-integer; γ = 1 reduces to p = q = 1, bit-identical to the
+    * γ-less gain. */
+  private def gammaRational(g: Long): (Long, Long) = {
+    val gcd = java.math.BigInteger.valueOf(g)
+      .gcd(java.math.BigInteger.valueOf(100L)).longValueExact()
+    (g / gcd, 100L / gcd)
+  }
+
+  /** The setup every Catalyst refine shares: the src-partitioned
     * undirected cache, the degree frame and the state-join decision,
     * handed to `body` and released after it. No und.count() here (r14
     * verdict item 3): the refine start's probe is und's materializer AND
     * reads m2 from the same job; the empty graph degenerates inside the
     * rounds to the identity relabel. */
   private def refineSetup[T](
-      edges: DataFrame, srcCol: String, dstCol: String, gammaPcts: Seq[Long],
+      edges: DataFrame, srcCol: String, dstCol: String,
       broadcastState: Option[Boolean], numPartitions: Option[Int])(
       body: (DataFrame, DataFrame, Boolean) => T): T = {
-    require(gammaPcts.nonEmpty && gammaPcts.forall(_ >= 1),
-      s"louvainRefine needs gammaPct >= 1, got $gammaPcts")
     val (und, release) = undirectedCache(edges, srcCol, dstCol, "src", numPartitions)
     val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("kv"))
       .persist()
@@ -1386,23 +1484,165 @@ object GraphOps {
     out
   }
 
-  /** [[refineSetup]] plus the LPA supersteps, whose labels seed the
-    * refine start handed to `body`. materializeLast = false: a single
-    * LPA block is filled by the start's probe (r14 verdict item 3), and
-    * the labels are released after `body`. */
-  private def lpaRefine[T](
+  /** The LPA → gated refine ladder behind [[lpaLouvainRefineMulti]] and
+    * [[leidenLadder]], on the engine picked from the edge count
+    * ([[withEdgeCount]]): the exact row count of an input bounded by it
+    * ([[GraftSqlBridge.rowBound]]) runs no job; any other input is
+    * persisted as `(src, dst)` and counted once.
+    *
+    * - The driver engine, [[localLadder]], runs at or below
+    *   `localMaxEdges` edges when max(p, q)·m2² < 2⁶³ for every γ = p/q
+    *   (m2 = 2·edges), so that every score and gate value is exact in a
+    *   Long. With `split` it splits each γ's communities as the
+    *   Catalyst `body` does.
+    * - Otherwise the Catalyst engine: [[refineSetup]] over the input
+    *   (the persisted projection is read in place), its partitions sized
+    *   from the count unless `numPartitions` is given, plus the LPA
+    *   supersteps, whose labels seed the refine start handed to `body`
+    *   with the input and its column names. materializeLast = false: a
+    *   single LPA block is filled by the start's probe (r14 verdict
+    *   item 3), and the labels are released after `body`. */
+  private def lpaRefine(
       edges: DataFrame, srcCol: String, dstCol: String,
       lpaIters: Int, rounds: Int, gammaPcts: Seq[Long],
-      broadcastState: Option[Boolean], numPartitions: Option[Int])(
-      body: RefineStart => T): T =
-    refineSetup(edges, srcCol, dstCol, gammaPcts, broadcastState,
-        numPartitions) { (und, deg, bc) =>
-      val lpa = lpaSupersteps(und, und.select(col("src").as("id")).distinct(),
-        lpaIters, bc, materializeLast = false)
-      val out = body(new RefineStart(und, deg, bc, lpa, "id", "label", rounds))
-      releaseState(lpa)
-      out
+      broadcastState: Option[Boolean], numPartitions: Option[Int],
+      localMaxEdges: Long, split: Boolean)(
+      body: (RefineStart, DataFrame, String, String) => DataFrame): DataFrame = {
+    requireRefine(rounds, gammaPcts)
+    withEdgeCount(edges, srcCol, dstCol, GraftSqlBridge.rowBound(edges).map(_.toLong),
+        "graph.lpaRefine.input") { (input, src, dst, rows) =>
+      val parts = sizedLoopParts(edges.sparkSession, BigInt(rows) * 2)
+      val m2 = BigInt(rows) * 2
+      val exact = gammaPcts.forall { g =>
+        val (p, q) = gammaRational(g)
+        BigInt(math.max(p, q)) * m2 * m2 < (BigInt(1) << 63)
+      }
+      if (rows <= localMaxEdges && exact)
+        localLadder(input, src, dst, lpaIters, rounds, gammaPcts, split, parts)
+      else refineSetup(input, src, dst, broadcastState,
+          numPartitions.orElse(Some(parts))) { (und, deg, bc) =>
+        val lpa = lpaSupersteps(und, und.select(col("src").as("id")).distinct(),
+          lpaIters, bc, materializeLast = false)
+        val out = body(new RefineStart(und, deg, bc, lpa, "id", "label", rounds),
+          input, src, dst)
+        releaseState(lpa)
+        out
+      }
     }
+  }
+
+  /** The driver engine of [[lpaRefine]]: one job collects the edges
+    * ([[LocalEdges]]), and every step runs on the driver's arrays with
+    * the Catalyst engine's recurrence and tie-breaks, so the labels are
+    * the same bit for bit (AlgoRandomSpec).
+    *
+    * 1. The undirected expansion in CSR form: each row is one entry in
+    *    each direction, duplicates and self-loops kept (a self-loop
+    *    counts twice); deg(v) is the length of v's row, m2 the total.
+    * 2. Synchronous LPA for `lpaIters` steps from labels = ids, each
+    *    taking the neighbour label by (count desc, label asc).
+    * 3. Per γ = p/q, [[RefineStart.accept]]'s gated rounds: the
+    *    candidates are the neighbours' communities plus the own one,
+    *    score = q·m2·k_{v→c} − p·k_v·(D_c − [c = c_v]·k_v), argmax by
+    *    (score desc, c asc); a round is accepted only if
+    *    q·m2·W − p·ΣD² strictly rises, and the first rejected round
+    *    stops. [[lpaRefine]]'s bound keeps every value exact in a Long.
+    * 4. With `split`, [[LocalEdges.minRoots]] over the rows whose
+    *    endpoints share the accepted community: the split's labels.
+    *
+    * Labels are vertex indices throughout, which order like the ids.
+    * Returns (gamma_pct, id, label) as a [[driverFrame]] of |γ|·n rows
+    * in `parts` partitions. */
+  private def localLadder(edges: DataFrame, srcCol: String, dstCol: String,
+      lpaIters: Int, rounds: Int, gammaPcts: Seq[Long], split: Boolean,
+      parts: Int): DataFrame = span("graph.localLadder") {
+    val g = LocalEdges.collect(edges, srcCol, dstCol)
+    val (n, ends) = (g.n, g.ends)
+    val off = new Array[Int](n + 1)
+    ends.foreach(v => off(v + 1) += 1)
+    for (v <- 0 until n) off(v + 1) += off(v)
+    val adj = new Array[Int](ends.length)
+    val fill = off.clone()
+    for (k <- ends.indices) { adj(fill(ends(k))) = ends(k ^ 1); fill(ends(k)) += 1 }
+    val m2 = ends.length.toLong
+    val deg = Array.tabulate(n)(v => (off(v + 1) - off(v)).toLong)
+    val buf = new Array[Int](if (n == 0) 0 else deg.max.toInt)
+    // v's neighbours grouped by their `lab`, labels ascending
+    def tally(v: Int, lab: Array[Int])(f: (Int, Long) => Unit): Unit = {
+      val d = off(v + 1) - off(v)
+      for (j <- 0 until d) buf(j) = lab(adj(off(v) + j))
+      java.util.Arrays.sort(buf, 0, d)
+      var j = 0
+      while (j < d) {
+        var e = j + 1
+        while (e < d && buf(e) == buf(j)) e += 1
+        f(buf(j), (e - j).toLong)
+        j = e
+      }
+    }
+    var lpa = Array.range(0, n)
+    for (_ <- 1 to lpaIters) {
+      val prev = lpa
+      lpa = Array.tabulate(n) { v =>
+        var best = -1
+        var most = 0L
+        // ascending labels: a strictly larger count replaces, so ties
+        // keep the smallest label
+        tally(v, prev) { (l, c) => if (c > most) { best = l; most = c } }
+        best
+      }
+    }
+    def dcOf(a: Array[Int]): Array[Long] = {
+      val dc = new Array[Long](n)
+      for (v <- 0 until n) dc(a(v)) += deg(v)
+      dc
+    }
+    def qNum(a: Array[Int], dc: Array[Long], p: Long, q: Long): Long = {
+      var w = 0L
+      for (v <- 0 until n; j <- off(v) until off(v + 1) if a(adj(j)) == a(v)) w += 1
+      q * m2 * w - p * dc.foldLeft(0L)((s, d) => s + d * d)
+    }
+    def accept(p: Long, q: Long): Array[Int] = {
+      var asg = lpa
+      var dc = dcOf(asg)
+      var qCur = qNum(asg, dc, p, q)
+      var r = 0
+      var improved = true
+      while (r < rounds && improved) {
+        val cur = asg
+        val dcCur = dc
+        val moved = Array.tabulate(n) { v =>
+          val (cv, kv) = (cur(v), deg(v))
+          var best = -1
+          var top = Long.MinValue
+          var ownSeen = false
+          def offer(c: Int, kvc: Long): Unit = {
+            val s = q * m2 * kvc - p * kv * (dcCur(c) - (if (c == cv) kv else 0L))
+            if (s > top || (s == top && c < best)) { best = c; top = s }
+          }
+          tally(v, cur) { (c, kvc) => if (c == cv) ownSeen = true; offer(c, kvc) }
+          if (!ownSeen) offer(cv, 0L)
+          best
+        }
+        val dcMoved = dcOf(moved)
+        val qNew = qNum(moved, dcMoved, p, q)
+        if (qNew > qCur) { asg = moved; dc = dcMoved; qCur = qNew }
+        else improved = false
+        r += 1
+      }
+      asg
+    }
+    val labels = gammaPcts.map { gamma =>
+      val (p, q) = gammaRational(gamma)
+      val asg = accept(p, q)
+      val lab = if (split) g.minRoots(k => asg(ends(2 * k)) == asg(ends(2 * k + 1))) else asg
+      lab.map(g.ids(_))
+    }
+    driverFrame(edges.sparkSession, Seq("gamma_pct", "id", "label"),
+      Seq(gammaPcts.flatMap(Array.fill(n)(_)).toArray,
+        Array.concat(gammaPcts.map(_ => g.ids): _*), Array.concat(labels: _*)),
+      parts)
+  }
 
   /** The per-γ gated rounds of every [[RefineStart]] in `gammaPcts`, run
     * concurrently, relabeled over the start's assignment and unioned.
@@ -1440,7 +1680,6 @@ object GraphOps {
     * concurrent per-γ [[accept]] calls need (Concurrent's contract). */
   private final class RefineStart(und: DataFrame, deg: DataFrame, val bc: Boolean,
       assignment: DataFrame, idCol: String, labelCol: String, rounds: Int) {
-    require(rounds >= 1, s"louvainRefine needs rounds >= 1, got $rounds")
     private val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     // The state is referenced ~7× per round (gate ×2, D_c, k, candidate
     // union, score join ×2): localCheckpoint, not persist, or the nested
@@ -1511,12 +1750,7 @@ object GraphOps {
       * intra-community row of the edges once per direction. Every other
       * frame the rounds made is released. */
     def accept(g: Long): (DataFrame, Long) = {
-      // γ = gammaPct/100 as the reduced rational p/q — all scoring stays
-      // exact-integer; γ = 1 reduces to p = q = 1, bit-identical to the
-      // γ-less gain.
-      val gcd = java.math.BigInteger.valueOf(g)
-        .gcd(java.math.BigInteger.valueOf(100L)).longValueExact()
-      val (gp, gq) = (g / gcd, 100L / gcd)
+      val (gp, gq) = gammaRational(g)
       // driver-side gate in BigInt: gq·m2·W is ~m2² at worst — wraps a
       // Scala Long at the same ~1.5e9-edge scale wd2Of's note describes
       def qNum(p: Row) = BigInt(gq) * BigInt(m2) * BigInt(p.getLong(0)) -

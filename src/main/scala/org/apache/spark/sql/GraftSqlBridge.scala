@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Catalyst expressions on Spark 4 (where `Column` wraps a ColumnNode, not
   * an Expression) — the checkpoint leaf of a plan, and the two reads a
   * profiler needs (listener-bus drain, cache-entry count). Kept to
-  * exactly these six calls.
+  * exactly these seven calls.
   */
 object GraftSqlBridge {
   /** Wait until every posted listener event has been delivered, so the
@@ -39,6 +39,14 @@ object GraftSqlBridge {
 
   /** True when `df` is a checkpoint, bare or under one projection. */
   def isCheckpoint(df: DataFrame): Boolean = checkpointLeaf(df).isDefined
+
+  /** The row count recorded on `df`'s checkpoint leaf, when `df` is a
+    * checkpoint bounded by [[withRowBound]]: its exact count. A lazy
+    * checkpoint reports its origin plan's statistics, which carry a
+    * count only where the optimizer knows one, an upper bound at worst
+    * (a limit). */
+  def rowBound(df: DataFrame): Option[BigInt] =
+    checkpointLeaf(df).flatMap(_._1.stats.rowCount)
 
   /** `df` — a checkpoint leaf, bare or under one projection — with the
     * leaf's statistics set from its row count `rows`: `rowCount` and

@@ -433,32 +433,46 @@ class AlgoRandomSpec extends SparkSpec {
   }
 
   test("lpaLeidenRefineMulti equals refine-then-split per gamma on random graphs") {
-    // the chained ladder (refine rounds → split per γ, one union) against
-    // the two-call composition, row for row. Random graphs keep duplicate
-    // rows and self-loops; two fixed cases add a γ whose only round is
-    // rejected (disjoint cliques: every move candidate is the vertex's
-    // own community) and the empty edge set.
+    // the ladder on both engines (the Catalyst chains at localMaxEdges =
+    // -1, below every edge count, the empty graph's 0 included; the
+    // driver arrays at the default) against the two-call
+    // composition on the Catalyst engine, row for row; the refine alone
+    // (lpaLouvainRefineMulti) is checked on both engines the same way.
+    // Random graphs keep duplicate rows and self-loops; the fixed cases
+    // add a γ whose only round is rejected (disjoint cliques: every move
+    // candidate is the vertex's own community), the empty edge set and
+    // the degenerate shapes.
     val gammas = Seq(200L, 50L, 10L)
     def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
     val random = (1 to 20).map { seed =>
       val rnd = new Random(seed * 7919L)
       val n = 12 + rnd.nextInt(20)
-      s"seed $seed" -> Seq.fill(10 + rnd.nextInt(40))(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      (s"seed $seed", Seq.fill(10 + rnd.nextInt(40))(
+        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)), gammas)
     }
     assert(random.exists(_._2.exists { case (a, b) => a == b }) &&
-      random.exists { case (_, r) => r.distinct.size < r.size },
+      random.exists { case (_, r, _) => r.distinct.size < r.size },
       "no random case drew a self-loop and a duplicate row")
     val cases = random ++ Seq(
-      "disjoint cliques" -> (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(11L, 12L, 13L))),
-      "no edges" -> Seq.empty[(Long, Long)])
+      ("disjoint cliques", clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(11L, 12L, 13L)), gammas),
+      ("no edges", Seq.empty[(Long, Long)], gammas),
+      ("300-leaf star hub", (1L to 300L).map(0L -> _), gammas),
+      ("one edge", Seq(3L -> 8L), gammas),
+      ("self-loops only", Seq(1L -> 1L, 5L -> 5L, 9L -> 9L), gammas),
+      ("one edge repeated 50 times", Seq.fill(50)(4L -> 7L), gammas),
+      ("γ = 100", random.head._2, Seq(10000L)))
     var strandedSeen = 0
-    for (((name, rows), i) <- cases.zipWithIndex) {
+    for (((name, rows, gs), i) <- cases.zipWithIndex) {
       val e = rows.toDF("src", "dst")
       val rounds = 1 + i % 2
-      val refined = GraphOps.lpaLouvainRefineMulti(e, "src", "dst",
-        lpaIters = 2, rounds = rounds, gammaPcts = gammas)
-      val want = gammas.flatMap { g =>
+      def collected(df: org.apache.spark.sql.DataFrame) = {
+        val out = df.as[(Long, Long, Long)].collect().sorted.toSeq
+        GraphOps.releaseLocalCheckpoint(df)
+        out
+      }
+      val refined = GraphOps.louvainLadder(e, "src", "dst", lpaIters = 2,
+        rounds = rounds, gammaPcts = gs, broadcastState = None, localMaxEdges = -1L)
+      val want = gs.flatMap { g =>
         val lvl = refined.filter(col("gamma_pct") === g)
         val labels = lvl.select("id", "label").as[(Long, Long)].collect().toMap
         // a vertex in no intra-community edge (the split's singleton rule)
@@ -473,38 +487,67 @@ class AlgoRandomSpec extends SparkSpec {
         // the round is rejected: every level keeps the LPA labels
         val lpa = GraphOps.lpaEdges(e, "src", "dst", maxIter = 2)
           .as[(Long, Long)].collect().toSet
-        for (g <- gammas)
+        for (g <- gs)
           assert(refined.filter(col("gamma_pct") === g).select("id", "label")
             .as[(Long, Long)].collect().toSet == lpa, s"$name, γ=$g moved")
       }
-      GraphOps.releaseLocalCheckpoint(refined)
-      val ladder = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
-        lpaIters = 2, rounds = rounds, gammaPcts = gammas)
-      val got = ladder.as[(Long, Long, Long)].collect().sorted.toSeq
-      GraphOps.releaseLocalCheckpoint(ladder)
-      assert(got == want, s"ladder ≠ refine-then-split for $name")
-      // the row count each chain hands ccAuto (W/2 off the refine gate)
-      // is the count of the intra frame it builds (on every third random
-      // case and both fixed ones); odd cases run the Catalyst CC rounds,
-      // even ones the driver-local union-find
-      if (i % 3 == 0 || i >= random.size) {
-        val handed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-        val hooked = GraphOps.leidenLadder(e, "src", "dst", lpaIters = 2,
-            rounds = rounds, gammaPcts = gammas, broadcastState = None,
-            numPartitions = None) { (intra, known) =>
-          handed.add(known -> intra.count())
-          if (i % 2 == 1) GraphOps.ccAuto(intra, "src", "dst", Some(known), localMaxEdges = 0L)
-          else GraphOps.ccAuto(intra, "src", "dst", Some(known))
-        }
-        assert(hooked.as[(Long, Long, Long)].collect().sorted.toSeq == want,
-          s"hooked ladder ≠ refine-then-split for $name")
-        GraphOps.releaseLocalCheckpoint(hooked)
-        val counts = handed.toArray(new Array[(Long, Long)](0)).toSeq
-        assert(counts.size == gammas.size && counts.forall { case (k, n) => k == n },
-          s"known intra rows ≠ counted for $name: $counts")
+      val refinedRows = collected(refined)
+      assert(collected(GraphOps.lpaLouvainRefineMulti(e, "src", "dst",
+          lpaIters = 2, rounds = rounds, gammaPcts = gs)) == refinedRows,
+        s"driver refine ≠ Catalyst refine for $name")
+      assert(collected(GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
+          lpaIters = 2, rounds = rounds, gammaPcts = gs)) == want,
+        s"driver ladder ≠ refine-then-split for $name")
+      // the Catalyst ladder, with the row count each chain hands ccAuto
+      // (W/2 off the refine gate) checked against the count of the intra
+      // frame it builds (on every third random case and every fixed
+      // one); odd cases run the Catalyst CC rounds, even ones the
+      // driver-local union-find
+      val hook = i % 3 == 0 || i >= random.size
+      val handed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+      val hooked = GraphOps.leidenLadder(e, "src", "dst", lpaIters = 2,
+          rounds = rounds, gammaPcts = gs, broadcastState = None,
+          numPartitions = None, localMaxEdges = -1L) { (intra, known) =>
+        if (hook) handed.add(known -> intra.count())
+        if (i % 2 == 1) GraphOps.ccAuto(intra, "src", "dst", Some(known), localMaxEdges = 0L)
+        else GraphOps.ccAuto(intra, "src", "dst", Some(known))
       }
+      assert(collected(hooked) == want, s"Catalyst ladder ≠ refine-then-split for $name")
+      val counts = handed.toArray(new Array[(Long, Long)](0)).toSeq
+      assert(!hook || counts.size == gs.size && counts.forall { case (k, n) => k == n },
+        s"known intra rows ≠ counted for $name: $counts")
     }
     assert(strandedSeen > 0, "no case put a vertex outside every intra-community edge")
+  }
+
+  test("the Leiden ladder runs on the driver at the threshold and on Catalyst one edge past it") {
+    // n edges with the threshold at n, then the same graph with one
+    // duplicate row: the engine changes, and each run's labels equal the
+    // other engine's on the same rows (a duplicate row is a heavier
+    // edge, so the two graphs may label differently)
+    val rnd = new Random(17)
+    val edges = Seq.fill(40)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+    val n = edges.size.toLong
+    def run(rows: Seq[(Long, Long)], seam: Long) = {
+      val rec = new graft.obs.Recorder().attach(spark)
+      try {
+        val out = GraphOps.leidenLadder(rows.toDF("src", "dst"), "src", "dst",
+            lpaIters = 2, rounds = 2, gammaPcts = Seq(200L, 50L, 10L),
+            broadcastState = None, numPartitions = None, localMaxEdges = seam) {
+          (intra, known) => GraphOps.ccAuto(intra, "src", "dst", Some(known))
+        }
+        val labels = out.as[(Long, Long, Long)].collect().toSet
+        GraphOps.releaseLocalCheckpoint(out)
+        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
+        (labels, rec.spanTable.keySet.exists(_.endsWith("graph.refineCore")))
+      } finally rec.detach(spark)
+    }
+    val (atN, catalystAtN) = run(edges, n)
+    val (pastN, catalystPastN) = run(edges :+ edges.head, n)
+    assert(!catalystAtN, s"the Catalyst ladder ran on $n edges with the threshold at $n")
+    assert(catalystPastN, s"the driver ladder ran on ${n + 1} edges with the threshold at $n")
+    assert(atN == run(edges, 0L)._1)
+    assert(pastN == run(edges :+ edges.head, n + 1)._1)
   }
 
   test("modularityOf equals the scalar Newman formula on random partitions") {

@@ -534,28 +534,41 @@ class GraphSpec extends SparkSpec {
         .as[(Long, Long)].collect().map { case (id, l) => (g, id, l) }
     }.toSet
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val entriesBefore = org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark)
-    val out = GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
-      lpaIters = 2, rounds = 2, gammaPcts = gammas)
-    // the output's plan is one checkpoint, and that checkpoint is the
-    // only RDD the ladder leaves registered; no cache entry is left
-    // either (each chain releases its own asg, dC, k and components)
-    val leaves = out.queryExecution.analyzed.collectLeaves()
-    val own = leaves.collect { case l: LogicalRDD => l.rdd.id }
-    assert(leaves.size == 1 && own.size == 1, s"not one checkpoint: $leaves")
-    assert(sc.getPersistentRDDs.keySet -- before == own.toSet)
-    assert(org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark) == entriesBefore)
-    // re-read after the release: a fresh plan over the output under
-    // both planners (a released checkpoint once surfaced with AQE off)
-    Thread.sleep(200L) // time for the asynchronous block removal
-    def reread() = out.join(e.select(col("src").as("id")).distinct(), Seq("id"), "left")
-      .select("gamma_pct", "id", "label").as[(Long, Long, Long)].collect().toSet
-    assert(reread() == expected)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try assert(reread() == expected)
-    finally spark.conf.unset("spark.sql.adaptive.enabled")
-    GraphOps.releaseLocalCheckpoint(out)
+    // the Catalyst engine (localMaxEdges = 0) and the driver engine (the
+    // default threshold)
+    for (catalyst <- Seq(true, false)) {
+      val before = sc.getPersistentRDDs.keySet
+      val entriesBefore = org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark)
+      val out =
+        if (catalyst) GraphOps.leidenLadder(e, "src", "dst", lpaIters = 2, rounds = 2,
+            gammaPcts = gammas, broadcastState = None, numPartitions = None,
+            localMaxEdges = 0L) { (intra, rows) =>
+          GraphOps.ccAuto(intra, "src", "dst", knownRows = Some(rows))
+        }
+        else GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
+          lpaIters = 2, rounds = 2, gammaPcts = gammas)
+      // the output's plan is one RDD leaf. On the Catalyst engine it is a
+      // checkpoint and the only RDD the ladder leaves registered (each
+      // chain releases its own asg, dC, k and components); the driver
+      // engine's is an RDD over its arrays, not a LocalRelation, and
+      // leaves none. Neither leaves a cache entry.
+      val leaves = out.queryExecution.analyzed.collectLeaves()
+      val own = leaves.collect { case l: LogicalRDD => l.rdd.id }
+      assert(leaves.size == 1 && own.size == 1, s"not one RDD leaf: $leaves")
+      assert(sc.getPersistentRDDs.keySet -- before ==
+        (if (catalyst) own.toSet else Set.empty[Int]), s"catalyst=$catalyst")
+      assert(org.apache.spark.sql.GraftSqlBridge.cachedEntries(spark) == entriesBefore)
+      // re-read after the release: a fresh plan over the output under
+      // both planners (a released checkpoint once surfaced with AQE off)
+      Thread.sleep(200L) // time for the asynchronous block removal
+      def reread() = out.join(e.select(col("src").as("id")).distinct(), Seq("id"), "left")
+        .select("gamma_pct", "id", "label").as[(Long, Long, Long)].collect().toSet
+      assert(reread() == expected, s"catalyst=$catalyst")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try assert(reread() == expected, s"catalyst=$catalyst, AQE off")
+      finally spark.conf.unset("spark.sql.adaptive.enabled")
+      GraphOps.releaseLocalCheckpoint(out)
+    }
   }
 
   test("wellConnectedSplit: splits a stranded community and leaves only the output") {
