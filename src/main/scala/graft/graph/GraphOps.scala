@@ -1488,7 +1488,7 @@ object GraphOps {
     * [[leidenLadder]], on the engine picked from the edge count
     * ([[withEdgeCount]]): the exact row count of an input bounded by it
     * ([[GraftSqlBridge.rowBound]]) runs no job; any other input is
-    * persisted as `(src, dst)` and counted once.
+    * counted once, in place when materialized.
     *
     * - The driver engine, [[localLadder]], runs at or below
     *   `localMaxEdges` edges when max(p, q)·m2² < 2⁶³ for every γ = p/q
@@ -1496,7 +1496,7 @@ object GraphOps {
     *   Long. With `split` it splits each γ's communities as the
     *   Catalyst `body` does.
     * - Otherwise the Catalyst engine: [[refineSetup]] over the input
-    *   (the persisted projection is read in place), its partitions sized
+    *   (a persisted projection is read in place), its partitions sized
     *   from the count unless `numPartitions` is given, plus the LPA
     *   supersteps, whose labels seed the refine start handed to `body`
     *   with the input and its column names. materializeLast = false: a
@@ -1511,8 +1511,8 @@ object GraphOps {
     requireRefine(rounds, gammaPcts)
     withEdgeCount(edges, srcCol, dstCol, GraftSqlBridge.rowBound(edges).map(_.toLong),
         "graph.lpaRefine.input") { (input, src, dst, rows) =>
-      val parts = sizedLoopParts(edges.sparkSession, BigInt(rows) * 2)
       val m2 = BigInt(rows) * 2
+      val parts = sizedLoopParts(edges.sparkSession, m2)
       val exact = gammaPcts.forall { g =>
         val (p, q) = gammaRational(g)
         BigInt(math.max(p, q)) * m2 * m2 < (BigInt(1) << 63)
