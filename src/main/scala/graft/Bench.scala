@@ -124,7 +124,9 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // GraphX Pregel messages serialize per superstep — Kryo, not Java ser
+      // spark.serializer encodes broadcast variables and the driver
+      // kernels' parallelized slices; Kryo, as in Verify and perfbench's
+      // Main, so every harness times one configuration
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.sql.maxPlanStringLength", "1048576")
       .getOrCreate()
@@ -173,8 +175,8 @@ object Bench {
       only.forall(_.exists(n.startsWith))
     }
     // Between queries: drop every cached DataFrame and persistent RDD
-    // (query results persisted by materializeAndRelease, localCheckpoint
-    // RDDs, iterative-loop leftovers). Without this the suite accumulates
+    // (results a query left persisted, localCheckpoint RDDs,
+    // iterative-loop leftovers). Without this the suite accumulates
     // dozens of resident caches and the late graph queries measure 3×
     // slower than in isolation (5s vs 15s for q42 at sf0.1) — the leak,
     // not the plan. Runs OUTSIDE the timed window; every query is timed

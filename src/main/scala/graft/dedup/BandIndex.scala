@@ -51,11 +51,11 @@ final case class BandIndexConfig(
   *   - the MinHash parameters are STORED with the index
   *     (`<table>_meta`, one row) and recovered by [[BandIndex.open]],
   *     eliminating the silent parameter-mismatch trap;
-  *   - one documented path instead of four functions plus a
-  *     session-cache caveat ([[Dedup.readBandIndex]]'s guarded refresh
+  *   - the one public entry point: the three index kernels are
+  *     `private[graft]`, and [[Dedup.readBandIndex]]'s guarded refresh
   *     is applied on every read, so cloned foreachBatch sessions and
   *     second interactive sessions can never plan against a
-  *     pre-append file list).
+  *     pre-append file list.
   *
   * 100 TB shape (inherited, not new): the index side of every batch
   * join is bucketBy(band_key) — zero index-side exchange per batch;

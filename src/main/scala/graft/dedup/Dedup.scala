@@ -477,7 +477,7 @@ object Dedup {
     * warehouse directory can outlive the in-memory catalog (fresh
     * session, stale location), and saveAsTable(overwrite) refuses a
     * location it doesn't own with LOCATION_ALREADY_EXISTS. */
-  def writeBandIndex(
+  private[graft] def writeBandIndex(
       table: String, corpus: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       buckets: Int = 8): Unit = span("dedup.writeBandIndex") {
@@ -500,7 +500,7 @@ object Dedup {
     * match the index's build parameters — band keys are md5 over the
     * band's minhash slice, so a mismatch silently yields no candidates
     * (same caveat as [[incrementalNearDupWithIndex]]). */
-  def appendBandIndex(
+  private[graft] def appendBandIndex(
       table: String, batch: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       buckets: Int = 8): Unit = span("dedup.appendBandIndex") {
@@ -526,7 +526,7 @@ object Dedup {
     * wrote (round-9 verdict item 5). The refresh is a catalog metadata
     * call, not a scan; the returned frame keeps the bucketBy(band_key)
     * layout, so the band join still plans zero index-side exchange. */
-  def readBandIndex(spark: SparkSession, table: String): DataFrame = {
+  private[graft] def readBandIndex(spark: SparkSession, table: String): DataFrame = {
     spark.catalog.refreshTable(table)
     spark.table(table)
   }

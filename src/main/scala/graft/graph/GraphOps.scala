@@ -1,6 +1,5 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, EdgeTriplet, Graph, Pregel, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -12,7 +11,7 @@ import graft.obs.span
   * Mirrors the reference's graph plane: bipartite graph build
   * (neo4j_helpers.py:196-234 via /root/reference), community detection
   * (detect_communities.py:219-226 — Leiden there; here a deterministic
-  * synchronous label propagation, the GraphX-idiomatic approximation per
+  * synchronous label propagation, the vertex-program approximation per
   * SURVEY §7.4), community stats (neo4j_helpers.py:271-290), and multi-hop
   * traversal (ingest_graph_db.py:366-377 — expressed as edge-DataFrame
   * self-joins, the scalable form of the 2-hop Cypher).
@@ -23,78 +22,11 @@ import graft.obs.span
   * below the one edge constant [[LocalMaxEdges]]: there [[ccAuto]]'s
   * union-find and the whole Leiden ladder ([[lpaLouvainRefineMulti]],
   * [[lpaLeidenRefineMulti]]) run on the driver after one collect, with
-  * the labels of their Catalyst engines. The GraphX Pregel forms stay
-  * as RDD reference implementations.
+  * the labels of their Catalyst engines. No graph runs on the RDD API;
+  * the Pregel reference forms the specs check against live with the
+  * tests.
   */
 object GraphOps {
-
-  /** Build a GraphX graph from an edge DataFrame with two long columns.
-    * Vertex attrs carry the original (kind, key) so ids can be namespaced
-    * (e.g. part → 2k, supplier → 2k+1) without losing provenance. */
-  def fromEdges(spark: SparkSession, edges: DataFrame, srcCol: String, dstCol: String): Graph[Long, Int] = {
-    val edgeRdd = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    Graph.fromEdges(edgeRdd, defaultValue = 0L)
-  }
-
-  /** Materialize a small-ish result DataFrame and release the graph's
-    * cached RDDs: GraphX caches vertices/edges per superstep, and leaving
-    * them resident squeezes execution memory for every subsequent query in
-    * the session (observed 3-7× slowdowns). One job fills the persisted
-    * result before the graphs are unpersisted. */
-  private def materializeAndRelease(
-      kept: DataFrame, graphs: Graph[_, _]*): DataFrame = {
-    kept.count()
-    graphs.foreach { (g: Graph[_, _]) =>
-      g.unpersistVertices(blocking = false)
-      val e = g.edges
-      e.unpersist(blocking = false)
-    }
-    kept
-  }
-
-  /** Vertex degrees (G1/A11 substrate) as a DataFrame(id, degree). */
-  def degreesDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame = {
-    import spark.implicits._
-    materializeAndRelease(
-      g.degrees.map { case (id, d) => (id, d) }.toDF("id", "degree").persist(), g)
-  }
-
-  /** Connected components → DataFrame(id, component) where component is
-    * GraphX's min-vertex-id label. Deterministic (min propagation). */
-  def connectedComponentsDF(spark: SparkSession, g: Graph[Long, Int]): DataFrame = {
-    import spark.implicits._
-    val cc = g.connectedComponents()
-    materializeAndRelease(
-      cc.vertices.map { case (id, c) => (id, c) }.toDF("id", "component").persist(), cc, g)
-  }
-
-  /** Deterministic synchronous label propagation (the G2 community
-    * detector): every superstep each vertex adopts the most frequent
-    * neighbor label, ties broken by smallest label — a total order, so the
-    * result is reproducible run-to-run (the reference pins Leiden's
-    * seed=42 for the same reason, settings.py:137). */
-  def labelPropagation(g: Graph[Long, Int], maxIter: Int): Graph[VertexId, Int] = {
-    val lpa = g.mapVertices { case (vid, _) => vid }
-    def sendMsg(e: EdgeTriplet[VertexId, Int]): Iterator[(VertexId, Map[VertexId, Long])] =
-      Iterator((e.srcId, Map(e.dstAttr -> 1L)), (e.dstId, Map(e.srcAttr -> 1L)))
-    def mergeMsg(a: Map[VertexId, Long], b: Map[VertexId, Long]): Map[VertexId, Long] =
-      (a.keySet ++ b.keySet).iterator
-        .map(k => k -> (a.getOrElse(k, 0L) + b.getOrElse(k, 0L))).toMap
-    def vprog(vid: VertexId, attr: VertexId, msg: Map[VertexId, Long]): VertexId =
-      if (msg.isEmpty) attr
-      else msg.toSeq.minBy { case (label, cnt) => (-cnt, label) }._1
-    Pregel(lpa, initialMsg = Map.empty[VertexId, Long], maxIterations = maxIter)(
-      vprog, sendMsg, mergeMsg)
-  }
-
-  def lpaDF(spark: SparkSession, g: Graph[Long, Int], maxIter: Int): DataFrame = {
-    import spark.implicits._
-    val res = labelPropagation(g, maxIter)
-    materializeAndRelease(
-      res.vertices.map { case (id, label) => (id, label) }.toDF("id", "label").persist(),
-      res, g)
-  }
 
   /** Supersteps per lazily-chained block in the Catalyst loops below.
     * Each superstep references the previous state exactly once, so a
@@ -773,11 +705,10 @@ object GraphOps {
     * Scale: per iteration one shuffle of the edge list on src, one hash
     * agg on dst, one N-row state join — identical shuffle structure to
     * real distributed PageRank; no driver collect (the single
-    * `deg.count()` scalar is one agg job). GraphX's `staticPageRank`
-    * stays available for double-precision needs; this form is the
-    * oracle-able / deterministic one. Returns (id, pr) over a checkpoint
-    * bounded by its row count, as do the two variants below; the caller
-    * releases it with [[releaseLocalCheckpoint]]. */
+    * `deg.count()` scalar is one agg job). Ranks are integers, so the
+    * result is deterministic and oracle-checkable. Returns (id, pr) over
+    * a checkpoint bounded by its row count, as do the two variants below;
+    * the caller releases it with [[releaseLocalCheckpoint]]. */
   def pageRankFixedPoint(
       edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, dampingPct: Long = 85L,
@@ -1371,23 +1302,6 @@ object GraphOps {
       start.release()
       out
     }
-  }
-
-  /** Leiden-style refinement: the gated Louvain local-move pass
-    * ([[louvainRefine]], RB-configuration modularity at γ = gammaPct/100)
-    * followed by the well-connectedness split — the two phases the
-    * reference's leidenalg run applies per resolution level
-    * (neo4j_helpers.py:237-268 via /root/reference). Every community in
-    * the result is internally connected AND locally modularity-optimal
-    * up to the split relabeling. Returns (id, label). */
-  def leidenRefine(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      assignment: DataFrame, idCol: String, labelCol: String,
-      rounds: Int, broadcastState: Option[Boolean] = None,
-      gammaPct: Long = 100L): DataFrame = {
-    val refined = louvainRefine(edges, srcCol, dstCol, assignment, idCol,
-      labelCol, rounds, broadcastState, gammaPct)
-    wellConnectedSplit(edges, srcCol, dstCol, refined, "id", "label")
   }
 
   /** Multi-resolution form of [[louvainRefine]]: run the gated

@@ -53,8 +53,8 @@ object EventAnalytics {
     // 1..k-1's event-log scans — O(k²) passes over the raw log (round-5
     // verdict). Persist the (user-sized, shrinking) frames, materialize
     // the k-row report, then release them — k linear passes total. The
-    // report stays persisted (the materializeAndRelease convention): its
-    // lineage is gone once the chain caches drop.
+    // report stays persisted, because its lineage is gone once the chain
+    // caches drop.
     chain.foreach(_.persist())
     val report = chain.zipWithIndex.map { case (f, i) =>
       f.agg(count(lit(1)).as("n_users"))

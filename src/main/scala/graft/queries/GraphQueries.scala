@@ -11,14 +11,15 @@ import org.apache.spark.sql.functions._
   * artist–country analog).
   *
   * Vertex-id namespacing for bipartite graphs: left = 2k, right = 2k+1
-  * (disjoint longs, reversible with shiftright). GraphX results are
+  * (disjoint longs, reversible with shiftright). Graph results are
   * normalized back to natural keys before comparison.
   */
 object GraphQueries {
 
   val all: Seq[Q] = Seq(
 
-    // G1 + A11 substrate: bipartite graph build + vertex degrees.
+    // G1 + A11 substrate: bipartite graph build + vertex degrees, one
+    // count per endpoint of the distinct edges.
     Q("q39_graph_degree",
       """SELECT 'part' AS kind, CAST(l_partkey AS BIGINT) AS key,
         |       CAST(COUNT(DISTINCT l_suppkey) AS INT) AS degree
@@ -27,15 +28,12 @@ object GraphQueries {
         |SELECT 'supplier' AS kind, CAST(l_suppkey AS BIGINT) AS key,
         |       CAST(COUNT(DISTINCT l_partkey) AS INT) AS degree
         |FROM lineitem GROUP BY l_suppkey""".stripMargin) { (s, dir) =>
-      val edges = Tables(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey")).distinct()
-        .select((col("l_partkey") * 2).cast("long").as("src"),
-                (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-      val g = GraphOps.fromEdges(s, edges, "src", "dst")
-      GraphOps.degreesDF(s, g).select(
-        when(pmod(col("id"), lit(2)) === 0, "part").otherwise("supplier").as("kind"),
-        shiftright(col("id"), 1).as("key"),
-        col("degree"))
+      bipartite(s, dir).select(explode(array(col("src"), col("dst"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).cast("int").as("degree"))
+        .select(
+          when(pmod(col("id"), lit(2)) === 0, "part").otherwise("supplier").as("kind"),
+          shiftright(col("id"), 1).as("key"),
+          col("degree"))
     },
 
     // G5: 2-hop traversal from the min-key anchor part — parts reachable
@@ -65,7 +63,7 @@ object GraphQueries {
         .agg(countDistinct(col("mid")).as("n_paths"))
     },
 
-    // G1/G3: GraphX connected components on the customer–nation membership
+    // G1/G3: connected components (ccAuto) on the customer–nation membership
     // graph, labels normalized to min member key (SURVEY §7.5 risk 2:
     // deterministic labeling instead of engine-internal ids).
     Q("q41_connected_components",
@@ -74,8 +72,7 @@ object GraphQueries {
       val edges = Tables(s, dir, "customer")
         .select((col("c_custkey") * 2).cast("long").as("src"),
                 (col("c_nationkey") * 2 + 1).cast("long").as("dst"))
-      val g = GraphOps.fromEdges(s, edges, "src", "dst")
-      val cc = GraphOps.connectedComponentsDF(s, g)
+      val cc = GraphOps.ccAuto(edges, "src", "dst")
       val cust = cc.filter(pmod(col("id"), lit(2)) === 0)
         .select(shiftright(col("id"), 1).as("c_custkey"), col("component"))
       val labels = cust.groupBy("component").agg(min("c_custkey").as("comp_label"))
@@ -255,8 +252,8 @@ object GraphQueries {
     },
 
     // G1/CC scale path: the Catalyst min-label loop (ccEdges) on the
-    // customer–nation membership graph — same semantics as q41's GraphX
-    // form (GraphSpec proves the two equal on random graphs); this gives
+    // customer–nation membership graph — same semantics as q41's ccAuto
+    // form (AlgoRandomSpec proves the two equal on random graphs); this gives
     // the scale path its own driver-checked oracle. Components are
     // star-shaped (customer → nation), so the oracle is the per-nation
     // min-customer window; labels normalized to min member key exactly
@@ -425,7 +422,8 @@ object GraphQueries {
     // UNIPARTITE: synchronous LPA on the bipartite part–supplier graph
     // provably never mixes sides (labels swap id-parity every
     // superstep), so its intra-community edge set is empty and the
-    // split would be vacuous there. The oracle unrolls LPA and the
+    // split would be vacuous there. The three phases run as one γ of the
+    // Leiden ladder (lpaLeidenRefineMulti). The oracle unrolls LPA and the
     // refine round exactly as q126, then replays the constrained CC as
     // a min-reachability recursive CTE over intra-community edges.
     Q("q140_leiden_split", leidenSplitOracle(lpaIters = 2, rounds = 1)) { (s, dir) =>
@@ -434,10 +432,8 @@ object GraphQueries {
       // deterministic order sample keeps ~240k edges and the same
       // disconnected-community pathology the split exists for
       val e = countedCoPurchase(s, dir, orderMod = 5)
-      val refined = GraphOps.lpaLouvainRefineMulti(e, "src", "dst",
+      GraphOps.lpaLeidenRefineMulti(e, "src", "dst",
           lpaIters = 2, rounds = 1, gammaPcts = Seq(100L))
-        .select(col("id"), col("label"))
-      GraphOps.wellConnectedSplit(e, "src", "dst", refined, "id", "label")
         .select(col("id").as("key"), col("label"))
     },
 

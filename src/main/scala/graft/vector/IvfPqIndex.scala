@@ -55,9 +55,11 @@ final case class IvfPqConfig(
   *
   * Every path delegates to the kernels the 176-query oracle gate pins
   * (ivfCells / ivfCellsTrained / pqFit / ivfPqTopK / ivfPqRefineTopK /
-  * writePqIndex / readPqIndex / appendPqIndex) — the façade adds no new
-  * math, so its results are bit-equal to the long-hand compositions in
-  * q153/q172/q174/q175/q176 (whose bodies now call it).
+  * writePqIndex / readPqIndex / appendPqIndex; the last three are
+  * `private[graft]`, so this is the index's one public entry point) —
+  * the façade adds no new math, so its results are bit-equal to the
+  * long-hand compositions in q153/q172/q174/q175/q176 (whose bodies
+  * now call it).
   *
   * Knob semantics (measured trade-offs in PLANS.md rounds 9–11):
   *   - `nProbe`: cells searched per query; recall is MONOTONE in it

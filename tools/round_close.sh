@@ -5,10 +5,14 @@
 # PLANS.md — so regression adjudication starts from the artifact.
 # Dev tooling only — not part of the engine.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.1}
 OUT=${2:-/tmp/bench_close.json}
 sbt -batch compile 1>&2
+# Defaults fit the box: every core, and the Tier-1 driver heap (half
+# the RAM, clamped to 2-8 GB).
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
+MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -17,9 +21,9 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=$CPUS \
   SPARK_GRAFT_BENCH_DETAIL="$OUT" \
-  java $ADD_OPENS -Xmx48g \
+  java $ADD_OPENS -Xmx$MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench 1>&2
 python3 tools/bench_diff.py bench_detail.json "$OUT" 2.0 --md PLANS.md
