@@ -22,4 +22,9 @@ SPARK_GRAFT_CPUS=$CPUS java $ADD_OPENS -Xmx$MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT" 1>&2
-python3 tools/check_oracle.py "$SF" "$OUT" "${@:3}"
+NAMES=("${@:3}")
+# SPARK_GRAFT_ONLY with no names given: check just the queries Verify ran
+if [ ${#NAMES[@]} -eq 0 ] && [ -n "$SPARK_GRAFT_ONLY" ]; then
+  NAMES=($(cd "$OUT" && ls -d q*/ | tr -d /))
+fi
+python3 tools/check_oracle.py "$SF" "$OUT" "${NAMES[@]}"
